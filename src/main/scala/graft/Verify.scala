@@ -152,8 +152,12 @@ object Verify {
     // in cache-sharing queries (the r7 like-runs rule)
     val mode = if (only.isDefined) "subset"
       else if (nSkipped > 0) "incremental" else "full"
+    // "_conf" records the applied SPARK_GRAFT_CONF: a conf-tainted run is
+    // never drift-compared, so it can never be reseeded as the baseline
+    val conf = sys.env.getOrElse("SPARK_GRAFT_CONF", "")
     Files.writeString(Paths.get(s"$outDir/plan_hashes.json"),
-      (Seq(s"${q("_mode")}: ${q(mode)}") ++ planHashes.toSeq.sortBy(_._1)
+      (Seq(s"${q("_mode")}: ${q(mode)}", s"${q("_conf")}: ${q(conf)}") ++
+        planHashes.toSeq.sortBy(_._1)
         .map { case (k, v) => s"${q(k)}: ${q(v)}" }).mkString("{", ",", "}"))
     if (nSkipped > 0)
       System.err.println(s"[verify] incremental: reused $nSkipped " +

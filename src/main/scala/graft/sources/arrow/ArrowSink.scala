@@ -14,9 +14,9 @@ import scala.jdk.CollectionConverters._
 /** Distributed Arrow IPC sink: one `part-<task>.arrow` file per
   * partition, each holding `batchRows`-row record batches — the layout
   * [[graft.sources.v2.ArrowDataSource]] reads back with one input
-  * partition per (file, batch). Same scale shape as the raster sinks:
-  * `foreachPartition` with ONE bounded batch buffer per task (never a
-  * materialized partition), write to a temp name, atomic rename on
+  * partition per (file, batch). No shuffle: `foreachPartition` with ONE
+  * bounded batch buffer per task (never a materialized partition),
+  * write to a temp name, atomic rename on
   * success so a failed task can't leave a readable partial part file.
   * Types mirror the source's honest boundary: long/int/double/string/
   * bool, anything else fails at plan time.

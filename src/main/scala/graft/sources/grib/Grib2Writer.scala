@@ -5,6 +5,8 @@ import java.nio.{ByteBuffer, ByteOrder}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.sources.ChunkStager
+
 /** Distributed GRIB2 ENSEMBLE writer — the sink half of the GRIB
   * surface (Grib2File reads; every other binary format already had
   * both directions). Emits edition-2 messages with grid template 3.0
@@ -16,11 +18,9 @@ import org.apache.spark.sql.functions._
   * writer (tools/grib2_fixture.py) produces, so the whole format
   * contract is already cross-validated.
   *
-  * Scale shape mirrors Hdf5Writer: rows shuffle ONCE on their member,
-  * each task streams ONE member's grid buffer at a time and writes a
-  * complete staged message file, and the driver concatenates staged
-  * messages in member order (a GRIB file IS concatenated messages —
-  * the driver streams bytes, never holds a grid).
+  * Staging is [[graft.sources.ChunkStager]]'s with one chunk per
+  * (step, member) message: a task encodes each chunk as a complete
+  * message, and the driver concatenates the staged messages.
   */
 object Grib2Writer {
 
@@ -37,80 +37,35 @@ object Grib2Writer {
       lats: Array[Double], lons: Array[Double], bpv: Int = 16,
       stepCol: Option[String] = None): Unit = {
     require(bpv == 16, "only bpv=16 supported (the fixture/reader subset)")
-    val spark = df.sparkSession
     val (ni, nj) = (lons.length, lats.length)
     val la1 = lats.head
     val lo1 = lons.head
     val dj = if (nj > 1) (lats.head - lats.last) / (nj - 1) else 1.0
     val di = if (ni > 1) (lons.last - lons.head) / (ni - 1) else 1.0
-    // staging + final write through the Hadoop FS API (the TiffWriter /
-    // Hdf5Writer shape): executors stage message files, the driver
-    // stream-concats them — works identically on local fs and s3a
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val stagePath = new org.apache.hadoop.fs.Path(path + "_stage")
-    val fs = stagePath.getFileSystem(hconf)
-    fs.delete(stagePath, true)
-    fs.mkdirs(stagePath)
-    val bConf = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(hconf))
-    val stageStr = stagePath.toString
-
-    val bLat = spark.sparkContext.broadcast(lats.zipWithIndex.toMap)
-    val bLon = spark.sparkContext.broadcast(lons.zipWithIndex.toMap)
-    import spark.implicits._
-    val n = spark.sparkContext.defaultParallelism
-    val stepExpr = stepCol.map(c => col(c).cast("int")).getOrElse(lit(24))
-    df.select(stepExpr.as("s"), col("number").cast("int"),
-        col("latitude").cast("double"),
-        col("longitude").cast("double"), col("value").cast("double"))
-      .as[(Int, Int, Double, Double, Double)]
-      .mapPartitions { it =>
-        val latI = bLat.value
-        val lonI = bLon.value
-        it.map { case (st, m, la, lo, v) =>
-          (st, m, latI(la) * lonI.size + lonI(lo), v)
-        }
-      }
-      .toDF("s", "m", "cell", "v")
-      .repartition(math.min(n, 64), col("s"), col("m"))
-      .sortWithinPartitions("s", "m", "cell")
-      .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-        val conf = bConf.value.value
-        var curS = -1
-        var curM = -1
-        var buf: Array[Double] = null
-        def flush(): Unit = if (curM >= 0) {
-          val msg = encodeMessage(curM, curS, buf, ni, nj, la1, lo1, di, dj)
-          val pp = new org.apache.hadoop.fs.Path(
-            f"$stageStr/s$curS%05d_m$curM%05d.part")
-          val out = pp.getFileSystem(conf).create(pp, true)
-          try out.write(msg) finally out.close()
-        }
-        rows.foreach { r =>
-          val s = r.getInt(0)
-          val m = r.getInt(1)
-          if (m != curM || s != curS) {
-            flush(); curS = s; curM = m
-            buf = Array.fill(ni * nj)(Double.NaN)
-          }
-          buf(r.getInt(2)) = r.getDouble(3)
-        }
-        flush()
-      }
-
-    // driver: stream-concat staged messages in member order
-    val parts = fs.listStatus(stagePath)
-      .filter(_.getPath.getName.endsWith(".part"))
-      .sortBy(_.getPath.getName)
-    require(parts.nonEmpty, s"$path: no members staged")
-    val outP = new org.apache.hadoop.fs.Path(path)
-    val out = outP.getFileSystem(hconf).create(outP, true)
-    try parts.foreach { st =>
-      val in = fs.open(st.getPath)
-      try org.apache.hadoop.io.IOUtils.copyBytes(in, out, 256 * 1024, false)
-      finally in.close()
-    } finally out.close()
-    fs.delete(stagePath, true)
+    // one chunk per (step, member) message, its id (step << 8) | member
+    val cells = ChunkStager.Doubles(ni * nj, Double.NaN)
+    val keyed = ChunkStager.onGrid(df, "latitude", "longitude", "value",
+        lats, lons, cells, stepCol.map(col(_).cast("int")).getOrElse(lit(24)),
+        col("number").cast("int")) { (r, i, j) =>
+      val (s, m) = (r.getInt(3), r.getInt(4))
+      // template 4.1's perturbation number is ONE octet: a member > 255
+      // would alias another message's key (and wrap in the octet) —
+      // fail loudly before packing
+      require(m >= 0 && m <= 255,
+        s"ensemble member $m out of the one-octet range [0, 255] (template 4.1)")
+      require(s >= 0 && s <= (Int.MaxValue >> 8),
+        s"lead time $s h out of [0, ${Int.MaxValue >> 8}]")
+      ((s << 8) | m, i * ni + j)
+    }
+    def name(key: Int) = f"s${key >> 8}%05d_m${key & 0xFF}%05d.part"
+    ChunkStager.singleFile(df.sparkSession, path) { st =>
+      st.stage(keyed, cells, 64)((key, buf) =>
+        encodeMessage(key & 0xFF, key >> 8, buf, ni, nj, la1, lo1, di, dj), name)
+      // a GRIB file IS its messages concatenated, in (step, member) order
+      val names = st.staged.keys.toSeq.sorted
+      require(names.nonEmpty, s"$path: no members staged")
+      st.concat(Nil, names, Array.emptyByteArray)
+    }
   }
 
   /** One complete edition-2 message (sections 0–8) for member `m` at
@@ -124,12 +79,6 @@ object Grib2Writer {
       b.putInt(5 + body.length).put(num.toByte).put(body)
       b.array()
     }
-    // template 4.1's perturbation number is ONE octet: a member > 255
-    // would silently wrap in `m.toByte` into a wrong-but-well-formed
-    // message — fail loudly instead (r7 advice)
-    require(m >= 0 && m <= 255,
-      s"ensemble member $m out of the one-octet range [0, 255] (template 4.1)")
-    require(stepHours >= 0, s"negative lead time $stepHours h")
     val present = grid.filterNot(_.isNaN)
     val hasHoles = present.length != grid.length
     present.foreach { v =>

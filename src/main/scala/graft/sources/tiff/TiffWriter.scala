@@ -4,10 +4,10 @@ import java.io.ByteArrayOutputStream
 import java.nio.{ByteBuffer, ByteOrder}
 import java.util.zip.Deflater
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.SerializableConfiguration
+
+import graft.sources.ChunkStager
 
 /** Distributed cloud-optimized GeoTIFF SINK — the write-back half of the
   * COG surface (reference: io_managers.py:103-110 `to_raster` +
@@ -19,13 +19,11 @@ import org.apache.spark.util.SerializableConfiguration
   * tile's byte range from the IFD alone). Format: public TIFF 6.0 +
   * GeoTIFF 1.1 specs.
   *
-  * Scale design (mirrors Hdf5Writer/ZarrStore): pixels shuffle ONCE on
-  * their tile id; each task encodes + deflates its own tile and stages
-  * it as one file through the Hadoop FS API. The driver writes the tiny
-  * header/IFD/georef arrays and STREAMS staged tiles into the final
-  * file in tile order — O(header) driver memory. Absent tiles (no
-  * pixels) become all-nodata tiles; edge tiles are stored full-size
-  * with nodata padding (the TIFF tile rule; readers clip by image dims).
+  * Staging is [[graft.sources.ChunkStager]]'s, one chunk per tile; this
+  * writer adds the tile encoders and the header/IFD/georef arrays the
+  * driver writes before the staged tiles. Absent tiles (no pixels)
+  * become all-nodata tiles; edge tiles are stored full-size with nodata
+  * padding (the TIFF tile rule; readers clip by image dims).
   */
 object TiffWriter {
 
@@ -139,238 +137,185 @@ object TiffWriter {
       s"cubic overviews CASCADE by 2 (gdal_retile -levels): factors must " +
         s"be 2,4,8,…, got $overviews")
     val spark = df.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
     val levels: Seq[Level] = (1 +: overviews).map { f =>
       val (w, h) = ((width + f - 1) / f, (height + f - 1) / f)
       val ta = (w + tileW - 1) / tileW
       Level(f, w, h, ta, ta * ((h + tileH - 1) / tileH))
     }
-    val outPath = new Path(path)
-    val fs = outPath.getFileSystem(hconf)
-    val staging = new Path(path + ".staging")
-    fs.mkdirs(staging)
-
-    // ------ pixel frame: the affine inversion happens ONCE; overview
-    // levels re-aggregate it, so cache it when it is reused ------
-    val bConf = spark.sparkContext.broadcast(new SerializableConfiguration(hconf))
-    val stagingStr = staging.toString
-    import spark.implicits._
-    val pixels = df.select(col(xCol).cast("double"), col(yCol).cast("double"),
-        col(valCol).cast("int"))
-      .as[(Double, Double, Int)]
-      .mapPartitions { it =>
-        it.map { case (x, y, v) =>
-          // invert the pixel-center mapping; exact when centers were
-          // produced by the same affine (rint absorbs float noise)
-          val pCol = math.rint((x - originX) / scaleX - 0.5).toInt
-          val pRow = math.rint((originY - y) / scaleY - 0.5).toInt
-          require(pCol >= 0 && pCol < width && pRow >= 0 && pRow < height,
-            s"pixel ($pCol,$pRow) outside ${width}x$height")
-          (pCol, pRow, v)
+    ChunkStager.singleFile(spark, path) { st =>
+      // ------ pixel frame: the affine inversion happens ONCE; overview
+      // levels re-aggregate it, so cache it when it is reused ------
+      import spark.implicits._
+      val pixels = df.select(col(xCol).cast("double"), col(yCol).cast("double"),
+          col(valCol).cast("int"))
+        .as[(Double, Double, Int)]
+        .mapPartitions { it =>
+          it.map { case (x, y, v) =>
+            // invert the pixel-center mapping; exact when centers were
+            // produced by the same affine (rint absorbs float noise)
+            val pCol = math.rint((x - originX) / scaleX - 0.5).toInt
+            val pRow = math.rint((originY - y) / scaleY - 0.5).toInt
+            require(pCol >= 0 && pCol < width, ChunkStager.offGrid(xCol, x, width))
+            require(pRow >= 0 && pRow < height, ChunkStager.offGrid(yCol, y, height))
+            (pCol, pRow, v)
+          }
         }
-      }
-      .toDF("pc", "pr", "v")
-    if (overviews.nonEmpty) pixels.cache()
+        .toDF("pc", "pr", "v")
+      if (overviews.nonEmpty) pixels.cache()
 
-    // ------ stage tiles per level: ONE shuffle on the tile id. Same
-    // streaming repartition + sortWithinPartitions shape as Hdf5Writer —
-    // one tile buffer per task, no per-key Iterable materialization ------
-    def stage(lvl: Int, lv: Level, px: DataFrame): Unit = {
-      val parts = math.min(lv.nTiles, spark.sparkContext.defaultParallelism).max(1)
-      val (ta, tw, th) = (lv.tilesAcross, tileW, tileH)
-      px.select(
+      // ------ stage tiles per level: the chunk is the tile ------
+      val cells = ChunkStager.Ints(tileW * tileH, nodata)
+      def encode(buf: Array[Int]): Array[Byte] =
+        if (compression == "jpeg") JpegCodec.encodeGray(buf, tileW, tileH, jpegQuality)
+        else encodeTile(buf, bits, deflateLevel)
+      def name(lvl: Int)(t: Int) = s"L$lvl-tile-%05d".format(t)
+      def stage(lvl: Int, lv: Level, px: DataFrame): Unit = {
+        val (ta, tw, th) = (lv.tilesAcross, tileW, tileH)
+        val keyed = px.select(
           ((col("pr").cast("int") / th).cast("int") * ta +
-            (col("pc").cast("int") / tw).cast("int")).as("t"),
+            (col("pc").cast("int") / tw).cast("int")).as("chunk"),
           (pmod(col("pr"), lit(th)) * tw + pmod(col("pc"), lit(tw)))
             .cast("int").as("local"),
           col("v").cast("int"))
-        .repartition(parts, col("t"))
-        .sortWithinPartitions("t")
-        .foreachPartition { rows: Iterator[Row] =>
-          val conf = bConf.value.value
-          var cur = -1
-          var buf: Array[Int] = null
-          def flush(): Unit = if (cur >= 0) {
-            val bytes =
-              if (compression == "jpeg") JpegCodec.encodeGray(buf, tw, th, jpegQuality)
-              else encodeTile(buf, bits, deflateLevel)
-            val p = new Path(s"$stagingStr/L$lvl-tile-%05d".format(cur))
-            val out = p.getFileSystem(conf).create(p, true)
-            try out.write(bytes) finally out.close()
-          }
-          rows.foreach { r =>
-            val t = r.getInt(0)
-            if (t != cur) {
-              flush()
-              cur = t
-              buf = new Array[Int](tw * th)
-              java.util.Arrays.fill(buf, nodata)
-            }
-            buf(r.getInt(1)) = r.getInt(2)
-          }
-          flush()
+        st.stage(keyed, cells, lv.nTiles)((_, buf) => encode(buf), name(lvl))
+      }
+      stage(0, levels.head, pixels)
+      if (resampling == "cubic") {
+        // gdal_retile-style CASCADE: each level is the 2× cubic kernel over
+        // the PREVIOUS level's rounded integer pixels (GridOps
+        // .cubicDownsample2x — exact integer numerators; half-up rounding
+        // floor((num+128)/256) stays exact because |num+128| ≪ 2^53, and
+        // the result clamps to the sample range like any integer raster
+        // write). Each level caches only until its child is staged.
+        var prev = pixels
+        var (pw, ph) = (width, height)
+        levels.zipWithIndex.drop(1).foreach { case (lv, lvl) =>
+          // 32-bit samples ride in signed Int pixels; clamp to what fits
+          val maxV = if (bits == 32) Int.MaxValue.toLong else (1L << bits) - 1
+          val ov = graft.operators.GridOps
+            .cubicDownsample2x(prev, "pc", "pr", "v", pw, ph, nodata)
+            .select(col("pc"), col("pr"),
+              greatest(lit(0L), least(lit(maxV),
+                floor((col("num") + lit(128L)) / lit(256.0)).cast("long")))
+                .cast("int").as("v"))
+            .cache()
+          stage(lvl, lv, ov)
+          if (prev ne pixels) prev.unpersist(blocking = false)
+          prev = ov
+          pw = lv.w; ph = lv.h
         }
-    }
-    stage(0, levels.head, pixels)
-    if (resampling == "cubic") {
-      // gdal_retile-style CASCADE: each level is the 2× cubic kernel over
-      // the PREVIOUS level's rounded integer pixels (GridOps
-      // .cubicDownsample2x — exact integer numerators; half-up rounding
-      // floor((num+128)/256) stays exact because |num+128| ≪ 2^53, and
-      // the result clamps to the sample range like any integer raster
-      // write). Each level caches only until its child is staged.
-      var prev = pixels
-      var (pw, ph) = (width, height)
-      levels.zipWithIndex.drop(1).foreach { case (lv, lvl) =>
-        // 32-bit samples ride in signed Int pixels; clamp to what fits
-        val maxV = if (bits == 32) Int.MaxValue.toLong else (1L << bits) - 1
-        val ov = graft.operators.GridOps
-          .cubicDownsample2x(prev, "pc", "pr", "v", pw, ph, nodata)
-          .select(col("pc"), col("pr"),
-            greatest(lit(0L), least(lit(maxV),
-              floor((col("num") + lit(128L)) / lit(256.0)).cast("long")))
-              .cast("int").as("v"))
-          .cache()
-        stage(lvl, lv, ov)
         if (prev ne pixels) prev.unpersist(blocking = false)
-        prev = ov
-        pw = lv.w; ph = lv.h
+      } else levels.zipWithIndex.drop(1).foreach { case (lv, lvl) =>
+        val f = lv.factor
+        // rounded mean of present source pixels, exact long arithmetic
+        val ov = pixels.groupBy(
+            (col("pc") / f).cast("int").as("pc"),
+            (col("pr") / f).cast("int").as("pr"))
+          .agg((((sum(col("v").cast("long")) * 2 + count(lit(1))) /
+            (count(lit(1)) * 2)).cast("int")).as("v"))
+        stage(lvl, lv, ov)
       }
-      if (prev ne pixels) prev.unpersist(blocking = false)
-    } else levels.zipWithIndex.drop(1).foreach { case (lv, lvl) =>
-      val f = lv.factor
-      // rounded mean of present source pixels, exact long arithmetic
-      val ov = pixels.groupBy(
-          (col("pc") / f).cast("int").as("pc"),
-          (col("pr") / f).cast("int").as("pr"))
-        .agg((((sum(col("v").cast("long")) * 2 + count(lit(1))) /
-          (count(lit(1)) * 2)).cast("int")).as("v"))
-      stage(lvl, lv, ov)
-    }
-    if (overviews.nonEmpty) pixels.unpersist(blocking = false)
+      if (overviews.nonEmpty) pixels.unpersist(blocking = false)
 
-    val emptyTile = {
-      val buf = new Array[Int](tileW * tileH)
-      java.util.Arrays.fill(buf, nodata)
-      if (compression == "jpeg") JpegCodec.encodeGray(buf, tileW, tileH, jpegQuality)
-      else encodeTile(buf, bits, deflateLevel)
-    }
-    // ONE listing of the staging dir (not nTiles existence probes)
-    val staged: Map[String, Long] = fs.listStatus(staging)
-      .map(st => st.getPath.getName -> st.getLen).toMap
-    val tileSizes: Seq[Array[Long]] = levels.zipWithIndex.map { case (lv, lvl) =>
-      Array.tabulate(lv.nTiles) { t =>
-        staged.getOrElse(s"L$lvl-tile-%05d".format(t), emptyTile.length.toLong)
+      val emptyTile = encode(cells.alloc())
+      val names: Seq[Seq[String]] = levels.zipWithIndex.map { case (lv, lvl) =>
+        (0 until lv.nTiles).map(name(lvl))
       }
-    }
+      val tileSizes: Seq[Array[Long]] = names.map(st.sizes(_, emptyTile))
 
-    // ------ layout. Classic TIFF (magic 42, u32 offsets) up to 4 GB;
-    // BigTIFF (magic 43, u64 offsets, LONG8 arrays) beyond — selected
-    // automatically so a big enough grid never wraps its offsets.
-    // File order: header, [IFD + offset/count arrays (+ geo arrays,
-    // level 0 only)] per level, then all tile data level by level. ------
-    def nEntries(lvl: Int) = if (lvl == 0) 13 else 12 // ov: +254, -geo tags
-    val dataBytes = tileSizes.map(_.sum).sum
-    val classicFixed = 8L + levels.indices.map { lvl =>
-      (2 + nEntries(lvl) * 12 + 4).toLong + 8L * levels(lvl).nTiles +
-        (if (lvl == 0) 24 + 48 else 0)
-    }.sum
-    val big = forceBigTiff || classicFixed + dataBytes > 0xFFFFFFFFL
-    val offSz = if (big) 8 else 4 // size of an offset/count array slot
-    def ifdSize(lvl: Int) =
-      if (big) 8 + nEntries(lvl) * 20 + 8
-      else 2 + nEntries(lvl) * 12 + 4
-    // per-level metadata block offsets, laid out sequentially
-    case class Meta(ifdOff: Long, offsetsOff: Long, countsOff: Long,
-        scaleOff: Long, tiepointOff: Long, end: Long)
-    val metas: Seq[Meta] = levels.indices.foldLeft(Seq.empty[Meta]) { (acc, lvl) =>
-      val base = acc.lastOption.map(_.end).getOrElse(if (big) 16L else 8L)
-      val offsetsOff = base + ifdSize(lvl)
-      val countsOff = offsetsOff + offSz.toLong * levels(lvl).nTiles
-      val geoOff = countsOff + offSz.toLong * levels(lvl).nTiles
-      val end = if (lvl == 0) geoOff + 24L + 48L else geoOff
-      acc :+ Meta(base, offsetsOff, countsOff, geoOff, geoOff + 24L, end)
-    }
-    val tile0Off = metas.last.end
-    // absolute tile offsets, all levels concatenated in file order
-    val levelTile0: Seq[Long] = tileSizes.scanLeft(tile0Off)(_ + _.sum)
-    val tileOffs: Seq[Array[Long]] = tileSizes.zipWithIndex.map { case (ts, lvl) =>
-      ts.scanLeft(levelTile0(lvl))(_ + _)
-    }
-
-    val head = {
-      val b = new Buf
-      def off(v: Long): Unit = if (big) { b.u32(v & 0xFFFFFFFFL); b.u32(v >>> 32) } else b.u32(v)
-      if (big) b.bytes(Array('I', 'I').map(_.toByte)).u16(43).u16(8).u16(0)
-      else b.bytes(Array('I', 'I').map(_.toByte)).u16(42)
-      off(metas.head.ifdOff)
-      for (lvl <- levels.indices) {
-        val lv = levels(lvl)
-        val m = metas(lvl)
-        val nT = lv.nTiles
-        if (big) off(nEntries(lvl).toLong) else b.u16(nEntries(lvl))
-        // entries MUST be ascending by tag (TIFF 6.0 §2)
-        def entry(tag: Int, typ: Int, cnt: Long, value: Long): Unit = {
-          b.u16(tag).u16(typ)
-          if (big) { off(cnt); off(value) } else { b.u32(cnt); b.u32(value) }
-        }
-        def shortEntry(tag: Int, v: Int): Unit = entry(tag, 3, 1, v.toLong)
-        val arrTyp = if (big) 16 else 4 // LONG8 vs LONG offset/count arrays
-        if (lvl > 0) entry(254, 4, 1, 1L) // NewSubfileType: reduced-resolution
-        entry(256, 4, 1, lv.w.toLong)
-        entry(257, 4, 1, lv.h.toLong)
-        shortEntry(258, bits)
-        shortEntry(259, if (compression == "jpeg") 7 else 8) // 7=JPEG/8=deflate
-        shortEntry(262, 1) // BlackIsZero
-        shortEntry(277, 1) // one sample per pixel
-        shortEntry(322, tileW)
-        shortEntry(323, tileH)
-        if (nT == 1) { // count-1 values live inline
-          entry(324, arrTyp, 1, tileOffs(lvl)(0))
-          entry(325, arrTyp, 1, tileSizes(lvl)(0))
-        } else {
-          entry(324, arrTyp, nT.toLong, m.offsetsOff)
-          entry(325, arrTyp, nT.toLong, m.countsOff)
-        }
-        shortEntry(339, 1) // SampleFormat: unsigned
-        if (lvl == 0) {
-          entry(33550, 12, 3, m.scaleOff)
-          entry(33922, 12, 6, m.tiepointOff)
-        }
-        // next IFD in the overview chain, 0 at the end
-        off(if (lvl + 1 < levels.size) metas(lvl + 1).ifdOff else 0L)
-        // external value arrays (written even in the 1-tile inline case —
-        // the fixed layout keeps offsets simple; 16 dead bytes at most)
-        tileOffs(lvl).take(nT).foreach(off)
-        tileSizes(lvl).foreach(off)
-        if (lvl == 0) {
-          b.f64(scaleX).f64(scaleY).f64(0.0)
-          // tiepoint: raster (0,0) -> geo (originX, originY)
-          b.f64(0.0).f64(0.0).f64(0.0).f64(originX).f64(originY).f64(0.0)
-        }
+      // ------ layout. Classic TIFF (magic 42, u32 offsets) up to 4 GB;
+      // BigTIFF (magic 43, u64 offsets, LONG8 arrays) beyond — selected
+      // automatically so a big enough grid never wraps its offsets.
+      // File order: header, [IFD + offset/count arrays (+ geo arrays,
+      // level 0 only)] per level, then all tile data level by level. ------
+      def nEntries(lvl: Int) = if (lvl == 0) 13 else 12 // ov: +254, -geo tags
+      val dataBytes = tileSizes.map(_.sum).sum
+      val classicFixed = 8L + levels.indices.map { lvl =>
+        (2 + nEntries(lvl) * 12 + 4).toLong + 8L * levels(lvl).nTiles +
+          (if (lvl == 0) 24 + 48 else 0)
+      }.sum
+      val big = forceBigTiff || classicFixed + dataBytes > 0xFFFFFFFFL
+      val offSz = if (big) 8 else 4 // size of an offset/count array slot
+      def ifdSize(lvl: Int) =
+        if (big) 8 + nEntries(lvl) * 20 + 8
+        else 2 + nEntries(lvl) * 12 + 4
+      // per-level metadata block offsets, laid out sequentially
+      case class Meta(ifdOff: Long, offsetsOff: Long, countsOff: Long,
+          scaleOff: Long, tiepointOff: Long, end: Long)
+      val metas: Seq[Meta] = levels.indices.foldLeft(Seq.empty[Meta]) { (acc, lvl) =>
+        val base = acc.lastOption.map(_.end).getOrElse(if (big) 16L else 8L)
+        val offsetsOff = base + ifdSize(lvl)
+        val countsOff = offsetsOff + offSz.toLong * levels(lvl).nTiles
+        val geoOff = countsOff + offSz.toLong * levels(lvl).nTiles
+        val end = if (lvl == 0) geoOff + 24L + 48L else geoOff
+        acc :+ Meta(base, offsetsOff, countsOff, geoOff, geoOff + 24L, end)
       }
-      b.toArray
-    }
-    require(head.length == tile0Off, s"header ${head.length} != $tile0Off")
-    require(big || tileOffs.last.last <= 0xFFFFFFFFL,
-      s"$path: classic layout overflowed unexpectedly")
-
-    // ------ driver pass: header, then stream staged tiles ------
-    val out = fs.create(outPath, true)
-    try {
-      out.write(head)
-      val copyBuf = new Array[Byte](256 * 1024)
-      for (lvl <- levels.indices; t <- 0 until levels(lvl).nTiles) {
-        val p = new Path(s"$stagingStr/L$lvl-tile-%05d".format(t))
-        if (staged.contains(p.getName)) {
-          val in = fs.open(p)
-          try {
-            var n = in.read(copyBuf)
-            while (n > 0) { out.write(copyBuf, 0, n); n = in.read(copyBuf) }
-          } finally in.close()
-        } else out.write(emptyTile)
+      val tile0Off = metas.last.end
+      // absolute tile offsets, all levels concatenated in file order
+      val levelTile0: Seq[Long] = tileSizes.scanLeft(tile0Off)(_ + _.sum)
+      val tileOffs: Seq[Array[Long]] = tileSizes.zipWithIndex.map { case (ts, lvl) =>
+        ts.scanLeft(levelTile0(lvl))(_ + _)
       }
-    } finally out.close()
-    fs.delete(staging, true)
+
+      val head = {
+        val b = new Buf
+        def off(v: Long): Unit = if (big) { b.u32(v & 0xFFFFFFFFL); b.u32(v >>> 32) } else b.u32(v)
+        if (big) b.bytes(Array('I', 'I').map(_.toByte)).u16(43).u16(8).u16(0)
+        else b.bytes(Array('I', 'I').map(_.toByte)).u16(42)
+        off(metas.head.ifdOff)
+        for (lvl <- levels.indices) {
+          val lv = levels(lvl)
+          val m = metas(lvl)
+          val nT = lv.nTiles
+          if (big) off(nEntries(lvl).toLong) else b.u16(nEntries(lvl))
+          // entries MUST be ascending by tag (TIFF 6.0 §2)
+          def entry(tag: Int, typ: Int, cnt: Long, value: Long): Unit = {
+            b.u16(tag).u16(typ)
+            if (big) { off(cnt); off(value) } else { b.u32(cnt); b.u32(value) }
+          }
+          def shortEntry(tag: Int, v: Int): Unit = entry(tag, 3, 1, v.toLong)
+          val arrTyp = if (big) 16 else 4 // LONG8 vs LONG offset/count arrays
+          if (lvl > 0) entry(254, 4, 1, 1L) // NewSubfileType: reduced-resolution
+          entry(256, 4, 1, lv.w.toLong)
+          entry(257, 4, 1, lv.h.toLong)
+          shortEntry(258, bits)
+          shortEntry(259, if (compression == "jpeg") 7 else 8) // 7=JPEG/8=deflate
+          shortEntry(262, 1) // BlackIsZero
+          shortEntry(277, 1) // one sample per pixel
+          shortEntry(322, tileW)
+          shortEntry(323, tileH)
+          if (nT == 1) { // count-1 values live inline
+            entry(324, arrTyp, 1, tileOffs(lvl)(0))
+            entry(325, arrTyp, 1, tileSizes(lvl)(0))
+          } else {
+            entry(324, arrTyp, nT.toLong, m.offsetsOff)
+            entry(325, arrTyp, nT.toLong, m.countsOff)
+          }
+          shortEntry(339, 1) // SampleFormat: unsigned
+          if (lvl == 0) {
+            entry(33550, 12, 3, m.scaleOff)
+            entry(33922, 12, 6, m.tiepointOff)
+          }
+          // next IFD in the overview chain, 0 at the end
+          off(if (lvl + 1 < levels.size) metas(lvl + 1).ifdOff else 0L)
+          // external value arrays (written even in the 1-tile inline case —
+          // the fixed layout keeps offsets simple; 16 dead bytes at most)
+          tileOffs(lvl).take(nT).foreach(off)
+          tileSizes(lvl).foreach(off)
+          if (lvl == 0) {
+            b.f64(scaleX).f64(scaleY).f64(0.0)
+            // tiepoint: raster (0,0) -> geo (originX, originY)
+            b.f64(0.0).f64(0.0).f64(0.0).f64(originX).f64(originY).f64(0.0)
+          }
+        }
+        b.toArray
+      }
+      require(head.length == tile0Off, s"header ${head.length} != $tile0Off")
+      require(big || tileOffs.last.last <= 0xFFFFFFFFL,
+        s"$path: classic layout overflowed unexpectedly")
+
+      // ------ driver pass: header, then stream staged tiles ------
+      st.concat(Seq(head), names.flatten, emptyTile)
+    }
   }
 }

@@ -1,0 +1,236 @@
+package graft.sources
+
+import java.nio.file.{Files, Path => JPath}
+import java.security.MessageDigest
+
+import scala.jdk.CollectionConverters._
+import scala.util.Random
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+import graft.SparkSpec
+import graft.sources.grib.Grib2Writer
+import graft.sources.nc.Hdf5Writer
+import graft.sources.tiff.TiffWriter
+import graft.sources.zarr.ZarrStore
+
+/** The shared chunk-staging path of the four raster sinks: pinned output
+  * bytes (one small seeded grid per writer configuration), no state
+  * leaking between writes (stale staging files, stale Zarr chunks), and
+  * one clear error for a coordinate that is not on the grid.
+  */
+class ChunkStagerSpec extends SparkSpec {
+  import spark.implicits._
+
+  private def tmp(): JPath = Files.createTempDirectory("graft_stager")
+
+  private def md5(bytes: Array[Byte]): String =
+    MessageDigest.getInstance("MD5").digest(bytes).map("%02x".format(_)).mkString
+
+  /** md5 of a file, or of a directory's (relative path, file md5) list;
+    * Hadoop's `.name.crc` side files are skipped.
+    */
+  private def digest(p: JPath): String =
+    if (!Files.isDirectory(p)) md5(Files.readAllBytes(p))
+    else {
+      val files = Files.walk(p).iterator().asScala.filter(Files.isRegularFile(_))
+        .filterNot { f =>
+          val n = f.getFileName.toString
+          n.startsWith(".") && n.endsWith(".crc")
+        }
+        .map(f => s"${p.relativize(f)} ${md5(Files.readAllBytes(f))}")
+        .toSeq.sorted
+      md5(files.mkString("\n").getBytes("UTF-8"))
+    }
+
+  // ---- seeded grids ----
+  private val lats = Array.tabulate(23)(i => 50.0 - i * 0.25)
+  private val lons = Array.tabulate(17)(j => -10.0 + j * 0.25)
+  /** (lat, lon, value) with ~10% holes, values exact in f4 */
+  private def latLonCells(seed: Long): DataFrame = {
+    val rnd = new Random(seed)
+    val cells = for {
+      i <- lats.indices; j <- lons.indices
+      v = rnd.nextInt(4000); if rnd.nextInt(10) != 0
+    } yield (lats(i), lons(j), v * 0.25)
+    cells.toDF("latitude", "longitude", "value").repartition(5)
+  }
+
+  private val (ox, oy, sx, sy) = (500000.0, 7000000.0, 30.0, 30.0)
+  private val (pxW, pxH) = (70, 45)
+  private def pixels(seed: Long, maxV: Int): DataFrame = {
+    val rnd = new Random(seed)
+    val px = for {
+      r <- 0 until pxH; c <- 0 until pxW
+      v = rnd.nextInt(maxV) + 1; if rnd.nextInt(12) != 0
+    } yield (ox + (c + 0.5) * sx, oy - (r + 0.5) * sy, v)
+    px.toDF("x", "y", "value").repartition(5)
+  }
+
+  private def cog(df: DataFrame, out: String, bits: Int, overviews: Seq[Int] = Nil,
+      resampling: String = "mean", compression: String = "deflate"): Unit =
+    TiffWriter.writeGrid(df, out, "x", "y", "value", ox, oy, sx, sy, pxW, pxH,
+      tileW = 32, tileH = 32, bits = bits, overviews = overviews,
+      resampling = resampling, compression = compression)
+
+  /** Recorded from the writers before they shared a staging path. */
+  private val pinned: Seq[(String, JPath => Unit, String)] = Seq(
+    ("nc", d => Hdf5Writer.writeGrid(latLonCells(11), d.resolve("a.nc").toString,
+      "v", "latitude", "longitude", "value", lats, lons, chunkRows = 5),
+      "67f723cced12b618ad15acda6298b455"),
+    ("cog deflate mean overviews",
+      d => cog(pixels(12, 60000), d.resolve("a.tif").toString, 16, Seq(2, 4)),
+      "405d151ba1dc590727ac10f36da70dd3"),
+    ("cog cubic overviews",
+      d => cog(pixels(13, 60000), d.resolve("a.tif").toString, 16, Seq(2, 4),
+        resampling = "cubic"),
+      "520b73318f247c867c2b7095c827ef43"),
+    ("cog jpeg",
+      d => cog(pixels(14, 255), d.resolve("a.tif").toString, 8, compression = "jpeg"),
+      "e78d2b4e8ebcbc9794fa11129e7f49b2"),
+    ("zarr v2", d => ZarrStore.writeGrid(latLonCells(15), d.resolve("a.zarr").toString,
+      "v", "latitude", "longitude", "value", lats, lons, chunkRows = 5, chunkCols = 4),
+      "f033ab68f953897ea2f207b34de8bfce"),
+    ("zarr v3 sharded", d => ZarrStore.writeGridV3(latLonCells(16),
+      d.resolve("a.zarr").toString, "v", "latitude", "longitude", "value",
+      lats, lons, chunkRows = 8, chunkCols = 8, innerRows = 4, innerCols = 4),
+      "d562281d8a28b446060cee2a32172874"),
+    ("grib bitmap holes + stepCol", d => {
+      val rnd = new Random(17)
+      val cells = for {
+        s <- Seq(6, 30); m <- 0 until 3; i <- lats.indices; j <- lons.indices
+        v = rnd.nextInt(65536); if rnd.nextInt(9) != 0
+      } yield (s, m, lats(i), lons(j), v.toDouble)
+      Grib2Writer.writeEnsemble(
+        cells.toDF("step_hours", "number", "latitude", "longitude", "value")
+          .repartition(5),
+        d.resolve("a.grib2").toString, lats, lons, stepCol = Some("step_hours"))
+    }, "43a75a732c350d1a58b74f7358ce408d"))
+
+  for ((name, write, want) <- pinned)
+    test(s"byte identity: $name") {
+      val d = tmp()
+      write(d)
+      val out = Files.list(d).iterator().asScala
+        .filterNot(_.getFileName.toString.startsWith(".")).toSeq
+      assert(out.size == 1, out)
+      assert(digest(out.head) == want, s"$name")
+    }
+
+  // ---- no state leaks between writes ----
+
+  test("leftover staging files are never spliced into a new nc / cog") {
+    val d = tmp()
+    val garbage = Array.tabulate[Byte](40)(k => (k * 37 + 11).toByte)
+    // every row in chunk / tile 0; a stale chunk 1 sits in the staging dir
+    val nc = d.resolve("a.nc")
+    Files.createDirectories(d.resolve("a.nc.staging"))
+    Files.write(d.resolve("a.nc.staging/chunk-00001"), garbage)
+    val ncRows = latLonCells(21).filter(col("latitude") > lats(5))
+    Hdf5Writer.writeGrid(ncRows, nc.toString, "v", "latitude", "longitude",
+      "value", lats, lons, chunkRows = 5)
+    val ncBack = spark.read.format("graft-netcdf").option("path", nc.toString)
+      .option("var", "v").load().filter(!isnan(col("value")))
+    assert(ncBack.count() == ncRows.count())
+    assert(!Files.exists(d.resolve("a.nc.staging")))
+
+    val tif = d.resolve("a.tif")
+    Files.createDirectories(d.resolve("a.tif.staging"))
+    Files.write(d.resolve("a.tif.staging/L0-tile-00001"), garbage)
+    val px = pixels(22, 60000)
+      .filter(col("x") < ox + 32 * sx && col("y") > oy - 32 * sy)
+    cog(px, tif.toString, 16)
+    val tifBack = spark.read.format("graft-cog").option("path", tif.toString)
+      .option("nodata", "0").load()
+    assert(tifBack.count() == px.count())
+    assert(!Files.exists(d.resolve("a.tif.staging")))
+  }
+
+  test("rewriting a zarr store drops the chunks of the earlier write (v2, v3)") {
+    val ax = Array(3.0, 2.0, 1.0, 0.0)
+    val full = for (la <- ax; lo <- ax.reverse) yield (la, lo, 1.0)
+    val corner = full.filter { case (la, lo, _) => la >= 2.0 && lo <= 1.0 }
+      .map { case (la, lo, _) => (la, lo, 2.0) }
+    def back(store: String) = spark.read.format("graft-zarr").option("path", store)
+      .option("var", "v").load().filter(!isnan(col("value")))
+      .select("value").as[Double].collect().toSeq
+    for (v3 <- Seq(false, true)) {
+      val store = tmp().resolve("a.zarr").toString
+      def write(cells: Seq[(Double, Double, Double)]): Unit = {
+        val df = cells.toDF("latitude", "longitude", "value")
+        if (v3) ZarrStore.writeGridV3(df, store, "v", "latitude", "longitude",
+          "value", ax, ax.reverse, 2, 2, 1, 1)
+        else ZarrStore.writeGrid(df, store, "v", "latitude", "longitude",
+          "value", ax, ax.reverse, 2, 2)
+      }
+      write(full.toSeq)
+      assert(back(store).size == 16)
+      write(corner.toSeq)
+      assert(back(store) == Seq.fill(4)(2.0), s"v3=$v3")
+    }
+  }
+
+  // ---- one off-grid check ----
+
+  /** The write fails naming the column, the value and the axis length,
+    * and leaves no staging dir behind.
+    */
+  private def offGrid(out: JPath, column: String, value: String, length: Int)(
+      write: => Unit): Unit = {
+    val e = intercept[Exception](write)
+    val msg = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString(" | ")
+    assert(msg.contains(s"$column = $value") && msg.contains(s"length $length"), msg)
+    assert(!Files.exists(out.resolveSibling(out.getFileName.toString + ".staging")))
+  }
+
+  test("off-grid coordinates fail clearly: nc") {
+    val out = tmp().resolve("a.nc")
+    val df = Seq((lats(2), lons(3), 1.0), (lats(2) + 0.1, lons(3), 2.0))
+      .toDF("lat", "lon", "value")
+    offGrid(out, "lat", (lats(2) + 0.1).toString, lats.length) {
+      Hdf5Writer.writeGrid(df, out.toString, "v", "lat", "lon", "value",
+        lats, lons, chunkRows = 5)
+    }
+  }
+
+  test("off-grid coordinates fail clearly: cog") {
+    val out = tmp().resolve("a.tif")
+    val df = Seq((ox + 5 * sx, oy - 5 * sy, 1), (ox + (pxW + 3) * sx, oy - 5 * sy, 2))
+      .toDF("x", "y", "value")
+    offGrid(out, "x", (ox + (pxW + 3) * sx).toString, pxW)(cog(df, out.toString, 16))
+  }
+
+  test("off-grid coordinates fail clearly: zarr v2 and v3") {
+    val df = Seq((lats(0), lons(0), 1.0), (lats(0), lons(16) + 1.0, 2.0))
+      .toDF("latitude", "lon", "value")
+    val bad = (lons(16) + 1.0).toString
+    val v2 = tmp().resolve("a.zarr")
+    offGrid(v2, "lon", bad, lons.length) {
+      ZarrStore.writeGrid(df, v2.toString, "v", "latitude", "lon", "value",
+        lats, lons, chunkRows = 5, chunkCols = 4)
+    }
+    val v3 = tmp().resolve("a.zarr")
+    offGrid(v3, "lon", bad, lons.length) {
+      ZarrStore.writeGridV3(df, v3.toString, "v", "latitude", "lon", "value",
+        lats, lons, 8, 8, 4, 4)
+    }
+  }
+
+  test("off-grid coordinates fail clearly: grib, and members stay in one octet") {
+    val out = tmp().resolve("a.grib2")
+    def grib(cells: Seq[(Int, Double, Double, Double)]): Unit =
+      Grib2Writer.writeEnsemble(
+        cells.toDF("number", "latitude", "longitude", "value"),
+        out.toString, lats, lons)
+    offGrid(out, "latitude", "99.0", lats.length) {
+      grib(Seq((0, lats(0), lons(0), 1.0), (1, 99.0, lons(0), 1.0)))
+    }
+    // member 256 must fail, never alias to member 0 of the next step
+    val e = intercept[Exception](grib(Seq((256, lats(0), lons(0), 1.0))))
+    val msg = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString(" | ")
+    assert(msg.contains("ensemble member 256"), msg)
+  }
+}

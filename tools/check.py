@@ -179,9 +179,13 @@ baseline_f = Path(__file__).parent / "plan_baseline" / (Path(sfdir).name + ".jso
 if hashes_f.exists() and fresh is None:
     got_h = json.loads(hashes_f.read_text())
     mode = got_h.pop("_mode", "full")
+    conf = got_h.pop("_conf", "")
     if mode != "full":
         print(f"plan hashes: {mode} run — drift compare skipped"
               " (full runs only, the like-runs rule)")
+    elif conf:
+        print(f"plan hashes: SPARK_GRAFT_CONF={conf!r} run — drift compare"
+              " skipped (never reseed tools/plan_baseline from it)")
     elif baseline_f.exists():
         base_h = json.loads(baseline_f.read_text())
         drift = {n: (base_h[n], got_h[n]) for n in got_h
