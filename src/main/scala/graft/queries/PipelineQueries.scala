@@ -34,11 +34,11 @@ object PipelineQueries {
     */
   def qualityGate(docs: DataFrame): DataFrame = {
     val toks = graft.core.Tok.wordsCased(col("text"))
-    // docs.col(name) resolves the name LITERALLY against this Dataset;
-    // a bare col(name) would parse a dotted column name as a nested
-    // field reference (r20 advice — latent, all current callers pass
-    // simple names)
-    val pre = docs.select(docs.columns.map(docs.col).toSeq ++ Seq(
+    // each name backtick-quoted (an embedded backtick doubled), so a
+    // dotted column name resolves as itself against this Dataset, not as
+    // a nested field reference
+    val pre = docs.select(docs.columns.toSeq.map(n =>
+        docs.col("`" + n.replace("`", "``") + "`")) ++ Seq(
       size(toks).cast("double").as("n_tokens"),
       (size(array_distinct(toks)).cast("double") /
         nullif(size(toks).cast("double"), lit(0.0))).as("diversity")): _*)

@@ -12,7 +12,12 @@ import org.apache.spark.util.SerializableConfiguration
   *   1. a mapping step: each row becomes (chunk, local, v) — its chunk
   *      id (>= 0), its offset in the chunk and its value, which keeps
   *      the format's cell type in the shuffle ([[Cells]]);
-  *   2. ONE shuffle on the chunk id, then sortWithinPartitions;
+  *   2. ONE shuffle, then sortWithinPartitions: chunk c runs on task
+  *      slot mod P (repartitionById, no hash). The slot is the chunk id
+  *      for the dense ids of NetCDF, COG and Zarr, so no task gets more
+  *      than ⌈nChunks/P⌉ chunks (a hash of the few ids of a write gave
+  *      16 chunks on 4 tasks as 3/3/4/6, and the write waited on the 6);
+  *      GRIB's slot puts the members of one step one per task;
   *   3. a streaming foreachPartition holding ONE fill-initialised chunk
   *      buffer per task, writing each chunk as one encoded object through
   *      the Hadoop FS API (file://, hdfs://, s3a://; no shared state).
@@ -64,12 +69,34 @@ object ChunkStager {
     s"$column = $value is not on the grid axis (length $length)"
 
   /** Exact-match index of one grid axis (the converter contract: cells
-    * sit exactly on the axis coordinates).
+    * sit exactly on the axis coordinates): the coordinates sorted, with
+    * a binary search in primitive compares, so a lookup boxes nothing.
+    * Numeric equality: -0.0 finds 0.0, a NaN is never on the axis, and a
+    * coordinate listed twice maps to its last index.
     */
   final class Axis(column: String, coords: Array[Double]) extends Serializable {
-    private val index = coords.zipWithIndex.toMap
-    def apply(v: Double): Int = index.getOrElse(v,
-      throw new IllegalArgumentException(offGrid(column, v, coords.length)))
+    // `+ 0.0` turns -0.0 into 0.0, so the two sort as one key; the sort
+    // is stable, so the last of equal keys is the last index
+    private val (keys, index) = {
+      val byKey = coords.indices.filterNot(i => coords(i).isNaN)
+        .sortBy(i => coords(i) + 0.0)(Ordering.Double.TotalOrdering)
+      val last = byKey.indices.filter(k =>
+        k == byKey.length - 1 || coords(byKey(k)) != coords(byKey(k + 1)))
+      (last.map(k => coords(byKey(k)) + 0.0).toArray, last.map(byKey).toArray)
+    }
+
+    def apply(v: Double): Int = {
+      var lo = 0
+      var hi = keys.length - 1
+      while (lo <= hi) {
+        val mid = (lo + hi) >>> 1
+        val k = keys(mid)
+        if (k < v) lo = mid + 1
+        else if (k == v) return index(mid)
+        else hi = mid - 1 // also for a NaN v: it ends the search
+      }
+      throw new IllegalArgumentException(offGrid(column, v, coords.length))
+    }
   }
 
   /** The mapping step of the lat/lon sinks: each (latCol, lonCol, valCol)
@@ -98,16 +125,19 @@ object ChunkStager {
       .toDF("chunk", "local", "v")
   }
 
-  /** Shuffle `keyed` (chunk, local, v) once on the chunk id into
-    * min(maxParts, defaultParallelism) partitions; each task streams its
-    * sorted rows through one chunk buffer and writes chunk `c` as
-    * `encode(c, buf)` to `path(c)`.
+  /** Shuffle `keyed` (chunk, local, v) once into P = min(maxParts,
+    * defaultParallelism) partitions: a row runs on task `s mod P` for its
+    * int slot `s`, the column `slot(P)` (by default the chunk id). Each
+    * task streams its sorted rows through one chunk buffer and writes
+    * chunk `c` as `encode(c, buf)` to `path(c)`.
     */
-  def stage[B](keyed: DataFrame, cells: Cells[B], maxParts: Int)(
+  def stage[B](keyed: DataFrame, cells: Cells[B], maxParts: Int,
+      slot: Int => Column = _ => col("chunk"))(
       encode: (Int, B) => Array[Byte], path: Int => String): Unit = {
     val sc = keyed.sparkSession.sparkContext
     val conf = sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
-    keyed.repartition(math.min(maxParts, sc.defaultParallelism).max(1), col("chunk"))
+    val parts = math.min(maxParts, sc.defaultParallelism).max(1)
+    keyed.repartitionById(parts, slot(parts))
       .sortWithinPartitions("chunk")
       .foreachPartition { rows: Iterator[Row] =>
         val hconf = conf.value.value
@@ -150,10 +180,11 @@ object ChunkStager {
     */
   final class Staging private[ChunkStager] (fs: FileSystem, dir: Path, out: Path) {
 
-    def stage[B](keyed: DataFrame, cells: Cells[B], maxParts: Int)(
+    def stage[B](keyed: DataFrame, cells: Cells[B], maxParts: Int,
+        slot: Int => Column = _ => col("chunk"))(
         encode: (Int, B) => Array[Byte], name: Int => String): Unit = {
       val d = dir.toString
-      ChunkStager.stage(keyed, cells, maxParts)(encode, c => s"$d/${name(c)}")
+      ChunkStager.stage(keyed, cells, maxParts, slot)(encode, c => s"$d/${name(c)}")
     }
 
     /** Staged object sizes by name: ONE listing of the dir once the

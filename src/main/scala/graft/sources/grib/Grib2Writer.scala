@@ -2,7 +2,7 @@ package graft.sources.grib
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.sources.ChunkStager
@@ -59,7 +59,7 @@ object Grib2Writer {
     }
     def name(key: Int) = f"s${key >> 8}%05d_m${key & 0xFF}%05d.part"
     ChunkStager.singleFile(df.sparkSession, path) { st =>
-      st.stage(keyed, cells, 64)((key, buf) =>
+      st.stage(keyed, cells, 64, slot)((key, buf) =>
         encodeMessage(key & 0xFF, key >> 8, buf, ni, nj, la1, lo1, di, dj), name)
       // a GRIB file IS its messages concatenated, in (step, member) order
       val names = st.staged.keys.toSeq.sorted
@@ -67,6 +67,13 @@ object Grib2Writer {
       st.concat(Nil, names, Array.emptyByteArray)
     }
   }
+
+  /** The staging slot of chunk (step << 8) | member among `parts` tasks:
+    * member + pmod(hash(step), parts), so the members of one step run one
+    * per task and the steps start on hash-spread tasks.
+    */
+  private[sources] def slot(parts: Int): Column = col("chunk").bitwiseAND(0xFF) +
+    pmod(hash(shiftright(col("chunk"), 8)), lit(parts))
 
   /** One complete edition-2 message (sections 0–8) for member `m` at
     * lead time `stepHours`.

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -107,38 +109,84 @@ object FileReplay {
 
   /** Run a streaming transform of the staged replay to completion and
     * return the memory-sink table. `build` maps the file-source stream
-    * (schema = `schema`) to the streaming result.
+    * (schema = `schema`) to the streaming result. With a `debug` sink
+    * (by default stderr when SPARK_GRAFT_STREAM_DEBUG is set) every
+    * batch's duration breakdown and state operator metrics go to it
+    * (guide §1 — measure before theorizing about where a replayed
+    * stream's wall goes).
     */
   def runToTable(s: org.apache.spark.sql.SparkSession,
       srcDir: java.io.File, schema: org.apache.spark.sql.types.StructType,
       queryName: String,
       outputMode: org.apache.spark.sql.streaming.OutputMode =
-        org.apache.spark.sql.streaming.OutputMode.Append())(
+        org.apache.spark.sql.streaming.OutputMode.Append(),
+      debug: Option[String => Unit] = streamDebug)(
       build: DataFrame => DataFrame): DataFrame = {
     val stream = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(srcDir.getAbsolutePath)
-    val sq = build(stream)
-      .writeStream.format("memory").queryName(queryName)
-      .outputMode(outputMode).start()
-    try sq.processAllAvailable() finally sq.stop()
-    // SPARK_GRAFT_STREAM_DEBUG=1: per-batch duration breakdown + state
-    // operator metrics on stderr (guide §1 — measure before theorizing
-    // about where a replayed stream's wall goes). Opt-in diagnostics.
-    if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG"))
-      sq.recentProgress.foreach { p =>
-        val d = p.durationMs
-        val st = p.stateOperators.headOption.map(o =>
-          s" stateRows=${o.numRowsTotal} updated=${o.numRowsUpdated}" +
-            s" updMs=${o.allUpdatesTimeMs} commitMs=${o.commitTimeMs}" +
-            s" memUsed=${o.memoryUsedBytes}").getOrElse("")
-        System.err.println(
+    // a listener sees every batch; recentProgress keeps only the last
+    // spark.sql.streaming.numRecentProgressUpdates (100) and would drop
+    // batch 0 of a longer replay without notice
+    val log = debug.map(_ => new ProgressLog)
+    log.foreach(s.streams.addListener)
+    try {
+      val sq = build(stream)
+        .writeStream.format("memory").queryName(queryName)
+        .outputMode(outputMode).start()
+      try sq.processAllAvailable() finally sq.stop()
+      for (l <- log; out <- debug) l.of(sq.runId).foreach(out)
+    } finally log.foreach(s.streams.removeListener)
+    s.table(queryName)
+  }
+
+  private val streamDebug: Option[String => Unit] =
+    sys.env.get("SPARK_GRAFT_STREAM_DEBUG").map(_ => System.err.println(_: String))
+
+  /** The progress events of a session's queries, collected as they
+    * arrive on the listener bus.
+    */
+  private final class ProgressLog
+      extends org.apache.spark.sql.streaming.StreamingQueryListener {
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    import org.apache.spark.sql.streaming.StreamingQueryProgress
+    private val events =
+      new java.util.concurrent.ConcurrentLinkedQueue[StreamingQueryProgress]()
+    private val ended = scala.collection.mutable.Set[java.util.UUID]()
+
+    override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+    override def onQueryProgress(e: QueryProgressEvent): Unit = events.add(e.progress)
+    override def onQueryTerminated(e: QueryTerminatedEvent): Unit = synchronized {
+      ended += e.runId
+      notifyAll()
+    }
+
+    /** One line per batch of run `runId`, in batch order. The bus hands
+      * a query's events over in order, the terminated one last, so once
+      * that is in, so are all its batches.
+      */
+    def of(runId: java.util.UUID): Seq[String] = {
+      val complete = synchronized {
+        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+        while (!ended(runId) && System.nanoTime() < deadline)
+          wait(math.max(1L, (deadline - System.nanoTime()) / 1000000))
+        ended(runId)
+      }
+      val batches = events.iterator().asScala.filter(_.runId == runId)
+        .toSeq.sortBy(_.batchId).map { p =>
+          val d = p.durationMs
+          val st = p.stateOperators.headOption.map(o =>
+            s" stateRows=${o.numRowsTotal} updated=${o.numRowsUpdated}" +
+              s" updMs=${o.allUpdatesTimeMs} commitMs=${o.commitTimeMs}" +
+              s" memUsed=${o.memoryUsedBytes}").getOrElse("")
           s"[stream] batch=${p.batchId} rows=${p.numInputRows} " +
             s"triggerMs=${d.get("triggerExecution")} " +
             s"addBatchMs=${d.get("addBatch")} " +
             s"getBatchMs=${d.get("getBatch")} " +
-            s"planMs=${d.get("queryPlanning")}$st")
-      }
-    s.table(queryName)
+            s"planMs=${d.get("queryPlanning")}$st"
+        }
+      if (complete) batches
+      else batches :+ "[stream] no terminated event within 30 s: later batches may be missing"
+    }
   }
 }

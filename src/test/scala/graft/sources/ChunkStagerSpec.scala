@@ -6,6 +6,7 @@ import java.security.MessageDigest
 import scala.jdk.CollectionConverters._
 import scala.util.Random
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -17,8 +18,9 @@ import graft.sources.zarr.ZarrStore
 
 /** The shared chunk-staging path of the four raster sinks: pinned output
   * bytes (one small seeded grid per writer configuration), no state
-  * leaking between writes (stale staging files, stale Zarr chunks), and
-  * one clear error for a coordinate that is not on the grid.
+  * leaking between writes (stale staging files, stale Zarr chunks), one
+  * clear error for a coordinate that is not on the grid, the axis
+  * lookup's equality rules, and an even spread of chunks over the tasks.
   */
 class ChunkStagerSpec extends SparkSpec {
   import spark.implicits._
@@ -232,5 +234,99 @@ class ChunkStagerSpec extends SparkSpec {
     val msg = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .map(_.getMessage).mkString(" | ")
     assert(msg.contains("ensemble member 256"), msg)
+  }
+
+  // ---- the axis lookup ----
+
+  private def offAxis(axis: ChunkStager.Axis, v: Double, length: Int): Unit = {
+    val e = intercept[IllegalArgumentException](axis(v))
+    assert(e.getMessage == ChunkStager.offGrid("lat", v, length))
+  }
+
+  test("axis: -0.0 finds 0.0, NaN is off the grid, a duplicate keeps its last index") {
+    val zero = new ChunkStager.Axis("lat", Array(1.0, 0.0, -1.0))
+    assert(zero(-0.0) == 1 && zero(0.0) == 1)
+    val negZero = new ChunkStager.Axis("lat", Array(-0.0, 0.5))
+    assert(negZero(0.0) == 0 && negZero(-0.0) == 0)
+    val withNaN = new ChunkStager.Axis("lat", Array(2.0, Double.NaN, 1.0))
+    assert(withNaN(1.0) == 2)
+    offAxis(withNaN, Double.NaN, 3)
+    assert(ChunkStager.offGrid("lat", Double.NaN, 3) ==
+      "lat = NaN is not on the grid axis (length 3)")
+    val dup = new ChunkStager.Axis("lat", Array(1.0, 2.0, 1.0, 3.0, -0.0, 0.0))
+    assert(dup(1.0) == 2 && dup(2.0) == 1 && dup(3.0) == 3 && dup(-0.0) == 5)
+  }
+
+  test("axis: a descending latitude axis maps each coordinate to its index") {
+    val axis = new ChunkStager.Axis("lat", lats)
+    assert(lats.indices.forall(i => axis(lats(i)) == i))
+    for (v <- Seq(lats(3) + 0.1, lats.head + 0.25, lats.last - 0.25,
+        Double.PositiveInfinity, Double.NegativeInfinity))
+      offAxis(axis, v, lats.length)
+  }
+
+  test("axis: the same answers as a boxed Map of the coordinates") {
+    val rnd = new Random(31)
+    val pool = Array(0.0, -0.0, Double.NaN, 1.5, -2.25, 7.0, 1e-300)
+    for (_ <- 0 until 200) {
+      val coords = Array.fill(rnd.nextInt(9))(pool(rnd.nextInt(pool.length)))
+      val axis = new ChunkStager.Axis("lat", coords)
+      val ref = coords.zipWithIndex.toMap
+      for (v <- pool)
+        ref.get(v) match {
+          case Some(i) => assert(axis(v) == i, (coords.toSeq, v))
+          case None => offAxis(axis, v, coords.length)
+        }
+    }
+  }
+
+  test("off-grid coordinates fail clearly: a NaN latitude") {
+    val out = tmp().resolve("a.zarr")
+    val df = Seq((lats(0), lons(0), 1.0), (Double.NaN, lons(0), 2.0))
+      .toDF("latitude", "longitude", "value")
+    offGrid(out, "latitude", "NaN", lats.length) {
+      ZarrStore.writeGrid(df, out.toString, "v", "latitude", "longitude", "value",
+        lats, lons, chunkRows = 5, chunkCols = 4)
+    }
+  }
+
+  // ---- chunks spread over the tasks ----
+
+  /** Stage one cell in each of `chunks` and return the chunk count of
+    * each task that got one: each chunk's object holds the partition id
+    * of the task that wrote it.
+    */
+  private def tasksOf(chunks: Seq[Int], maxParts: Int,
+      slot: Int => org.apache.spark.sql.Column = _ => col("chunk")): Map[Int, Int] = {
+    val d = tmp()
+    val dir = d.toString
+    val keyed = chunks.map(c => (c, 0, 1)).toDF("chunk", "local", "v").repartition(3)
+    ChunkStager.stage(keyed, ChunkStager.Ints(1, 0), maxParts, slot)(
+      (_, _) => TaskContext.getPartitionId().toString.getBytes("UTF-8"),
+      c => s"$dir/$c")
+    val task = chunks.map(c =>
+      c -> new String(Files.readAllBytes(d.resolve(c.toString)), "UTF-8").toInt).toMap
+    task.values.groupBy(identity).map { case (t, cs) => t -> cs.size }
+  }
+
+  test("staging spreads dense chunk ids evenly over the tasks") {
+    assert(spark.sparkContext.defaultParallelism == 4)
+    assert(tasksOf(0 until 16, 16).values.toSeq == Seq.fill(4)(4))
+    // a COG overview level: its tile ids are dense, P = min(tiles, 4)
+    for (tiles <- Seq(2, 3, 6, 9, 13)) {
+      val parts = math.min(tiles, 4)
+      val load = tasksOf(0 until tiles, tiles)
+      assert(load.size == parts && load.values.max <= (tiles + parts - 1) / parts,
+        s"$tiles tiles: $load")
+    }
+  }
+
+  test("staging runs the members of one grib step one per task") {
+    def key(step: Int, member: Int) = (step << 8) | member
+    for (step <- Seq(0, 6, 24, 240))
+      assert(tasksOf((0 until 4).map(key(step, _)), 64, Grib2Writer.slot)
+        .values.toSeq == Seq.fill(4)(1), s"step $step")
+    val steps = tasksOf(Seq(0, 6, 12, 18, 24, 30).map(key(_, 0)), 64, Grib2Writer.slot)
+    assert(steps.size > 1, steps)
   }
 }
