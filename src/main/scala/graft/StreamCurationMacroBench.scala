@@ -234,16 +234,23 @@ object StreamCurationMacroBench {
       FileReplay.stageOrderedReplay(delta.select(col("doc_id"), col("text")),
         "doc_id", srcDir, nBuckets, clear = false)
       val t0 = System.nanoTime()
-      val sq = startQuery()
+      // the per-batch dump below reads a listener, which sees every
+      // batch; recentProgress keeps only the last
+      // spark.sql.streaming.numRecentProgressUpdates (100)
+      val log = new FileReplay.ProgressLog
+      spark.streams.addListener(log)
       try {
-        sq.processAllAvailable()
+        val sq = startQuery()
+        try sq.processAllAvailable() finally sq.stop()
+        tStream = (System.nanoTime() - t0) / 1e9
         val prog = sq.lastProgress
         if (prog != null && prog.stateOperators.nonEmpty) {
           stateRows = prog.stateOperators(0).numRowsTotal
           stateBytes = prog.stateOperators(0).memoryUsedBytes
         }
         // per-batch breakdown on stderr: where does the wall go?
-        sq.recentProgress.foreach { p =>
+        val (batches, complete) = log.progress(sq.runId)
+        batches.foreach { p =>
           val so = p.stateOperators.headOption
           if (firstBatchMs < 0 && p.numInputRows > 0)
             firstBatchMs = p.batchDuration
@@ -253,8 +260,9 @@ object StreamCurationMacroBench {
               s"commitMs=${o.commitTimeMs} " +
               s"custom=${o.customMetrics}").getOrElse(""))
         }
-      } finally sq.stop()
-      tStream = (System.nanoTime() - t0) / 1e9
+        if (!complete)
+          System.err.println("[scur] no terminated event within 30 s: later batches may be missing")
+      } finally spark.streams.removeListener(log)
     } finally {
       prevProv match {
         case Some(p) => spark.conf.set(provKey, p)

@@ -307,7 +307,7 @@ object Grib2File {
       val w = gwidths(g)
       var n = 0L
       while (n < glens(g)) {
-        require(k < p.nVals, s"group lengths exceed $k >= ${p.nVals} values")
+        if (k >= p.nVals) failed(s"group lengths exceed $k >= ${p.nVals} values")
         xs(k) = grefs(g) + (if (w > 0) br.take(w) else 0L)
         k += 1
         n += 1
@@ -378,6 +378,71 @@ object Grib2File {
     xs
   }
 
+  /** `require`'s exception and message, for checks inside the decode
+    * loops, where `require`'s by-name message would cost a closure per
+    * element.
+    */
+  private def failed(msg: String): Nothing =
+    throw new IllegalArgumentException(s"requirement failed: $msg")
+
+  /** Simple packing (template 7.0): `nVals` big-endian unsigned
+    * integers of `bpv` bits, packed from octet 6 of the data section.
+    * Whole 16-bit values, the common width, are read byte-aligned; any
+    * other width goes through the generic [[BitReader]].
+    */
+  private def unpackSimple(s: ByteBuffer, p: Packing): Array[Long] = {
+    require(p.bpv > 0 && p.bpv <= 32, s"bits-per-value ${p.bpv} unsupported")
+    val need = (p.nVals.toLong * p.bpv + 7) / 8
+    if (s.limit() - 5L < need)
+      failed(s"data section holds ${s.limit() - 5} of $need packed bytes " +
+        s"(${p.nVals} values at ${p.bpv} bits)")
+    val xs = new Array[Long](p.nVals)
+    var k = 0
+    if (p.bpv == 16) {
+      while (k < xs.length) { xs(k) = s.getShort(5 + 2 * k) & 0xFFFFL; k += 1 }
+    } else {
+      val br = new BitReader(s, 5)
+      while (k < xs.length) { xs(k) = br.take(p.bpv); k += 1 }
+    }
+    xs
+  }
+
+  /** value = (R + X * 2^E) * 10^-D for every packed X. */
+  private def scaled(xs: Array[Long], p: Packing): Array[Double] = {
+    val scale = math.pow(2.0, p.binScale) * math.pow(10.0, -p.decScale)
+    val r = p.refVal * math.pow(10.0, -p.decScale)
+    val out = new Array[Double](xs.length)
+    var k = 0
+    while (k < xs.length) { out(k) = r + xs(k) * scale; k += 1 }
+    out
+  }
+
+  /** Section 6 (indicator 0) expanded over the `n` grid points: a set
+    * bit takes the next present value, a clear bit is NaN. The bitmap
+    * must set exactly one bit per present value.
+    */
+  private def expandBitmap(bitmap: ByteBuffer, present: Array[Double],
+      n: Int): Array[Double] = {
+    require(bitmap.limit() - 6 >= (n + 7) / 8,
+      s"bitmap too short: ${bitmap.limit() - 6} bytes for $n points")
+    val full = new Array[Double](n)
+    var src = 0
+    var i = 0
+    while (i < n) {
+      val bit = (bitmap.get(6 + (i >> 3)) >> (7 - (i & 7))) & 1
+      if (bit == 1) {
+        if (src >= present.length)
+          failed(s"bitmap sets more bits than $src >= ${present.length} packed values")
+        full(i) = present(src)
+        src += 1
+      } else full(i) = Double.NaN
+      i += 1
+    }
+    require(src == present.length,
+      s"bitmap covers $src of ${present.length} packed values")
+    full
+  }
+
   /** Decode the packed payload of one message:
     * value = (R + X * 2^E) * 10^-D with X either a flat big-endian
     * `bitsPerValue`-wide bitstream (template 7.0) or group-unpacked
@@ -426,42 +491,14 @@ object Grib2File {
               val s = readAt(ch, cur, secLen.toInt)
               val p = packing
               require(p != null, "data section before representation section")
-              val scale = math.pow(2.0, p.binScale) * math.pow(10.0, -p.decScale)
-              val r = p.refVal * math.pow(10.0, -p.decScale)
               val xs: Array[Long] =
-                if (p.template == 0) {
-                  require(p.bpv > 0 && p.bpv <= 32,
-                    s"bits-per-value ${p.bpv} unsupported")
-                  val br = new BitReader(s, 5)
-                  Array.fill(p.nVals)(br.take(p.bpv))
-                } else if (p.template == 41) decodePng(s, p)
+                if (p.template == 0) unpackSimple(s, p)
+                else if (p.template == 41) decodePng(s, p)
                 else decodeComplex(s, p)
-              val present = new Array[Double](p.nVals)
-              var k = 0
-              while (k < p.nVals) { present(k) = r + xs(k) * scale; k += 1 }
+              val present = scaled(xs, p)
               values =
                 if (bitmap == null) present
-                else {
-                  val n = info.ni * info.nj
-                  require(bitmap.limit() - 6 >= (n + 7) / 8,
-                    s"bitmap too short: ${bitmap.limit() - 6} bytes for $n points")
-                  val full = new Array[Double](n)
-                  var src = 0
-                  var i = 0
-                  while (i < n) {
-                    val bit = (u8(bitmap, 6 + (i >> 3)) >> (7 - (i & 7))) & 1
-                    if (bit == 1) {
-                      require(src < p.nVals,
-                        s"bitmap sets more bits than $src >= ${p.nVals} packed values")
-                      full(i) = present(src)
-                      src += 1
-                    } else full(i) = Double.NaN
-                    i += 1
-                  }
-                  require(src == p.nVals,
-                    s"bitmap covers $src of ${p.nVals} packed values")
-                  full
-                }
+                else expandBitmap(bitmap, present, info.ni * info.nj)
             case _ => ()
           }
           cur += secLen

@@ -138,13 +138,13 @@ class CogScan(path: String, required: StructType, nodata: Option[Int],
     planned.map(b => CogInputPartition(path, info, b)).toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new CogReaderFactory(required.fieldNames, nodata)
+    new CogReaderFactory(required, nodata)
 }
 
 case class CogInputPartition(path: String, info: TiffFile.TiffInfo,
     block: TiffFile.BlockInfo) extends InputPartition
 
-class CogReaderFactory(cols: Array[String], nodata: Option[Int])
+class CogReaderFactory(required: StructType, nodata: Option[Int])
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val part = p.asInstanceOf[CogInputPartition]
@@ -157,24 +157,27 @@ class CogReaderFactory(cols: Array[String], nodata: Option[Int])
       private val wClip = math.min(b.width, info.width - b.colLo)
       private val hClip = math.min(b.height, info.height - b.rowLo)
       private val bad = nodata.getOrElse(Int.MinValue)
-      private var k = -1
+      private val cells = new CellRow(required)
+      private val (xO, yO, vO) =
+        (cells.ordinal("x"), cells.ordinal("y"), cells.ordinal("value"))
+      // the current cell (row, col) of the clipped tile
+      private var row = if (wClip > 0) 0 else hClip
+      private var col = -1
 
       override def next(): Boolean = {
-        k += 1
-        while (k < wClip * hClip &&
-            samples((k / wClip) * b.width + (k % wClip)) == bad)
-          k += 1
-        k < wClip * hClip
+        do {
+          col += 1
+          if (col == wClip) { col = 0; row += 1 }
+        } while (row < hClip && samples(row * b.width + col) == bad)
+        row < hClip
       }
 
       override def get(): InternalRow = {
-        val row = k / wClip
-        val colI = k % wClip
-        InternalRow.fromSeq(cols.toIndexedSeq.map {
-          case "x" => info.originX + (b.colLo + colI + 0.5) * info.scaleX
-          case "y" => info.originY - (b.rowLo + row + 0.5) * info.scaleY
-          case "value" => samples(row * b.width + colI)
-        })
+        val out = cells.row
+        if (xO >= 0) out.setDouble(xO, info.originX + (b.colLo + col + 0.5) * info.scaleX)
+        if (yO >= 0) out.setDouble(yO, info.originY - (b.rowLo + row + 0.5) * info.scaleY)
+        if (vO >= 0) out.setInt(vO, samples(row * b.width + col))
+        out
       }
 
       override def close(): Unit = ()

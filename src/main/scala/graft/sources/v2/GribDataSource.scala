@@ -145,21 +145,30 @@ class GribScan(paths: Seq[String], required: StructType,
     planned.map { case (p, m) => GribInputPartition(p, m) }.toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GribReaderFactory(required.fieldNames)
+    new GribReaderFactory(required)
 }
 
 case class GribInputPartition(path: String, info: Grib2File.MessageInfo)
     extends InputPartition
 
-class GribReaderFactory(cols: Array[String]) extends PartitionReaderFactory {
+class GribReaderFactory(required: StructType) extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val part = p.asInstanceOf[GribInputPartition]
     new PartitionReader[InternalRow] {
       private val info = part.info
+      private val cells = new CellRow(required)
+      private val (latO, lonO, vO) = (cells.ordinal("latitude"),
+        cells.ordinal("longitude"), cells.ordinal("value"))
       private val values: Array[Double] =
-        if (cols.contains("value")) Grib2File.read(part.path, info).values
-        else null
-      private val dt = UTF8String.fromString(info.dataType)
+        if (vO >= 0) Grib2File.read(part.path, info).values else null
+      // the message's keys are the same for every cell: set them once
+      locally {
+        val (dtO, nO, sO) = (cells.ordinal("data_type"),
+          cells.ordinal("number"), cells.ordinal("step_hours"))
+        if (dtO >= 0) cells.row.update(dtO, UTF8String.fromString(info.dataType))
+        if (nO >= 0) cells.row.setInt(nO, info.number)
+        if (sO >= 0) cells.row.setInt(sO, info.stepHours)
+      }
       private var k = -1
 
       override def next(): Boolean = {
@@ -168,16 +177,11 @@ class GribReaderFactory(cols: Array[String]) extends PartitionReaderFactory {
       }
 
       override def get(): InternalRow = {
-        val j = k / info.ni
-        val i = k % info.ni
-        InternalRow.fromSeq(cols.toIndexedSeq.map {
-          case "data_type" => dt
-          case "number" => info.number
-          case "step_hours" => info.stepHours
-          case "latitude" => info.la1 - j * info.dj
-          case "longitude" => info.lo1 + i * info.di
-          case "value" => values(k)
-        })
+        val out = cells.row
+        if (latO >= 0) out.setDouble(latO, info.la1 - (k / info.ni) * info.dj)
+        if (lonO >= 0) out.setDouble(lonO, info.lo1 + (k % info.ni) * info.di)
+        if (vO >= 0) out.setDouble(vO, values(k))
+        out
       }
 
       override def close(): Unit = ()

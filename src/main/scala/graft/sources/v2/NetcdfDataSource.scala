@@ -242,62 +242,69 @@ class NetcdfScan(spec: NetcdfSpec, required: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new NetcdfReaderFactory(spec, required.fieldNames)
+    new NetcdfReaderFactory(spec, required)
 }
 
 case class NetcdfInputPartition(rowLo: Int, rowHi: Int) extends InputPartition
 
-class NetcdfReaderFactory(spec: NetcdfSpec, cols: Array[String])
+class NetcdfReaderFactory(spec: NetcdfSpec, required: StructType)
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val band = p.asInstanceOf[NetcdfInputPartition]
     new PartitionReader[InternalRow] {
+      private val cells = new CellRow(required)
+      private val (latO, lonO) =
+        (cells.ordinal("latitude"), cells.ordinal("longitude"))
       // one open handle per DISTINCT file (multi-var single-file scans
       // share one); column pruning skips whole variables AND whole files
       private val neededIdx: Seq[Int] =
-        spec.outCols.indices.filter(k => cols.contains(spec.outCols(k)))
+        spec.outCols.indices.filter(k => cells.ordinal(spec.outCols(k)) >= 0)
       private val files =
         scala.collection.mutable.LinkedHashMap.empty[String, graft.sources.nc.NcFormat.Reader]
       private def fileFor(p0: String) =
         files.getOrElseUpdate(p0, graft.sources.nc.NcFormat.open(p0))
-      private val needLat = cols.contains("latitude")
-      private val needLon = cols.contains("longitude")
       private def coordFile = fileFor(spec.paths.head)
       private val lats: Array[Double] =
-        if (needLat) coordFile.readDoubles(spec.latVar) else null
+        if (latO >= 0) coordFile.readDoubles(spec.latVar) else null
       private val lons: Array[Double] =
-        if (needLon) coordFile.readDoubles(spec.lonVar) else null
+        if (lonO >= 0) coordFile.readDoubles(spec.lonVar) else null
       private val nLon = coordFile.varDims(spec.varNames.head)(1).toInt
-      // the same row band from every needed input, read once, aligned
-      private val bands: Map[String, (ByteBuffer, Int)] = neededIdx.map { k =>
+      // the same row band from every needed input, read once, aligned:
+      // value column v goes to ordinal vOrd(v) from vBuf(v), whose
+      // elements are floats when vF4(v), doubles otherwise
+      private val vOrd = neededIdx.map(k => cells.ordinal(spec.outCols(k))).toArray
+      private val (vBuf, vF4) = neededIdx.map { k =>
         val f = fileFor(spec.paths(k))
         val buf = ByteBuffer.wrap(
           f.readRowBand(spec.varNames(k), band.rowLo, band.rowHi))
           .order(if (f.littleEndian) ByteOrder.LITTLE_ENDIAN
             else ByteOrder.BIG_ENDIAN)
-        spec.outCols(k) -> (buf, f.varElemSize(spec.varNames(k)))
-      }.toMap
+        (buf, f.varElemSize(spec.varNames(k)) == 4)
+      }.toArray.unzip
 
       private var i = band.rowLo
       private var j = -1
+      private var cell = -1 // (i - rowLo) * nLon + j
 
       override def next(): Boolean = {
         j += 1
         if (j >= nLon) { j = 0; i += 1 }
+        cell += 1
         i < band.rowHi
       }
 
       override def get(): InternalRow = {
-        val vals: Array[Any] = cols.map {
-          case "latitude" => lats(i)
-          case "longitude" => lons(j)
-          case c =>
-            val (buf, elemSize) = bands(c)
-            val off = ((i - band.rowLo).toLong * nLon + j).toInt * elemSize
-            if (elemSize == 4) buf.getFloat(off)
-            else buf.getDouble(off).toFloat
+        val out = cells.row
+        if (latO >= 0) out.setDouble(latO, lats(i))
+        if (lonO >= 0) out.setDouble(lonO, lons(j))
+        var v = 0
+        while (v < vOrd.length) {
+          out.setFloat(vOrd(v),
+            if (vF4(v)) vBuf(v).getFloat(cell * 4)
+            else vBuf(v).getDouble(cell * 8).toFloat)
+          v += 1
         }
-        InternalRow.fromSeq(vals.toIndexedSeq)
+        out
       }
 
       override def close(): Unit = files.values.foreach(_.close())

@@ -4,6 +4,7 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -64,24 +65,24 @@ class ZarrTable(props: Map[String, String]) extends Table with SupportsRead {
     tVar = props.getOrElse("tvar", "time"),
     keepNaN = props.getOrElse("keepnan", "false").toBoolean)
   override def name(): String = s"graft_zarr(${spec.store}#${spec.varName})"
-  // schema depends on the variable's rank — one metadata read at planning
-  override def schema(): StructType = {
-    val conf = org.apache.spark.sql.SparkSession.active
-      .sparkContext.hadoopConfiguration
-    val meta = ZarrStore.readMeta(conf, s"${spec.store}/${spec.varName}")
-    meta.shape.length match {
-      case 2 => ZarrDataSource.Schema
-      case 3 => ZarrDataSource.Schema3
-      case n => sys.error(s"${spec.varName}: $n-D arrays unsupported (need 2 or 3)")
-    }
+  // the variable's metadata, read once at planning: it fixes the schema
+  // (rank) and travels with every input partition
+  private lazy val meta = ZarrStore.readMeta(
+    org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration,
+    s"${spec.store}/${spec.varName}")
+  private lazy val full: StructType = meta.shape.length match {
+    case 2 => ZarrDataSource.Schema
+    case 3 => ZarrDataSource.Schema3
+    case n => sys.error(s"${spec.varName}: $n-D arrays unsupported (need 2 or 3)")
   }
+  override def schema(): StructType = full
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ).asJava
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ZarrScanBuilder(spec, schema())
+    new ZarrScanBuilder(spec, meta, full)
 }
 
-class ZarrScanBuilder(spec: ZarrSpec, full: StructType)
+class ZarrScanBuilder(spec: ZarrSpec, meta: ZarrStore.ArrayMeta, full: StructType)
     extends ScanBuilder
     with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters {
@@ -122,10 +123,10 @@ class ZarrScanBuilder(spec: ZarrSpec, full: StructType)
   override def pushedFilters(): Array[sources.Filter] = accepted
 
   override def build(): Scan =
-    new ZarrScan(spec, required, latLo, latHi, tLo, tHi)
+    new ZarrScan(spec, meta, required, latLo, latHi, tLo, tHi)
 }
 
-class ZarrScan(spec: ZarrSpec, required: StructType,
+class ZarrScan(spec: ZarrSpec, meta: ZarrStore.ArrayMeta, required: StructType,
     latLo: Double, latHi: Double, tLo: Double, tHi: Double)
     extends Scan with Batch {
   override def readSchema(): StructType = required
@@ -133,80 +134,76 @@ class ZarrScan(spec: ZarrSpec, required: StructType,
 
   override def description(): String = s"graft-zarr ${spec.store}#${spec.varName}"
 
+  private def sc = org.apache.spark.sql.SparkSession.active.sparkContext
+
   override def planInputPartitions(): Array[InputPartition] = {
-    val conf = org.apache.spark.sql.SparkSession.active
-      .sparkContext.hadoopConfiguration
-    val meta = ZarrStore.readMeta(conf, s"${spec.store}/${spec.varName}")
     val is3 = meta.shape.length == 3
     require(meta.shape.length == 2 || is3,
       s"${spec.varName} must be 2-D (lat, lon) or 3-D (t, lat, lon)")
     val latDim = if (is3) 1 else 0
     val lonDim = latDim + 1
-    val lats = ZarrStore.readVector(conf, s"${spec.store}/${spec.latVar}")
     val nChunkT = if (is3) (meta.shape(0) + meta.chunks(0) - 1) / meta.chunks(0) else 1
     val nChunkRows = (meta.shape(latDim) + meta.chunks(latDim) - 1) / meta.chunks(latDim)
     val nChunkCols = (meta.shape(lonDim) + meta.chunks(lonDim) - 1) / meta.chunks(lonDim)
-    // chunk-row pruning from the coordinate vector (with one whole row
-    // of slack each side — magnitude-safe; filters are residual)
-    val keepRow: Int => Boolean =
-      if (!latLo.isFinite && !latHi.isFinite) _ => true
+    // chunk pruning along axis `dim` from its coordinate vector `coord`,
+    // read only when a bound was pushed (one whole cell of slack each
+    // side — magnitude-safe; filters are residual)
+    def keep(dim: Int, coord: String, lo0: Double, hi0: Double): Int => Boolean =
+      if (!lo0.isFinite && !hi0.isFinite) _ => true
       else {
-        val idx = lats.indices.filter(i => lats(i) >= latLo && lats(i) <= latHi)
+        val xs = ZarrStore.readVector(sc.hadoopConfiguration, s"${spec.store}/$coord")
+        val idx = xs.indices.filter(i => xs(i) >= lo0 && xs(i) <= hi0)
         if (idx.isEmpty) _ => false
         else {
           val lo = math.max(idx.min - 1, 0)
-          val hi = math.min(idx.max + 1, lats.length - 1)
-          cr => cr * meta.chunks(latDim) <= hi &&
-            (cr + 1) * meta.chunks(latDim) - 1 >= lo
+          val hi = math.min(idx.max + 1, xs.length - 1)
+          c => c * meta.chunks(dim) <= hi && (c + 1) * meta.chunks(dim) - 1 >= lo
         }
       }
-    // t-plane pruning mirrors the latitude logic (chunk slack, residual)
+    val keepRow = keep(latDim, spec.latVar, latLo, latHi)
     val keepT: Int => Boolean =
-      if (!is3 || (!tLo.isFinite && !tHi.isFinite)) _ => true
-      else {
-        val ts = ZarrStore.readVector(conf, s"${spec.store}/${spec.tVar}")
-        val idx = ts.indices.filter(i => ts(i) >= tLo && ts(i) <= tHi)
-        if (idx.isEmpty) _ => false
-        else {
-          val lo = math.max(idx.min - 1, 0)
-          val hi = math.min(idx.max + 1, ts.length - 1)
-          ct => ct * meta.chunks(0) <= hi && (ct + 1) * meta.chunks(0) - 1 >= lo
-        }
-      }
+      if (is3) keep(0, spec.tVar, tLo, tHi) else _ => true
     (for {
       ct <- 0 until nChunkT
       if keepT(ct)
       cr <- 0 until nChunkRows
       if keepRow(cr)
       cc <- 0 until nChunkCols
-    } yield (if (is3) ZarrInputPartition(Seq(ct, cr, cc))
-      else ZarrInputPartition(Seq(cr, cc))): InputPartition).toArray
+    } yield ZarrInputPartition(if (is3) Seq(ct, cr, cc) else Seq(cr, cc), meta)
+      : InputPartition).toArray
   }
 
+  /** The Hadoop conf goes to the executors once, as a broadcast, not
+    * inside every task.
+    */
   override def createReaderFactory(): PartitionReaderFactory =
-    new ZarrReaderFactory(spec, required.fieldNames,
-      new SerializableConfiguration(org.apache.spark.sql.SparkSession.active
-        .sparkContext.hadoopConfiguration))
+    new ZarrReaderFactory(spec, required,
+      sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration)))
 }
 
-case class ZarrInputPartition(chunkIdx: Seq[Int]) extends InputPartition
+case class ZarrInputPartition(chunkIdx: Seq[Int], meta: ZarrStore.ArrayMeta)
+    extends InputPartition
 
-class ZarrReaderFactory(spec: ZarrSpec, cols: Array[String],
-    conf: SerializableConfiguration) extends PartitionReaderFactory {
+class ZarrReaderFactory(spec: ZarrSpec, required: StructType,
+    conf: Broadcast[SerializableConfiguration]) extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val part = p.asInstanceOf[ZarrInputPartition]
+    val meta = part.meta
     new PartitionReader[InternalRow] {
-      private val hconf = conf.value
-      private val arrayDir = s"${spec.store}/${spec.varName}"
-      private val meta = ZarrStore.readMeta(hconf, arrayDir)
+      private val hconf = conf.value.value
+      private val cells = new CellRow(required)
+      private val (tO, latO, lonO, vO) = (cells.ordinal("t"),
+        cells.ordinal("latitude"), cells.ordinal("longitude"), cells.ordinal("value"))
+      // a coordinate vector is read only when its column is required
+      private def coord(o: Int, name: String): Array[Double] =
+        if (o >= 0) ZarrStore.readVector(hconf, s"${spec.store}/$name") else null
+      private val ts = coord(tO, spec.tVar)
+      private val lats = coord(latO, spec.latVar)
+      private val lons = coord(lonO, spec.lonVar)
       private val is3 = meta.shape.length == 3
       private val latDim = if (is3) 1 else 0
-      private val lats = ZarrStore.readVector(hconf, s"${spec.store}/${spec.latVar}")
-      private val lons = ZarrStore.readVector(hconf, s"${spec.store}/${spec.lonVar}")
-      private val ts: Array[Double] =
-        if (is3) ZarrStore.readVector(hconf, s"${spec.store}/${spec.tVar}")
-        else null
-      private val chunk = ZarrStore.readChunk(hconf, arrayDir, meta, part.chunkIdx)
+      private val chunk = ZarrStore.readChunk(hconf,
+        s"${spec.store}/${spec.varName}", meta, part.chunkIdx)
       private val tLo = if (is3) part.chunkIdx(0) * meta.chunks(0) else 0
       private val rowLo = part.chunkIdx(latDim) * meta.chunks(latDim)
       private val colLo = part.chunkIdx(latDim + 1) * meta.chunks(latDim + 1)
@@ -216,35 +213,34 @@ class ZarrReaderFactory(spec: ZarrSpec, cols: Array[String],
         meta.shape(latDim) - rowLo)
       private val wClip = math.min(meta.chunks(latDim + 1),
         meta.shape(latDim + 1) - colLo)
-      // chunk-local flat offset of clipped index k (row-major, with the
-      // chunk's own (possibly larger-than-clip) extents)
-      private def off(k: Int): Int = {
-        val c = k % wClip
-        val r = (k / wClip) % hClip
-        val t = k / (wClip * hClip)
-        (t * meta.chunks(latDim) + r) * meta.chunks(latDim + 1) + c
-      }
-      private val total = tClip * hClip * wClip
-      private var k = -1
+      private val (chunkRows, chunkCols) =
+        (meta.chunks(latDim), meta.chunks(latDim + 1))
+      // the current cell (t, r, c) of the clipped chunk, and its flat
+      // offset in the chunk's own (possibly larger-than-clip) extents
+      private var t = if (hClip > 0 && wClip > 0) 0 else tClip
+      private var r = 0
+      private var c = -1
+      private var off = -1
 
       override def next(): Boolean = {
-        k += 1
-        if (!spec.keepNaN) {
-          while (k < total && chunk(off(k)).isNaN) k += 1
-        }
-        k < total
+        do {
+          c += 1
+          if (c == wClip) {
+            c = 0; r += 1
+            if (r == hClip) { r = 0; t += 1 }
+          }
+          off = (t * chunkRows + r) * chunkCols + c
+        } while (t < tClip && !spec.keepNaN && chunk(off).isNaN)
+        t < tClip
       }
 
       override def get(): InternalRow = {
-        val c = k % wClip
-        val r = (k / wClip) % hClip
-        val t = k / (wClip * hClip)
-        InternalRow.fromSeq(cols.toIndexedSeq.map {
-          case "t" => ts(tLo + t)
-          case "latitude" => lats(rowLo + r)
-          case "longitude" => lons(colLo + c)
-          case "value" => chunk(off(k))
-        })
+        val out = cells.row
+        if (tO >= 0) out.setDouble(tO, ts(tLo + t))
+        if (latO >= 0) out.setDouble(latO, lats(rowLo + r))
+        if (lonO >= 0) out.setDouble(lonO, lons(colLo + c))
+        if (vO >= 0) out.setDouble(vO, chunk(off))
+        out
       }
 
       override def close(): Unit = ()

@@ -179,24 +179,33 @@ object ZarrStore {
       dtype, zlib, fill)
   }
 
-  /** Raw little-endian bytes → doubles for `n` elements of `dtype`. */
-  private def decodeRaw(raw: Array[Byte], dtype: String, n: Int): Array[Double] = {
-    val out = new Array[Double](n)
+  /** Raw little-endian bytes → doubles: the first `n` elements of
+    * `dtype` decoded into `out(0 until n)`, one typed loop per dtype.
+    */
+  private def decodeRaw(raw: Array[Byte], dtype: String, n: Int,
+      out: Array[Double], path: String): Unit = {
+    require(raw.length.toLong >= n.toLong * elemSize(dtype),
+      s"$path: chunk holds ${raw.length} of ${n.toLong * elemSize(dtype)} bytes")
     val bb = ByteBuffer.wrap(raw).order(ByteOrder.LITTLE_ENDIAN)
     var k = 0
-    while (k < n) {
-      out(k) = dtype.drop(1) match {
-        case "f8" => bb.getDouble(k * 8)
-        case "f4" => bb.getFloat(k * 4).toDouble
-        case "i8" => bb.getLong(k * 8).toDouble
-        case "i4" => bb.getInt(k * 4).toDouble
-        case "i2" => bb.getShort(k * 2).toDouble
-        case "u1" => (raw(k) & 0xFF).toDouble
-        case d => sys.error(s"dtype $d unsupported")
-      }
-      k += 1
+    dtype.substring(1) match {
+      case "f8" => bb.asDoubleBuffer().get(out, 0, n)
+      case "f4" =>
+        val b = bb.asFloatBuffer()
+        while (k < n) { out(k) = b.get(k).toDouble; k += 1 }
+      case "i8" =>
+        val b = bb.asLongBuffer()
+        while (k < n) { out(k) = b.get(k).toDouble; k += 1 }
+      case "i4" =>
+        val b = bb.asIntBuffer()
+        while (k < n) { out(k) = b.get(k).toDouble; k += 1 }
+      case "i2" =>
+        val b = bb.asShortBuffer()
+        while (k < n) { out(k) = b.get(k).toDouble; k += 1 }
+      case "u1" =>
+        while (k < n) { out(k) = (raw(k) & 0xFF).toDouble; k += 1 }
+      case d => sys.error(s"dtype $d unsupported")
     }
-    out
   }
 
   private def inflateZlib(raw0: Array[Byte], outLen: Int, path: String): Array[Byte] = {
@@ -249,23 +258,32 @@ object ZarrStore {
       if (meta.v3) s"$arrayDir/${("c" +: chunkIdx.map(_.toString)).mkString(meta.sep)}"
       else s"$arrayDir/${chunkIdx.mkString(".")}"
     val out = new Array[Double](nElems)
-    if (!fs(conf, path).exists(new Path(path))) {
-      java.util.Arrays.fill(out, meta.fillValue)
-      return out
-    }
-    val raw0 = readFile(conf, path)
-    meta.shard match {
-      case Some(shard) => readShard(raw0, meta, shard, path, out)
-      case None =>
-        val raw =
-          if (meta.zlib) inflateZlib(raw0, nElems * es, path)
-          else if (meta.gzip) gunzip(raw0, nElems * es, path)
-          else raw0
-        val vals = decodeRaw(raw, meta.dtype, nElems)
-        System.arraycopy(vals, 0, out, 0, nElems)
+    readIfPresent(conf, path) match {
+      case None => java.util.Arrays.fill(out, meta.fillValue)
+      case Some(raw0) => meta.shard match {
+        case Some(shard) => readShard(raw0, meta, shard, path, out)
+        case None =>
+          val raw =
+            if (meta.zlib) inflateZlib(raw0, nElems * es, path)
+            else if (meta.gzip) gunzip(raw0, nElems * es, path)
+            else raw0
+          decodeRaw(raw, meta.dtype, nElems, out, path)
+      }
     }
     out
   }
+
+  /** The bytes of the file at `path` in one open, or None when it does
+    * not exist (a chunk never written is all fill). A path that exists
+    * but cannot be opened as a file, such as a directory, still fails.
+    */
+  private def readIfPresent(conf: Configuration, path: String): Option[Array[Byte]] =
+    try Some(readFile(conf, path))
+    catch {
+      case e: java.io.FileNotFoundException =>
+        if (fs(conf, path).exists(new Path(path))) throw e
+        None
+    }
 
   /** Assemble a v3 shard: parse the (offset, nbytes) uint64-pair index
     * (little-endian, optional trailing crc32c, at end or start), decode
@@ -294,6 +312,7 @@ object ZarrStore {
     val idx = ByteBuffer.wrap(bytes, idxOff, nInner * 16)
       .order(ByteOrder.LITTLE_ENDIAN)
     val innerElems = shard.inner.product
+    val vals = new Array[Double](innerElems)
     java.util.Arrays.fill(out, meta.fillValue)
     var k = 0
     while (k < nInner) {
@@ -307,7 +326,7 @@ object ZarrStore {
         val raw =
           if (shard.innerGzip) gunzip(raw0, innerElems * es, s"$path#$k")
           else raw0
-        val vals = decodeRaw(raw, meta.dtype, innerElems)
+        decodeRaw(raw, meta.dtype, innerElems, vals, s"$path#$k")
         // place inner chunk k (row-major over innerGrid) into the outer
         meta.chunks match {
           case Seq(_) =>

@@ -146,7 +146,7 @@ object FileReplay {
   /** The progress events of a session's queries, collected as they
     * arrive on the listener bus.
     */
-  private final class ProgressLog
+  private[graft] final class ProgressLog
       extends org.apache.spark.sql.streaming.StreamingQueryListener {
     import org.apache.spark.sql.streaming.StreamingQueryListener._
     import org.apache.spark.sql.streaming.StreamingQueryProgress
@@ -161,30 +161,37 @@ object FileReplay {
       notifyAll()
     }
 
-    /** One line per batch of run `runId`, in batch order. The bus hands
-      * a query's events over in order, the terminated one last, so once
-      * that is in, so are all its batches.
+    /** Every batch's progress of run `runId`, in batch order, and
+      * whether the run's terminated event came in within 30 s. The bus
+      * hands a query's events over in order, the terminated one last, so
+      * once that is in, so are all its batches.
       */
-    def of(runId: java.util.UUID): Seq[String] = {
+    def progress(runId: java.util.UUID): (Seq[StreamingQueryProgress], Boolean) = {
       val complete = synchronized {
         val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
         while (!ended(runId) && System.nanoTime() < deadline)
           wait(math.max(1L, (deadline - System.nanoTime()) / 1000000))
         ended(runId)
       }
-      val batches = events.iterator().asScala.filter(_.runId == runId)
-        .toSeq.sortBy(_.batchId).map { p =>
-          val d = p.durationMs
-          val st = p.stateOperators.headOption.map(o =>
-            s" stateRows=${o.numRowsTotal} updated=${o.numRowsUpdated}" +
-              s" updMs=${o.allUpdatesTimeMs} commitMs=${o.commitTimeMs}" +
-              s" memUsed=${o.memoryUsedBytes}").getOrElse("")
-          s"[stream] batch=${p.batchId} rows=${p.numInputRows} " +
-            s"triggerMs=${d.get("triggerExecution")} " +
-            s"addBatchMs=${d.get("addBatch")} " +
-            s"getBatchMs=${d.get("getBatch")} " +
-            s"planMs=${d.get("queryPlanning")}$st"
-        }
+      (events.iterator().asScala.filter(_.runId == runId).toSeq.sortBy(_.batchId),
+        complete)
+    }
+
+    /** One line per batch of run `runId`, in batch order. */
+    def of(runId: java.util.UUID): Seq[String] = {
+      val (progress, complete) = this.progress(runId)
+      val batches = progress.map { p =>
+        val d = p.durationMs
+        val st = p.stateOperators.headOption.map(o =>
+          s" stateRows=${o.numRowsTotal} updated=${o.numRowsUpdated}" +
+            s" updMs=${o.allUpdatesTimeMs} commitMs=${o.commitTimeMs}" +
+            s" memUsed=${o.memoryUsedBytes}").getOrElse("")
+        s"[stream] batch=${p.batchId} rows=${p.numInputRows} " +
+          s"triggerMs=${d.get("triggerExecution")} " +
+          s"addBatchMs=${d.get("addBatch")} " +
+          s"getBatchMs=${d.get("getBatch")} " +
+          s"planMs=${d.get("queryPlanning")}$st"
+      }
       if (complete) batches
       else batches :+ "[stream] no terminated event within 30 s: later batches may be missing"
     }

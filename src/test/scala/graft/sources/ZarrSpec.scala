@@ -162,4 +162,26 @@ class ZarrSpec extends SparkSpec {
     // and the store round-trips the CHUNK layout (9 files)
     assert(back.rdd.getNumPartitions == 9)
   }
+
+  test("a missing chunk reads as fill; a chunk that is a directory fails loudly") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val lats = Array.tabulate(6)(i => 40.0 - i)
+    val lons = Array.tabulate(6)(j => 5.0 + j)
+    val cells = for (i <- lats.indices; j <- lons.indices)
+      yield (lats(i), lons(j), (i * 6 + j).toDouble)
+    val out = java.nio.file.Files.createTempDirectory("graft-zarr-missing").toString
+    ZarrStore.writeGrid(cells.toDF("latitude", "longitude", "value"), out, "v",
+      "latitude", "longitude", "value", lats, lons, chunkRows = 3, chunkCols = 3)
+    val meta = ZarrStore.readMeta(conf, s"$out/v")
+    val chunk = java.nio.file.Paths.get(s"$out/v/1.0")
+    java.nio.file.Files.delete(chunk)
+    assert(ZarrStore.readChunk(conf, s"$out/v", meta, Seq(1, 0)).forall(_.isNaN))
+    def load() = spark.read.format("graft-zarr").option("path", out)
+      .option("var", "v").load().as[(Double, Double, Double)].collect().toSet
+    assert(load() == cells.filterNot { case (la, lo, _) => la <= 37.0 && lo <= 7.0 }.toSet)
+    java.nio.file.Files.createDirectory(chunk)
+    val e = intercept[Exception](ZarrStore.readChunk(conf, s"$out/v", meta, Seq(1, 0)))
+    assert(e.getMessage.contains("1.0"), e.getMessage)
+    intercept[Exception](load())
+  }
 }
