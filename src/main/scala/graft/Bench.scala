@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Session
 import graft.queries.Registry
 
 /** Benchmark main: times the headline queries on SPARK_GRAFT_SF_DIR and
@@ -14,9 +15,13 @@ object Bench {
     * cannot prune away result-producing work (a bare `count()` lets the
     * optimizer drop final projections — e.g. WKT string synthesis — and
     * under-measure). `bit_xor` keeps the fold overflow-free under ANSI.
+    * Returns the checksum (0 for an empty frame).
     */
-  def materialize(df: DataFrame): Unit =
-    df.agg(bit_xor(xxhash64(df.columns.map(col).toIndexedSeq: _*))).collect()
+  def materialize(df: DataFrame): Long = {
+    val r = df.agg(bit_xor(xxhash64(df.columns.map(col).toIndexedSeq: _*)))
+      .collect()(0)
+    if (r.isNullAt(0)) 0L else r.getLong(0)
+  }
 
   /** Sums task metrics across the whole app; queries run sequentially,
     * so the before/after delta around one pass IS that query's I/O.
@@ -43,73 +48,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Parallelism floors for compute-dense-per-byte stages (r20 opt
-      // round, measured): the curation/dedup kernels (tokenize + 64-hash
-      // MinHash + gram builds) are orders of magnitude more CPU per byte
-      // than a relational scan, and BOTH default floors collapsed them to
-      // 1-2 tasks at sf0.1 — AQE coalesces post-shuffle partitions down
-      // to minPartitionSize (default 1m > the whole shuffled corpus), and
-      // FilePartition floors the input split at openCostInBytes (default
-      // 4m > the whole parquet file). q147 2.2→1.5 s, q214 2.9→1.9 s,
-      // q47 0.9→0.6 s; all 22 plan hashes bit-identical (runtime-only).
-      // Scale posture: both floors are inert at cluster scale (any
-      // partition over 64 KB / input split over ~4 MB behaves as before);
-      // they matter exactly when a heavy kernel sits downstream of a
-      // small-byte stage — tiny-SF benches and post-filter tails alike.
-      // Env-overridable so the driver's lower-core runs stay comparable.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"))
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", "131072"))
-      // ObjectHashAggregate falls back to SORT-based aggregation past a
-      // GROUP-COUNT threshold whose default (128) is pathologically
-      // conservative for the flood ensemble aggregations: q60 groups
-      // ~8k grid cells whose collect_list buffers total exactly the
-      // partition's input bytes either way, but the fallback pays a
-      // full per-partition sort + per-group buffer ser/deser (measured:
-      // q60 1.84 → 1.00 s at sf0.1). Memory posture at scale: hash-mode
-      // object buffers are bounded by the partition's own value bytes —
-      // the same bytes the sort buffer would hold — so the group-count
-      // cap is the wrong guard for value-accumulating buffers; 64k
-      // groups keeps a sane cap for genuinely huge-cardinality keys.
-      // SEMANTICS PRECONDITION (r20 advice): hash mode and the sort
-      // fallback can feed an object-agg buffer its within-group rows in
-      // DIFFERENT orders, and Verify (the oracle-checked session)
-      // deliberately omits this floor — so every headline object-agg
-      // buffer must be ORDER-INSENSITIVE (current set: collect_list is
-      // array_sort'ed downstream in FloodOps, sketch buffers are
-      // commutative). Re-checked r21 by a full Verify pass at sf0.01
-      // with SPARK_GRAFT_CONF setting this same floor: value-equal.
-      // The promotion-time rule lives at queries/Q.scala.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OHA_FALLBACK", "65536"))
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
-      .getOrCreate()
-    // SPARK_GRAFT_CONF="k=v;k2=v2": extra SQL confs for measurement
-    // experiments (A/B of a single runtime conf without recompiling).
-    // Values containing ';' are unrepresentable (the separator). A
-    // static/non-runtime conf throws from conf.set — log and continue;
-    // this is a diagnostics hook and must never kill the bench run.
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.nonEmpty =>
-          try spark.conf.set(k.trim, v.trim)
-          catch {
-            case scala.util.control.NonFatal(e) =>
-              System.err.println(s"[bench] SPARK_GRAFT_CONF skipped $k: $e")
-          }
-        case _ => ()
-      }
-    })
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(confs = Session.headline)
 
     // SPARK_GRAFT_ONLY=q47_kmv_sketch,q60_flood_detailed → time just those
     // (iterating on one query without paying for the whole suite)
@@ -184,25 +123,6 @@ object Bench {
       .getOrElse(3)
     val io = new IoListener
     spark.sparkContext.addSparkListener(io)
-    // SPARK_GRAFT_STAGE_DEBUG=1: print every completed stage over ~50 ms
-    // to stderr (guide §1 — decide WHERE a slow query spends its time
-    // before touching it). Opt-in diagnostics; stdout contract unchanged.
-    if (sys.env.contains("SPARK_GRAFT_STAGE_DEBUG"))
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              e: org.apache.spark.scheduler.SparkListenerStageCompleted)
-              : Unit = {
-            val si = e.stageInfo
-            val ms = (for {
-              a <- si.completionTime; b <- si.submissionTime
-            } yield a - b).getOrElse(-1L)
-            if (ms >= 50)
-              System.err.println(
-                f"[stage] ${ms / 1000.0}%6.2fs tasks=${si.numTasks}%4d " +
-                  s"${si.name.takeWhile(_ != '\n').take(110)}")
-          }
-        })
     // a failing query must surface as status=err and a nonzero exit,
     // never as a silently-near-zero timing
     val results = targets.map { q =>

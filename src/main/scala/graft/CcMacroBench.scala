@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.core.Session
 import graft.operators.ConnectedComponents
 
 /** Connected-components macro: label propagation at data scale, with a
@@ -27,14 +27,7 @@ object CcMacroBench {
       .headOption.map(_.toLong).getOrElse(10000000L)
     require(n % 10 == 0, "n must be a multiple of 10")
     val pathLen = 10000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toInt)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session()
 
     val stars = spark.range(n).filter(col("id") % 10 =!= 0)
       .select((col("id") - col("id") % 10).as("src"), col("id").as("dst"))

@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.core.Session
 import graft.operators.DeforestationPipeline
 
 /** Macro benchmark for the deforestation pipeline at a GFC-tile-like
@@ -16,14 +16,7 @@ object DeforestationMacroBench {
   def main(args: Array[String]): Unit = {
     val nPx = args.headOption.map(_.toInt).getOrElse(14142)
     val basinsPerSide = args.drop(1).headOption.map(_.toInt).getOrElse(30)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", (cpus.toInt * 4).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(partitionsPerCpu = 4)
 
     val res = 0.00025 // GFC ~30m pixels in degrees
     // pixel raster: x/y coordinates on a 10°-tile-like grid, lossyear 0..22

@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.core.Session
 import graft.operators.Similarity
 
 /** Embedding near-dup dedup macro: banded hyperplane LSH at corpus
@@ -20,14 +20,7 @@ object EmbeddingDedupMacroBench {
     val bands = args.drop(1).headOption.map(_.toInt).getOrElse(8)
     val bits = args.drop(2).headOption.map(_.toInt).getOrElse(20)
     val nDups = n / 50
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", (cpus.toInt * 2).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(partitionsPerCpu = 2)
 
     // originals: uniform hash noise in [-0.5, 0.5)^64 (spread corpus —
     // the realistic text-embedding dedup shape)

@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
+import graft.core.Session
 import graft.queries.Registry
 
 /** Plan inspector: prints the formatted physical plan of the named
@@ -13,20 +12,9 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names =
       if (args.length > 1) args.tail.toSeq else Registry.headlines.map(_.name)
-    // Mirror Bench's session config (cpus, shuffle partitions, broadcast
-    // threshold) so the dumped plans are the plans the bench actually
-    // times — a 10 MB default broadcast threshold here would show
-    // SortMergeJoins the 64 MB bench never runs.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // Bench's session, so the dumped plans are the plans the bench
+    // actually times.
+    val spark = Session(confs = Session.headline)
     // SPARK_GRAFT_PLAN_OUT=<dir> additionally writes each query's
     // formatted plan to <dir>/<name>.txt (the OPTIMIZATION_r{N}
     // before/after evidence files).

@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.core.Session
 import graft.operators.FloodPipeline
 
 /** Macro benchmark: the flood `forecast` job at the reference's REAL
@@ -20,26 +20,17 @@ object FloodMacroBench {
   def main(args: Array[String]): Unit = {
     val members = args.headOption.map(_.toInt).getOrElse(51)
     val steps = args.drop(1).headOption.map(_.toInt).getOrElse(30)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // at full size the quantile groupBy shuffles ~40 GB through an
-      // 8 GB heap: more, smaller partitions keep each sort run in memory
-      // (spill-aware sizing, overridable for experiments)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", (cpus.toInt * 12).toString))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // at full size the quantile groupBy shuffles ~40 GB through an
+    // 8 GB heap: more, smaller partitions keep each sort run in memory
+    // (spill-aware sizing)
+    val spark = Session(partitionsPerCpu = 12)
 
     val nLat = 460; val nLon = 1400 // 23° × 70° @ 0.05° (config.py:5-15)
     // read the ROI grid through the custom DSv2 source (partition-planned)
     val grid = spark.read.format("graft-grid")
       .option("latMax", 17.0).option("lonMin", -18.0).option("res", 0.05)
       .option("nLat", nLat).option("nLon", nLon)
-      .option("partitions", cpus.toInt * 2)
+      .option("partitions", Session.cpus * 2)
       .load()
 
     // Deterministic pseudo-random discharge per (cell, member, step):

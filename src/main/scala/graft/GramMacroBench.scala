@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.core.Session
 
 /** Large-dimension posture for the one-pass Gram/PCA aggregate
   * (q166/q181 run at d=64; production embeddings are d=512–4096, where
@@ -33,14 +34,7 @@ object GramMacroBench {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(200000L)
     val d = args.drop(1).headOption.map(_.toInt).getOrElse(512)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toInt)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session()
 
     val bufLen = 1 + d + d.toLong * (d + 1) / 2
     val bufMb = bufLen * 8.0 / 1e6

@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.core.Session
 import graft.operators.{Hits, KCore, LabelProp}
 
 /** Graph-family macro at 10M-edge scale with CLOSED-FORM gates —
@@ -56,14 +56,7 @@ object GraphMacroBench {
     val depth = args.drop(1).headOption.map(_.toInt).getOrElse(11)
     val nTri = args.drop(2).headOption.map(_.toLong).getOrElse(1000000L)
     val rounds = 8
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toInt)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session()
 
     // ---------------- HITS on the bidirectional star ------------------
     val leaves = spark.range(1, n + 1)

@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.core.Session
 import graft.operators.KCenter
 
 /** Batched k-center at production coreset scale (round-15; the r14
@@ -30,14 +30,7 @@ object KCenterMacroBench {
     val k = args.drop(1).headOption.map(_.toInt).getOrElse(1024)
     val m = args.drop(2).headOption.map(_.toInt).getOrElse(64)
     val dim = 16
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toInt)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session()
 
     val pts = spark.range(n).select(col("id"),
       expr(s"transform(sequence(1, $dim), d -> " +

@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.core.Session
 import graft.operators.PageRank
 
 /** PageRank macro: 8 exact-integer rounds at edge-list scale with a
@@ -32,14 +32,7 @@ object PageRankMacroBench {
     val n = args.headOption.map(_.toLong).getOrElse(5000000L)
     val rounds = 8
     val scale = 1000000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toInt)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session()
 
     // center = node 0; leaves = 1..n
     val leaves = spark.range(1, n + 1)

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.core.Session
 
 /** sf1-scale verification of the PQ-training family (q157 PQ/ADC, q159
   * k-means|| init, q160 IVFADC) — the last three sf1 oracle exclusions
@@ -48,14 +49,7 @@ object PqReplayBench {
 
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(20000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toInt)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session()
 
     // ---- fixture: hash-derived floats, labels 0..15 -------------------
     val dir = new java.io.File(sys.props("java.io.tmpdir"),

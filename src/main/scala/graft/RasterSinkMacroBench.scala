@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.core.Session
 import graft.sources.nc.Hdf5Writer
 import graft.sources.tiff.TiffWriter
 
@@ -18,14 +18,7 @@ object RasterSinkMacroBench {
     val withOverviews = args.contains("--overviews")
     val n = args.filterNot(_.startsWith("--"))
       .headOption.map(_.toInt).getOrElse(4000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toInt)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session()
 
     val lats = Array.tabulate(n)(i => 80.0 - i * 0.025)
     val lons = Array.tabulate(n)(j => -100.0 + j * 0.025)
@@ -53,7 +46,7 @@ object RasterSinkMacroBench {
     val (ncRows, ncReadSec) = time {
       spark.read.format("graft-netcdf")
         .option("path", ncPath).option("var", "v")
-        .option("partitions", cpus).load()
+        .option("partitions", Session.cpus).load()
         .filter(!isnan(col("value"))).count()
     }
 

@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Session
 import graft.streaming.{FileReplay, StateRebake, StreamDedup}
 
 /** At-scale record for the STATE-ROTATION lifecycle (r18 verdict item
@@ -51,14 +52,7 @@ object RebakeMacroBench {
     val nCorpus = args.headOption.map(_.toLong).getOrElse(500000L)
     val nDelta = args.drop(1).headOption.map(_.toLong).getOrElse(50000L)
     require(nDelta % 100 == 0 && nDelta >= 200, s"nDelta=$nDelta")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toInt)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session()
     import spark.implicits._
 
     val C = nCorpus

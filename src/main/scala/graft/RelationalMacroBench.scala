@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Sql
+import graft.core.{Session, Sql}
 
 /** 10× scale-step guard for the three most expensive relational headline
   * shapes (q01 grouped exact quantiles, q04 broadcast join + decimal
@@ -40,12 +40,6 @@ object RelationalMacroBench {
       (pmod(xxhash64(col("id"), lit(6)), lit(900)) + 100.0).as("t2"),
       (pmod(xxhash64(col("id"), lit(7)), lit(900)) + 400.0).as("t5"),
       (pmod(xxhash64(col("id"), lit(8)), lit(900)) + 700.0).as("t20"))
-
-  private def materialize(df: DataFrame): Long = {
-    val r = df.agg(bit_xor(xxhash64(df.columns.map(col).toIndexedSeq: _*)))
-      .collect()(0)
-    if (r.isNullAt(0)) 0L else r.getLong(0)
-  }
 
   /** q01 shape: grouped exact quantiles + decimal sum/avg, 6 groups. */
   private def quantiles(f: DataFrame): DataFrame =
@@ -90,15 +84,7 @@ object RelationalMacroBench {
 
   def main(args: Array[String]): Unit = {
     val factor = args.headOption.map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toInt)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session(confs = Seq(Session.broadcast64m))
 
     val base = 600000L // sf0.1 lineitem row count
     val dimBase = 20000L
@@ -110,11 +96,11 @@ object RelationalMacroBench {
       def time(body: => Unit): Double = {
         val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
       }
-      val tQ = time(materialize(quantiles(f)))
-      val tJ = time(materialize(joinAgg(f, d)))
+      val tQ = time(Bench.materialize(quantiles(f)))
+      val tJ = time(Bench.materialize(joinAgg(f, d)))
       val tF = time {
         val dfs = floodDetail(f, d)
-        dfs.init.foreach(materialize(_))
+        dfs.init.foreach(Bench.materialize(_))
         dfs.last.unpersist()
       }
       f.unpersist(); d.unpersist()

@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Session
 import graft.streaming.{FileReplay, StateRebake, StreamCuration, StreamDedup}
 
 /** POLICY-TRIGGERED state rotation at the REAL index scale (r19
@@ -50,17 +51,10 @@ object RotateCurationMacroBench {
     val nDelta = args.drop(1).headOption.map(_.toLong).getOrElse(300000L)
     val nBuckets = args.drop(2).headOption.map(_.toInt).getOrElse(12)
     val maxStateMb = args.drop(3).headOption.map(_.toLong).getOrElse(100L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toInt)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // compress the long-lived stream's snapshot timeline (doc above)
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "2s")
-      .config("spark.sql.streaming.stateStore.minDeltasForSnapshot", "3")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // compress the long-lived stream's snapshot timeline (doc above)
+    val spark = Session(confs = Seq(
+      "spark.sql.streaming.stateStore.maintenanceInterval" -> "2s",
+      "spark.sql.streaming.stateStore.minDeltasForSnapshot" -> "3"))
     import spark.implicits._
 
     val corpus = StreamCurationMacroBench
@@ -109,7 +103,7 @@ object RotateCurationMacroBench {
         .option("maxFilesPerTrigger", "1")
         .parquet(srcDir.getAbsolutePath)
       // the StreamCurationMacroBench pushdown barrier (r15)
-      val spread = stream.repartition(cpus.toInt)
+      val spread = stream.repartition(Session.cpus)
         .as[(Long, String)].map(identity).toDF("doc_id", "text")
       StreamCuration.curationStream(
           StreamCuration.curationRows(spread, "doc_id", "text", words), packed)

@@ -1,9 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Session
 import graft.operators.SemDedup
 
 /** SemDeDup macro arm (q144's shape at scale): Lloyd's k-means over a
@@ -54,15 +55,8 @@ object SemDedupMacroBench {
     val mode = args.drop(3).headOption.getOrElse("balanced")
     require(mode == "balanced" || mode == "skew", s"unknown mode $mode")
     val nPlanted = n / 100
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", (cpus.toInt * 2).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", 256 * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(partitionsPerCpu = 2, confs = Seq(
+      "spark.sql.autoBroadcastJoinThreshold" -> (256L << 20).toString))
     import spark.implicits._
 
     val dim = 64

@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.core.Session
 import graft.operators.SkewOps
 
 /** Skew-join macro: quantifies the hot-key-only salted join against the
@@ -18,14 +18,7 @@ object SkewMacroBench {
     val nLeft = args.headOption.map(_.toLong).getOrElse(10000000L)
     val nRight = args.lift(1).map(_.toLong).getOrElse(1000000L)
     val salt = 16
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toInt)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session()
 
     // left: 50% of rows on key 0, the rest uniform over nRight keys
     val left = spark.range(nLeft).select(

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Session
 import graft.operators.Dedup
 import graft.streaming.{FileReplay, StreamCuration, StreamDedup}
 
@@ -59,30 +60,8 @@ object StreamCurationMacroBench {
     val nCorpus = args.headOption.map(_.toLong).getOrElse(3000000L)
     val nDelta = args.drop(1).headOption.map(_.toLong).getOrElse(300000L)
     val nBuckets = args.drop(2).headOption.map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toInt * 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session(partitionsPerCpu = 4)
     import spark.implicits._
-    if (sys.env.contains("SPARK_GRAFT_STAGE_DEBUG")) {
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              sc: org.apache.spark.scheduler.SparkListenerStageCompleted)
-              : Unit = {
-            val si = sc.stageInfo
-            val ms = si.completionTime.getOrElse(0L) -
-              si.submissionTime.getOrElse(0L)
-            if (ms > 1000)
-              System.err.println(s"[stage ${si.stageId}] tasks=${si.numTasks}" +
-                s" ms=$ms ${si.name.take(80)}")
-          }
-        })
-    }
 
     val corpus = synthDocs(spark, 0L, nCorpus, col("id"))
       .localCheckpoint(true)
@@ -156,7 +135,7 @@ object StreamCurationMacroBench {
     spark.conf.set(chgKey, "true")
     val partKey = "spark.sql.shuffle.partitions"
     val prevParts = spark.conf.get(partKey)
-    spark.conf.set(partKey, cpus.toInt.toString)
+    spark.conf.set(partKey, Session.cpus.toString)
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft_scur_macro_ckpt").toString
     val outDir = java.nio.file.Files
@@ -198,7 +177,7 @@ object StreamCurationMacroBench {
       // map(identity) barrier after the repartition is optimizer-opaque,
       // so the filter stays on the 24-way side — the same barrier trick
       // the operator itself uses against projection collapse.
-      val spread = stream.repartition(cpus.toInt)
+      val spread = stream.repartition(Session.cpus)
         .as[(Long, String)].map(identity).toDF("doc_id", "text")
       StreamCuration.curationStream(
           StreamCuration.curationRows(spread,

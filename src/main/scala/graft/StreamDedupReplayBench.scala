@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
+
+import graft.core.Session
 
 /** sf1-scale verification of q156 (streaming MinHash-LSH dedup) — the
   * last registered query whose ≥sf1 evidence was a prior round's: its
@@ -59,14 +61,7 @@ object StreamDedupReplayBench {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(50000L)
     require(n >= 200, "need at least two 100-blocks for the planted classes")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toInt)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session()
 
     // ---- deterministic fixture (driver-generated, replay needs it) ----
     val langs = Array("en", "de", "fr", "es")

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Session
+
 /** Scale + exactness gate for operators/SubstrDedup (q212's unaligned
   * exact-substring cut) at 1M docs / ~300M char windows — the macro the
   * r16 verdict required: planted UNALIGNED ≥24-char repeats, recall 1.0
@@ -74,13 +76,7 @@ object SubstrMacroBench {
     if (args.contains("--composed")) { composed(args); return }
     if (args.contains("--hot")) { hot(args); return }
     val n = args.headOption.map(_.toLong).getOrElse(1000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "24")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", (cpus.toInt * 4).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(partitionsPerCpu = 4)
     import spark.implicits._
 
     val base = docs(spark, n).localCheckpoint(true)
@@ -148,13 +144,7 @@ object SubstrMacroBench {
   private def composed(args: Array[String]): Unit = {
     val n = args.filterNot(_.startsWith("--")).headOption
       .map(_.toLong).getOrElse(1000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "24")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", (cpus.toInt * 4).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(partitionsPerCpu = 4)
 
     def funnel(corpus0: DataFrame, staged: Boolean): DataFrame = {
       import org.apache.spark.sql.expressions.Window
@@ -237,13 +227,7 @@ object SubstrMacroBench {
   private def hot(args: Array[String]): Unit = {
     val n = args.filterNot(_.startsWith("--")).headOption
       .map(_.toLong).getOrElse(1000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "24")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", (cpus.toInt * 4).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(partitionsPerCpu = 4)
 
     // 31-char prefix + '%' sentinel bounds the shared run: windows at
     // pos 1..8 (= 31+1-24) are duplicated corpus-wide; the sentinel

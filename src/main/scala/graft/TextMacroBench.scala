@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Session
+
 /** 10× scale-step guard for the LLM-text-pipeline shapes (q131 TF-IDF,
   * q133 BPE pair counts, q136 Misra–Gries heavy hitters, q137
   * token-budget selection, q138 bigram familiarity). Every other operator
@@ -39,12 +41,6 @@ object TextMacroBench {
       .groupBy("doc_id")
       .agg(concat_ws(" ", collect_list(col("tok"))).as("text"),
         count(lit(1)).as("n_tokens"))
-  }
-
-  private def materialize(df: DataFrame): Long = {
-    val r = df.agg(bit_xor(xxhash64(df.columns.map(col).toIndexedSeq: _*)))
-      .collect()(0)
-    if (r.isNullAt(0)) 0L else r.getLong(0)
   }
 
   // the script-aware default seam (graft.core.Tok, r18) — identical
@@ -348,14 +344,7 @@ object TextMacroBench {
     if (args.contains("--deep-bpe")) { deepBpe(args); return }
     val factor = args.headOption.map(_.toInt).getOrElse(10)
     val baseDocs = args.drop(1).headOption.map(_.toLong).getOrElse(300000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toInt * 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session(partitionsPerCpu = 4)
 
     // q142 shape: 3 rounds of the full BPE trainer loop — the word-type
     // aggregation scales with the corpus, the merge rounds with the
@@ -452,7 +441,7 @@ object TextMacroBench {
       d.count()
       val times = shapes.map { case (name, f) =>
         val t0 = System.nanoTime()
-        materialize(f(d))
+        Bench.materialize(f(d))
         val secs = (System.nanoTime() - t0) / 1e9
         // Arm isolation — the in-JVM twin of the "never run two macros
         // concurrently" lesson: operators register internal caches
@@ -475,8 +464,8 @@ object TextMacroBench {
         require(composed == stagedRow,
           s"composed curation $composed != staged $stagedRow at $nDocs docs")
         // bloom prefilter has no false negatives → identical output rows
-        val he = materialize(deconExact(d))
-        val hb = materialize(deconBloom(d))
+        val he = Bench.materialize(deconExact(d))
+        val hb = Bench.materialize(deconBloom(d))
         require(he == hb, s"bloom decon mismatch: exact=$he bloom=$hb")
         // the synthesized corpus plants no 16-token duplicate span
         // (all-hot windows are ~3e-6 of positions and draw from a 16^16
@@ -540,14 +529,7 @@ object TextMacroBench {
     val merges = pos.headOption.map(_.toInt).getOrElse(1000)
     val batch = pos.drop(1).headOption.map(_.toInt).getOrElse(64)
     val nDocs = pos.drop(2).headOption.map(_.toLong).getOrElse(300000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toInt)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session()
 
     val d = docs(spark, nDocs).cache()
     d.count()
@@ -585,14 +567,7 @@ object TextMacroBench {
     val merges = pos.headOption.map(_.toInt).getOrElse(1000)
     val batch = pos.drop(1).headOption.map(_.toInt).getOrElse(64)
     val nDocs = pos.drop(2).headOption.map(_.toLong).getOrElse(3000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toInt)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session()
 
     val d = docs(spark, nDocs).cache()
     d.count()

@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.core.Session
 import graft.operators.Similarity
 
 /** ANN macro benchmark: brute-force vs IVF top-k over a clustered
@@ -17,14 +17,7 @@ object VectorMacroBench {
     val n = args.headOption.map(_.toInt).getOrElse(5000000)
     val nClusters = args.drop(1).headOption.map(_.toInt).getOrElse(32)
     val nprobe = args.drop(2).headOption.map(_.toInt).getOrElse(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", (cpus.toInt * 2).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(partitionsPerCpu = 2)
 
     // clustered vectors: one dominant axis per cluster + hash noise
     val vecs = spark.range(n.toLong)

@@ -1,49 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.core.Session
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // same parallelism floors as Bench (r20 opt round): runtime-only —
-      // pre-AQE plan hashes and results are unaffected, the dump wall
-      // isn't starved on 1-task kernel stages at tiny SFs
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"))
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", "131072"))
-      // deliberately NO objectHashAggregate fallback floor here (unlike
-      // Bench): hash-mode memory for bounded-sketch aggregators is
-      // groups × buffer — q43's KMV buffers OOM'd an 8g heap at sf0.1
-      // under a 65536-group floor (measured this round). The floor is a
-      // per-workload setting, valid where the aggregation shapes are
-      // known (the 22-query headline set: value-accumulating buffers
-      // whose hash-mode memory equals the partition's own bytes).
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // SPARK_GRAFT_CONF="k=v;k2=v2" (mirrors Bench): extra runtime SQL
-    // confs for verification experiments — e.g. one oracle pass per
-    // round with the Bench-only objectHashAggregate fallback floor set,
-    // proving the headline aggregations are value-equal under hash mode
-    // (the r20-advice order-insensitivity check). Failures log and skip.
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.nonEmpty =>
-          try spark.conf.set(k.trim, v.trim)
-          catch {
-            case scala.util.control.NonFatal(e) =>
-              System.err.println(s"[verify] SPARK_GRAFT_CONF skipped $k: $e")
-          }
-        case _ => ()
-      }
-    })
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(confs = Session.verify)
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q95_...,q96_... re-dumps a subset into an existing
     // outDir (iteration aid, mirrors Bench's env var; oracle_sql.json is

@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.core.Session
 import graft.operators.Multimodal
 
 /** Video near-dup macro — the pair-producing-operator rule ("every new
@@ -118,14 +118,7 @@ object VideoDedupMacroBench {
     // C(n, 2) candidate pairs (5e9 at 100k clips); with it the bucket
     // is dropped and the planted pairs still verify on frames 3/6/9
     val universal = args.contains("--universal")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", (cpus.toInt * 2).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(partitionsPerCpu = 2)
     import spark.implicits._
 
     val media = spark.range(n.toLong).as[Long]

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.core.Session
 
 /** q201 winnowing partial-copy pairing at corpus scale with a
   * GUARANTEED-recall gate. Fixture: `n` synthetic docs (the
@@ -28,14 +29,7 @@ import org.apache.spark.sql.functions._
 object WinnowMacroBench {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(1000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toInt * 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session(partitionsPerCpu = 4)
     import spark.implicits._
 
     // base corpus: the TextMacroBench generator shape (nTok must read

@@ -42,6 +42,13 @@ class Hdf5WriterSpec extends SparkSpec {
     assert(Hdf5Writer.lookup3(real, 96, 327 - 96) == 0xa42119c0)
   }
 
+  test("lookup3 reproduces the published lookup3.c self-test vectors") {
+    // hashlittle() self-test values from Bob Jenkins' lookup3.c (initval 0)
+    assert(Hdf5Writer.lookup3("".getBytes("US-ASCII"), 0, 0) == 0xdeadbeef)
+    val fourScore = "Four score and seven years ago".getBytes("US-ASCII")
+    assert(Hdf5Writer.lookup3(fourScore, 0, 30) == 0x17770551)
+  }
+
   test("written file parses with Hdf5File: datasets, dims, chunking") {
     val f = new Hdf5File(written)
     try {
