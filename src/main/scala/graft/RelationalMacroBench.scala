@@ -115,7 +115,7 @@ object RelationalMacroBench {
     val ratios = t1.keys.map(k => k -> tN(k) / t1(k)).toMap
     val cliff = ratios.filter(_._2 > 1.5 * factor)
     val detail = t1.keys.toSeq.sorted.map { k =>
-      f""""$k":{"t1_sec":${t1(k)}%.2f,"t$factor${""}_sec":${tN(k)}%.2f,"ratio":${ratios(k)}%.1f}"""
+      f""""$k":{"t1_sec":${t1(k)}%.2f,"tN_sec":${tN(k)}%.2f,"ratio":${ratios(k)}%.1f}"""
     }.mkString("{", ",", "}")
     println(
       f"""{"metric":"relational_macro","value":${tN.values.sum}%.1f,"unit":"sec","factor":$factor,"shapes":$detail,"cliff":${cliff.nonEmpty}}""")

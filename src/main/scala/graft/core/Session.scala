@@ -1,7 +1,7 @@
 package graft.core
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{RuntimeConfig, SparkSession}
 
 /** The one SparkSession set-up every graft main uses (Bench, Verify,
   * Explain and the macro benches). Specs keep their own fixed session
@@ -98,6 +98,22 @@ object Session {
       }
     }
 
+  /** Sets each pair that is a runtime SQL conf of `conf` and returns one
+    * line per pair: `k=v` when set, `skipped k: <why>` otherwise.
+    * SPARK_GRAFT_CONF is a measurement hook (A/B of one runtime conf
+    * without recompiling, or one oracle pass with a Bench-only floor), so
+    * a pair it cannot apply is reported and skipped, never fatal. A core
+    * key such as `spark.master` is skipped rather than set: `conf.set`
+    * accepts it once the session runs, but it no longer has any effect.
+    */
+  def applyConf(conf: RuntimeConfig, pairs: Seq[(String, String)]): Seq[String] =
+    pairs.map { case (k, v) =>
+      if (!conf.isModifiable(k)) s"skipped $k: not a runtime SQL conf"
+      else
+        try { conf.set(k, v); s"$k=$v" }
+        catch { case scala.util.control.NonFatal(e) => s"skipped $k: $e" }
+    }
+
   /** `local[cpus]`, UTC, UI off, `cpus × partitionsPerCpu` shuffle
     * partitions, then `confs`, then SPARK_GRAFT_CONF; WARN logging.
     */
@@ -110,20 +126,10 @@ object Session {
       .config("spark.sql.shuffle.partitions", cpus.toLong * partitionsPerCpu)
     confs.foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
-    // SPARK_GRAFT_CONF is a measurement hook (A/B of one runtime conf
-    // without recompiling, or one oracle pass with a Bench-only floor):
-    // a static/non-runtime conf throws from conf.set — log and continue,
-    // it must never kill the run.
-    sys.env.get("SPARK_GRAFT_CONF").foreach(parseConf(_).foreach {
-      case (k, v) =>
-        try {
-          spark.conf.set(k, v)
-          System.err.println(s"[session] SPARK_GRAFT_CONF $k=$v")
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[session] SPARK_GRAFT_CONF skipped $k: $e")
-        }
-    })
+    sys.env.get("SPARK_GRAFT_CONF").foreach { s =>
+      applyConf(spark.conf, parseConf(s))
+        .foreach(m => System.err.println(s"[session] SPARK_GRAFT_CONF $m"))
+    }
     spark.sparkContext.setLogLevel("WARN")
     // Decide WHERE a slow run spends its time before touching it (guide
     // §1): the giveaway of a parallelism-starved stage is a heavy stage

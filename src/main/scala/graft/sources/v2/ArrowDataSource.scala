@@ -1,7 +1,5 @@
 package graft.sources.v2
 
-import java.util
-
 import scala.jdk.CollectionConverters._
 
 import org.apache.arrow.memory.RootAllocator
@@ -9,13 +7,9 @@ import org.apache.arrow.vector._
 import org.apache.arrow.vector.ipc.ArrowFileReader
 import org.apache.arrow.vector.types.pojo.{ArrowType, Field}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** DataSource V2 over Arrow IPC files (Feather v2 container), read with
   * the arrow-vector library Spark already ships — no new dependency.
@@ -34,19 +28,15 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * still read — unlike parquet there is no per-column byte range to
   * skip within a batch.
   */
-class ArrowDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "graft-arrow"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    ArrowDataSource.sparkSchema(
-      ArrowDataSource.withReader(
-        ArrowDataSource.files(options.get("path")).head) { r =>
-        r.getVectorSchemaRoot.getSchema.getFields.asScala.toSeq
-      })
-  override def getTable(
-      schema: StructType,
-      partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new ArrowTable(properties.asScala.toMap)
+class ArrowDataSource extends GraftSource("arrow") {
+  override protected def schema(o: GraftOptions): StructType =
+    ArrowDataSource.withReader(ArrowDataSource.files(o("path")).head) { r =>
+      ArrowDataSource.sparkSchema(r.getVectorSchemaRoot.getSchema.getFields.asScala.toSeq)
+    }
+  override protected def table(o: GraftOptions, schema: StructType): GraftTable = {
+    val path = o("path")
+    new GraftTable(s"graft_arrow($path)", schema)(new ArrowScanBuilder(path, schema))
+  }
 }
 
 object ArrowDataSource {
@@ -55,7 +45,6 @@ object ArrowDataSource {
     * every file must carry it.
     */
   def files(path: String): Seq[String] = {
-    require(path != null, "graft-arrow: 'path' option required")
     val f = new java.io.File(path)
     if (f.isDirectory) {
       val parts = Option(f.listFiles()).toSeq.flatten
@@ -102,21 +91,6 @@ object ArrowDataSource {
     }
     StructField(f.getName, dt, f.isNullable)
   })
-}
-
-class ArrowTable(props: Map[String, String]) extends Table with SupportsRead {
-  private val path = props.getOrElse("path",
-    sys.error("graft-arrow: 'path' option required"))
-  override def name(): String = s"graft_arrow($path)"
-  override def schema(): StructType =
-    ArrowDataSource.withReader(ArrowDataSource.files(path).head) { r =>
-      ArrowDataSource.sparkSchema(
-        r.getVectorSchemaRoot.getSchema.getFields.asScala.toSeq)
-    }
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ArrowScanBuilder(path, schema())
 }
 
 class ArrowScanBuilder(path: String, full: StructType)

@@ -1,17 +1,8 @@
 package graft.sources.v2
 
-import java.util
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources
-import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.sources.tiff.TiffFile
 
@@ -31,76 +22,22 @@ import graft.sources.tiff.TiffFile
   *  - padded edge tiles are clipped by the reader, and a `nodata` option
   *    drops the sentinel at the scan (P20's source-side image).
   */
-class CogDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "graft-cog"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    CogDataSource.Schema
-  override def getTable(
-      schema: StructType,
-      partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new CogTable(properties.asScala.toMap)
-}
-
-object CogDataSource {
-  val Schema: StructType = StructType(Seq(
+class CogDataSource extends GraftSource("cog") {
+  override protected def schema(o: GraftOptions): StructType = StructType(Seq(
     StructField("x", DoubleType, nullable = false),
     StructField("y", DoubleType, nullable = false),
     StructField("value", IntegerType, nullable = false)))
-}
-
-class CogTable(props: Map[String, String]) extends Table with SupportsRead {
-  private val path =
-    props.getOrElse("path", sys.error("graft-cog: 'path' option required"))
-  override def name(): String = s"graft_cog($path)"
-  override def schema(): StructType = CogDataSource.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new CogScanBuilder(path, props.get("nodata").map(_.toInt),
-      props.get("level").map(_.toInt).getOrElse(0))
-}
-
-class CogScanBuilder(path: String, nodata: Option[Int], level: Int)
-    extends ScanBuilder
-    with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters {
-  private var required: StructType = CogDataSource.Schema
-  private var xLo = Double.NegativeInfinity
-  private var xHi = Double.PositiveInfinity
-  private var yLo = Double.NegativeInfinity
-  private var yHi = Double.PositiveInfinity
-  private var accepted: Array[sources.Filter] = Array.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def pushFilters(filters: Array[sources.Filter]): Array[sources.Filter] = {
-    def num(v: Any): Option[Double] = v match {
-      case d: Double => Some(d)
-      case f: Float => Some(f.toDouble)
-      case i: Int => Some(i.toDouble)
-      case l: Long => Some(l.toDouble)
-      case _ => None
-    }
-    accepted = filters.filter {
-      case sources.GreaterThan("x", v) => num(v).exists { d => xLo = math.max(xLo, d); true }
-      case sources.GreaterThanOrEqual("x", v) => num(v).exists { d => xLo = math.max(xLo, d); true }
-      case sources.LessThan("x", v) => num(v).exists { d => xHi = math.min(xHi, d); true }
-      case sources.LessThanOrEqual("x", v) => num(v).exists { d => xHi = math.min(xHi, d); true }
-      case sources.GreaterThan("y", v) => num(v).exists { d => yLo = math.max(yLo, d); true }
-      case sources.GreaterThanOrEqual("y", v) => num(v).exists { d => yLo = math.max(yLo, d); true }
-      case sources.LessThan("y", v) => num(v).exists { d => yHi = math.min(yHi, d); true }
-      case sources.LessThanOrEqual("y", v) => num(v).exists { d => yHi = math.min(yHi, d); true }
-      case _ => false
-    }
-    filters
+  override protected def table(o: GraftOptions, schema: StructType): GraftTable = {
+    val path = o("path")
+    val (nodata, level) = (o.get("nodata").map(_.toInt), o.int("level", 0))
+    new GraftTable(s"graft_cog($path)", schema)(
+      new BoundsScanBuilder(schema, "x", "y") {
+        override def build(): Scan = {
+          val ((xLo, xHi), (yLo, yHi)) = (bounds("x"), bounds("y"))
+          new CogScan(path, required, nodata, level, xLo, xHi, yLo, yHi)
+        }
+      })
   }
-
-  override def pushedFilters(): Array[sources.Filter] = accepted
-
-  override def build(): Scan =
-    new CogScan(path, required, nodata, level, xLo, xHi, yLo, yHi)
 }
 
 class CogScan(path: String, required: StructType, nodata: Option[Int],
@@ -120,7 +57,7 @@ class CogScan(path: String, required: StructType, nodata: Option[Int],
   }
 
   /** Tile envelope vs the pushed bbox, with one whole pixel of slack on
-    * each side (magnitude-safe, per the grid-source epsilon lesson).
+    * each side (the one-cell-slack rule in GraftSource).
     */
   @transient private lazy val planned: Seq[TiffFile.BlockInfo] =
     info.blocks.filter { b =>

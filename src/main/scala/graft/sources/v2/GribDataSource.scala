@@ -1,18 +1,10 @@
 package graft.sources.v2
 
-import java.util
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources
-import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.sources.grib.Grib2File
 
@@ -41,85 +33,56 @@ import graft.sources.grib.Grib2File
   *   .load()
   * }}}
   */
-class GribDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "graft-grib"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    GribDataSource.schemaFor(options.getBoolean("withStep", false))
-  override def getTable(
-      schema: StructType,
-      partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new GribTable(properties.asScala.toMap)
-}
-
-object GribDataSource {
-  val Schema: StructType = StructType(Seq(
-    StructField("data_type", StringType, nullable = false),
-    StructField("number", IntegerType, nullable = false),
-    StructField("latitude", DoubleType, nullable = false),
-    StructField("longitude", DoubleType, nullable = false),
-    StructField("value", DoubleType, nullable = false)))
+class GribDataSource extends GraftSource("grib") {
 
   /** `withStep=true` adds the forecast lead time (hours) — the `step`
     * coordinate cfgrib exposes. Opt-in so existing readers keep their
     * audited schema/plans.
     */
-  def schemaFor(withStep: Boolean): StructType =
-    if (!withStep) Schema
-    else StructType(Schema.fields.patch(2,
-      Seq(StructField("step_hours", IntegerType, nullable = false)), 0))
-}
-
-class GribTable(props: Map[String, String]) extends Table with SupportsRead {
-  private val paths: Seq[String] =
-    props.getOrElse("path", sys.error("graft-grib: 'path' option required"))
-      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-  private val withStep = props.get("withstep").exists(_.toBoolean) ||
-    props.get("withStep").exists(_.toBoolean)
-  override def name(): String = s"graft_grib(${paths.mkString(",")})"
-  override def schema(): StructType = GribDataSource.schemaFor(withStep)
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GribScanBuilder(paths, schema())
-}
-
-class GribScanBuilder(paths: Seq[String], full: StructType)
-    extends ScanBuilder
-    with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters {
-  private var required: StructType = full
-  private var wantType: Option[String] = None
-  private var wantNumbers: Option[Set[Int]] = None
-  private var accepted: Array[sources.Filter] = Array.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  /** Message-level pruning on the ensemble keys (cfgrib filter_by_keys
-    * image). Filters stay residual: Spark re-applies the exact
-    * predicate, pushdown only skips messages.
-    */
-  override def pushFilters(filters: Array[sources.Filter]): Array[sources.Filter] = {
-    def int(v: Any): Option[Int] = v match {
-      case i: Int => Some(i)
-      case l: Long => Some(l.toInt)
-      case _ => None
-    }
-    accepted = filters.filter {
-      case sources.EqualTo("data_type", s: String) =>
-        wantType = Some(s); true
-      case sources.EqualTo("number", v) =>
-        int(v).exists { n => wantNumbers = Some(Set(n)); true }
-      case sources.In("number", vs) =>
-        val ns = vs.flatMap(int).toSet
-        if (ns.size == vs.length) { wantNumbers = Some(ns); true } else false
-      case _ => false
-    }
-    filters
+  override protected def schema(o: GraftOptions): StructType = {
+    val keys = Seq(
+      StructField("data_type", StringType, nullable = false),
+      StructField("number", IntegerType, nullable = false))
+    val step =
+      if (o.bool("withStep", false)) Seq(StructField("step_hours", IntegerType, nullable = false))
+      else Nil
+    StructType(keys ++ step ++ Seq(
+      StructField("latitude", DoubleType, nullable = false),
+      StructField("longitude", DoubleType, nullable = false),
+      StructField("value", DoubleType, nullable = false)))
   }
 
-  override def pushedFilters(): Array[sources.Filter] = accepted
+  override protected def table(o: GraftOptions, schema: StructType): GraftTable = {
+    val paths = o("path").split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    new GraftTable(s"graft_grib(${paths.mkString(",")})", schema)(
+      new GribScanBuilder(paths, schema))
+  }
+}
+
+/** Message-level pruning on the ensemble keys (cfgrib filter_by_keys
+  * image), under the residual-filter rule in GraftSource.
+  */
+class GribScanBuilder(paths: Seq[String], full: StructType)
+    extends GraftScanBuilder(full) {
+  private var wantType: Option[String] = None
+  private var wantNumbers: Option[Set[Int]] = None
+
+  private def int(v: Any): Option[Int] = v match {
+    case i: Int => Some(i)
+    case l: Long => Some(l.toInt)
+    case _ => None
+  }
+
+  override protected def accept(f: sources.Filter): Boolean = f match {
+    case sources.EqualTo("data_type", s: String) =>
+      wantType = Some(s); true
+    case sources.EqualTo("number", v) =>
+      int(v).exists { n => wantNumbers = Some(Set(n)); true }
+    case sources.In("number", vs) =>
+      val ns = vs.flatMap(int).toSet
+      if (ns.size == vs.length) { wantNumbers = Some(ns); true } else false
+    case _ => false
+  }
 
   override def build(): Scan = new GribScan(paths, required, wantType, wantNumbers)
 }

@@ -1,17 +1,8 @@
 package graft.sources.v2
 
-import java.util
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources
-import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** DataSource V2 implementing the dense-grid raster surface virtually
   * (SURVEY §7.3 stretch goal: custom DSv2 for raster sources): a regular
@@ -35,49 +26,27 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * skeleton with one InputPartition per file chunk (the converter
   * contract of graft.sources.RasterContract).
   */
-class GridDataSource extends TableProvider with DataSourceRegister {
-
-  override def shortName(): String = "graft-grid"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    GridDataSource.Schema
-
-  override def getTable(
-      schema: StructType,
-      partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    // read options are delivered to newScanBuilder, not here (Spark 4
-    // passes only table properties to getTable for plain TableProviders)
-    new GridTable(properties.asScala.toMap)
-}
-
-object GridDataSource {
-  val Schema: StructType = StructType(Seq(
+class GridDataSource extends GraftSource("grid") {
+  override protected def schema(o: GraftOptions): StructType = StructType(Seq(
     StructField("latitude", DoubleType, nullable = false),
     StructField("longitude", DoubleType, nullable = false)))
+  override protected def table(o: GraftOptions, schema: StructType): GraftTable = {
+    val spec = GridSpec.fromOptions(o)
+    new GraftTable("graft_grid", schema)(new GridScanBuilder(spec, schema))
+  }
 }
 
 case class GridSpec(latMax: Double, lonMin: Double, res: Double,
     nLat: Int, nLon: Int, partitions: Int)
 
 object GridSpec {
-  def fromOptions(o: Map[String, String]): GridSpec = GridSpec(
-    latMax = o.getOrElse("latmax", "0").toDouble,
-    lonMin = o.getOrElse("lonmin", "0").toDouble,
+  def fromOptions(o: GraftOptions): GridSpec = GridSpec(
+    latMax = o.getOrElse("latMax", "0").toDouble,
+    lonMin = o.getOrElse("lonMin", "0").toDouble,
     res = o.getOrElse("res", "0.05").toDouble,
-    nLat = o.getOrElse("nlat", "1").toInt,
-    nLon = o.getOrElse("nlon", "1").toInt,
-    partitions = o.getOrElse("partitions", "8").toInt)
-}
-
-class GridTable(props: Map[String, String]) extends Table with SupportsRead {
-  override def name(): String = "graft_grid"
-  override def schema(): StructType = GridDataSource.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GridScanBuilder(GridSpec.fromOptions(
-      props ++ options.asScala.map { case (k, v) => k.toLowerCase -> v }))
+    nLat = o.int("nLat", 1),
+    nLon = o.int("nLon", 1),
+    partitions = o.int("partitions", 8))
 }
 
 /** Index-space bounds derived from pushed coordinate filters:
@@ -85,68 +54,28 @@ class GridTable(props: Map[String, String]) extends Table with SupportsRead {
   */
 case class GridBounds(iLo: Int, iHi: Int, jLo: Int, jHi: Int)
 
-class GridScanBuilder(spec: GridSpec)
-    extends ScanBuilder
-    with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters {
-  private var required: StructType = GridDataSource.Schema
-  private var bounds: GridBounds = GridBounds(0, spec.nLat, 0, spec.nLon)
-  private var accepted: Array[sources.Filter] = Array.empty
+/** Range predicates on latitude/longitude shrink the generated index
+  * window — the source-side image of the reference's area restriction
+  * (SURVEY P3): a bbox query on a 1000-executor cluster plans only the
+  * bands inside the box instead of generating the globe and filtering.
+  * The window keeps one whole cell of slack on each side (the
+  * one-cell-slack rule in GraftSource).
+  */
+class GridScanBuilder(spec: GridSpec, full: StructType)
+    extends BoundsScanBuilder(full, "latitude", "longitude") {
 
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  /** Range predicates on latitude/longitude shrink the generated index
-    * window — the source-side image of the reference's area restriction
-    * (SURVEY P3): a bbox query on a 1000-executor cluster plans only the
-    * bands inside the box instead of generating the globe and filtering.
-    * Clipping is conservative by ONE WHOLE CELL on each side: an absolute
-    * epsilon breaks once index magnitudes grow (FP error scales as
-    * |index|·ulp, so fine-resolution global grids would lose boundary
-    * rows), while a cell of slack is correct at any magnitude and free —
-    * every filter is returned as residual so Spark re-applies the exact
-    * predicate; pushdown prunes work, it never decides correctness.
-    */
-  override def pushFilters(filters: Array[sources.Filter]): Array[sources.Filter] = {
-    // latitude = latMax - i*res (descending in i); longitude = lonMin + j*res
-    def latGe(a: Double) = bounds = bounds.copy(
-      iHi = math.min(bounds.iHi,
-        math.floor((spec.latMax - a) / spec.res).toInt + 2))
-    def latLe(b: Double) = bounds = bounds.copy(
-      iLo = math.max(bounds.iLo,
-        math.ceil((spec.latMax - b) / spec.res).toInt - 1))
-    def lonGe(a: Double) = bounds = bounds.copy(
-      jLo = math.max(bounds.jLo,
-        math.ceil((a - spec.lonMin) / spec.res).toInt - 1))
-    def lonLe(b: Double) = bounds = bounds.copy(
-      jHi = math.min(bounds.jHi,
-        math.floor((b - spec.lonMin) / spec.res).toInt + 2))
-    def num(v: Any): Option[Double] = v match {
-      case d: Double => Some(d)
-      case f: Float => Some(f.toDouble)
-      case i: Int => Some(i.toDouble)
-      case l: Long => Some(l.toDouble)
-      case _ => None
-    }
-    accepted = filters.filter {
-      case sources.GreaterThan("latitude", v) => num(v).exists { d => latGe(d); true }
-      case sources.GreaterThanOrEqual("latitude", v) => num(v).exists { d => latGe(d); true }
-      case sources.LessThan("latitude", v) => num(v).exists { d => latLe(d); true }
-      case sources.LessThanOrEqual("latitude", v) => num(v).exists { d => latLe(d); true }
-      case sources.GreaterThan("longitude", v) => num(v).exists { d => lonGe(d); true }
-      case sources.GreaterThanOrEqual("longitude", v) => num(v).exists { d => lonGe(d); true }
-      case sources.LessThan("longitude", v) => num(v).exists { d => lonLe(d); true }
-      case sources.LessThanOrEqual("longitude", v) => num(v).exists { d => lonLe(d); true }
-      case sources.EqualTo("latitude", v) => num(v).exists { d => latGe(d); latLe(d); true }
-      case sources.EqualTo("longitude", v) => num(v).exists { d => lonGe(d); lonLe(d); true }
-      case _ => false
-    }
-    filters // everything is residual: Spark re-applies the exact predicate
+  override def build(): Scan = {
+    val (latLo, latHi) = bounds("latitude")
+    val (lonLo, lonHi) = bounds("longitude")
+    // latitude = latMax - i*res (descending in i); longitude = lonMin + j*res.
+    // The arithmetic stays in doubles up to the clip: an open side is
+    // infinite, and an extreme literal must not overflow an Int.
+    new GridScan(spec, required, GridBounds(
+      iLo = math.max(0, (math.ceil((spec.latMax - latHi) / spec.res) - 1).toInt),
+      iHi = math.min(spec.nLat, (math.floor((spec.latMax - latLo) / spec.res) + 2).toInt),
+      jLo = math.max(0, (math.ceil((lonLo - spec.lonMin) / spec.res) - 1).toInt),
+      jHi = math.min(spec.nLon, (math.floor((lonHi - spec.lonMin) / spec.res) + 2).toInt)))
   }
-
-  override def pushedFilters(): Array[sources.Filter] = accepted
-
-  override def build(): Scan = new GridScan(spec, required, bounds)
 }
 
 class GridScan(spec: GridSpec, required: StructType, bounds: GridBounds)
@@ -157,32 +86,26 @@ class GridScan(spec: GridSpec, required: StructType, bounds: GridBounds)
     s"graft-grid pruned=[i ${bounds.iLo}..${bounds.iHi}, j ${bounds.jLo}..${bounds.jHi}]"
 
   /** Latitude bands as input partitions, clipped to the pushed bounds. */
-  override def planInputPartitions(): Array[InputPartition] = {
-    val iLo = math.max(0, bounds.iLo)
-    val iHi = math.min(spec.nLat, bounds.iHi)
-    val nRows = math.max(0, iHi - iLo)
-    if (nRows == 0 || bounds.jHi <= bounds.jLo)
-      return Array.empty
-    val bands = math.min(spec.partitions, nRows).max(1)
-    val step = math.ceil(nRows.toDouble / bands).toInt
-    (iLo until iHi by step)
-      .map(lo => GridInputPartition(lo, math.min(lo + step, iHi)))
-      .toArray
-  }
+  override def planInputPartitions(): Array[InputPartition] =
+    if (bounds.jHi <= bounds.jLo) Array.empty
+    else GraftSource.bands(bounds.iLo, bounds.iHi, spec.partitions)
+      .map { case (lo, hi) => GridInputPartition(lo, hi): InputPartition }.toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GridReaderFactory(spec, required.fieldNames,
-      math.max(0, bounds.jLo), math.min(spec.nLon, bounds.jHi))
+    new GridReaderFactory(spec, required, bounds.jLo, bounds.jHi)
 }
 
 case class GridInputPartition(latLo: Int, latHi: Int) extends InputPartition
 
 class GridReaderFactory(
-    spec: GridSpec, cols: Array[String], jLo: Int, jHi: Int)
+    spec: GridSpec, required: StructType, jLo: Int, jHi: Int)
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val gp = p.asInstanceOf[GridInputPartition]
     new PartitionReader[InternalRow] {
+      private val cells = new CellRow(required)
+      private val (latO, lonO) =
+        (cells.ordinal("latitude"), cells.ordinal("longitude"))
       private var i = gp.latLo
       private var j = jLo - 1
       override def next(): Boolean = {
@@ -191,11 +114,10 @@ class GridReaderFactory(
         i < gp.latHi
       }
       override def get(): InternalRow = {
-        val values: Array[Any] = cols.map {
-          case "latitude" => spec.latMax - i * spec.res
-          case "longitude" => spec.lonMin + j * spec.res
-        }
-        InternalRow.fromSeq(values.toIndexedSeq)
+        val out = cells.row
+        if (latO >= 0) out.setDouble(latO, spec.latMax - i * spec.res)
+        if (lonO >= 0) out.setDouble(lonO, spec.lonMin + j * spec.res)
+        out
       }
       override def close(): Unit = ()
     }

@@ -1,20 +1,10 @@
 package graft.sources.v2
 
 import java.nio.{ByteBuffer, ByteOrder}
-import java.util
-
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources
-import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
-
-
 
 /** DataSource V2 over real NetCDF-4/HDF5 raster files (graft.sources.nc),
   * unpivoting a 2-D `var(lat, lon)` grid to long-form rows
@@ -61,23 +51,19 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *   .load()  // latitude, longitude, threshold_2y, threshold_5y, threshold_20y
   * }}}
   */
-class NetcdfDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "graft-netcdf"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    NetcdfDataSource.schemaFor(NetcdfSpec.fromOptions(
-      options.asScala.map { case (k, v) => k.toLowerCase -> v }.toMap))
-  override def getTable(
-      schema: StructType,
-      partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new NetcdfTable(properties.asScala.toMap)
-}
-
-object NetcdfDataSource {
-  def schemaFor(spec: NetcdfSpec): StructType = StructType(
-    StructField("latitude", DoubleType, nullable = false) +:
-      StructField("longitude", DoubleType, nullable = false) +:
-      spec.outCols.map(c => StructField(c, FloatType, nullable = false)))
+class NetcdfDataSource extends GraftSource("netcdf") {
+  override protected def schema(o: GraftOptions): StructType = {
+    val spec = NetcdfSpec.fromOptions(o)
+    StructType(
+      StructField("latitude", DoubleType, nullable = false) +:
+        StructField("longitude", DoubleType, nullable = false) +:
+        spec.outCols.map(c => StructField(c, FloatType, nullable = false)))
+  }
+  override protected def table(o: GraftOptions, schema: StructType): GraftTable = {
+    val spec = NetcdfSpec.fromOptions(o)
+    new GraftTable(s"graft_netcdf(${o.get("path").getOrElse(o("paths"))})", schema)(
+      new NetcdfScanBuilder(spec, schema))
+  }
 }
 
 /** `paths`, `varNames`, `outCols` are equal-length and row-aligned:
@@ -90,13 +76,9 @@ object NetcdfSpec {
   private def csv(s: String): Seq[String] =
     s.split(",").map(_.trim).filter(_.nonEmpty).toSeq
 
-  def fromOptions(o: Map[String, String]): NetcdfSpec = {
-    val paths0 = o.get("paths").map(csv)
-      .orElse(o.get("path").map(Seq(_)))
-      .getOrElse(sys.error("graft-netcdf: 'path' or 'paths' option required"))
-    val vars0 = o.get("vars").map(csv)
-      .orElse(o.get("var").map(Seq(_)))
-      .getOrElse(sys.error("graft-netcdf: 'var' or 'vars' option required"))
+  def fromOptions(o: GraftOptions): NetcdfSpec = {
+    val paths0 = o.get("paths").map(csv).getOrElse(Seq(o("path")))
+    val vars0 = o.get("vars").map(csv).getOrElse(Seq(o("var")))
     // one file with many vars, many files with one var each, or a
     // fully explicit pairing — anything else is ambiguous
     val (paths, vars) =
@@ -113,66 +95,21 @@ object NetcdfSpec {
     require(cols.length == vars.length,
       s"graft-netcdf: ${cols.length} cols for ${vars.length} vars")
     NetcdfSpec(paths, vars, cols,
-      latVar = o.getOrElse("latvar", "lat"),
-      lonVar = o.getOrElse("lonvar", "lon"),
-      partitions = o.getOrElse("partitions", "8").toInt)
+      latVar = o.getOrElse("latVar", "lat"),
+      lonVar = o.getOrElse("lonVar", "lon"),
+      partitions = o.int("partitions", 8))
   }
 }
 
-class NetcdfTable(props: Map[String, String]) extends Table with SupportsRead {
-  override def name(): String =
-    s"graft_netcdf(${props.getOrElse("path", props.getOrElse("paths", "?"))})"
-  override def schema(): StructType =
-    NetcdfDataSource.schemaFor(NetcdfSpec.fromOptions(
-      props.map { case (k, v) => k.toLowerCase -> v }))
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new NetcdfScanBuilder(NetcdfSpec.fromOptions(
-      props ++ options.asScala.map { case (k, v) => k.toLowerCase -> v }))
-}
-
-class NetcdfScanBuilder(spec: NetcdfSpec)
-    extends ScanBuilder
-    with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters {
-  private var required: StructType = NetcdfDataSource.schemaFor(spec)
-  private var latLo = Double.NegativeInfinity
-  private var latHi = Double.PositiveInfinity
-  private var accepted: Array[sources.Filter] = Array.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  /** Latitude bounds shrink the planned row bands. All filters are
-    * returned as residual: over-generation is corrected by Spark's own
-    * re-applied predicate, so pruning can be conservative (one whole row
-    * of slack on each side — see GridDataSource's epsilon lesson: absolute
-    * epsilons break at high index magnitude, whole-cell slack is free).
-    */
-  override def pushFilters(filters: Array[sources.Filter]): Array[sources.Filter] = {
-    def num(v: Any): Option[Double] = v match {
-      case d: Double => Some(d)
-      case f: Float => Some(f.toDouble)
-      case i: Int => Some(i.toDouble)
-      case l: Long => Some(l.toDouble)
-      case _ => None
-    }
-    accepted = filters.filter {
-      case sources.GreaterThan("latitude", v) => num(v).exists { d => latLo = math.max(latLo, d); true }
-      case sources.GreaterThanOrEqual("latitude", v) => num(v).exists { d => latLo = math.max(latLo, d); true }
-      case sources.LessThan("latitude", v) => num(v).exists { d => latHi = math.min(latHi, d); true }
-      case sources.LessThanOrEqual("latitude", v) => num(v).exists { d => latHi = math.min(latHi, d); true }
-      case sources.EqualTo("latitude", v) =>
-        num(v).exists { d => latLo = math.max(latLo, d); latHi = math.min(latHi, d); true }
-      case _ => false
-    }
-    filters
+/** Latitude bounds shrink the planned row bands (one whole row of slack
+  * on each side, per the one-cell-slack rule in GraftSource).
+  */
+class NetcdfScanBuilder(spec: NetcdfSpec, full: StructType)
+    extends BoundsScanBuilder(full, "latitude") {
+  override def build(): Scan = {
+    val (latLo, latHi) = bounds("latitude")
+    new NetcdfScan(spec, required, latLo, latHi)
   }
-
-  override def pushedFilters(): Array[sources.Filter] = accepted
-
-  override def build(): Scan = new NetcdfScan(spec, required, latLo, latHi)
 }
 
 class NetcdfScan(spec: NetcdfSpec, required: StructType,
@@ -185,7 +122,7 @@ class NetcdfScan(spec: NetcdfSpec, required: StructType,
   // coordinate array — from EVERY distinct input file, verifying the
   // aligned-scan premise (same dims, bit-identical coordinate vectors).
   // The data variables themselves are never touched here.
-  @transient private lazy val planned: (Int, Int, Int, Int) = {
+  @transient private lazy val planned: (Int, Int) = {
     val byPath = spec.paths.zip(spec.varNames)
     val distinctPaths = spec.paths.distinct
     var dims0: Seq[Long] = null
@@ -211,34 +148,23 @@ class NetcdfScan(spec: NetcdfSpec, required: StructType,
         }
       } finally f.close()
     }
-    val (nLat, nLon) = (dims0(0).toInt, dims0(1).toInt)
-    var (lo, hi) = (0, nLat)
-    if (latLo.isFinite || latHi.isFinite) {
-      val lats = if (lats0 != null) lats0 else {
+    GraftSource.window(dims0(0).toInt, latLo, latHi) {
+      if (lats0 != null) lats0 else {
         val f = graft.sources.nc.NcFormat.open(spec.paths.head)
         try f.readDoubles(spec.latVar) finally f.close()
       }
-      val idx = lats.indices.filter(i => lats(i) >= latLo && lats(i) <= latHi)
-      if (idx.isEmpty) { lo = 0; hi = 0 }
-      else { lo = math.max(idx.min - 1, 0); hi = math.min(idx.max + 2, nLat) }
     }
-    (nLat, nLon, lo, hi)
   }
 
   override def description(): String = {
-    val (_, _, lo, hi) = planned
+    val (lo, hi) = planned
     s"graft-netcdf ${spec.paths.mkString(",")}#${spec.varNames.mkString(",")} rows=[$lo..$hi)"
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val (_, _, lo, hi) = planned
-    val nRows = hi - lo
-    if (nRows <= 0) return Array.empty
-    val bands = math.min(spec.partitions, nRows).max(1)
-    val step = math.ceil(nRows.toDouble / bands).toInt
-    (lo until hi by step)
-      .map(b => NetcdfInputPartition(b, math.min(b + step, hi)))
-      .toArray
+    val (lo, hi) = planned
+    GraftSource.bands(lo, hi, spec.partitions)
+      .map { case (b0, b1) => NetcdfInputPartition(b0, b1): InputPartition }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

@@ -1,17 +1,9 @@
 package graft.sources.v2
 
-import java.util
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.sources.shp.Shapefile
 
@@ -27,24 +19,25 @@ import graft.sources.shp.Shapefile
   * header envelope without parsing points (geopandas
   * `read_file(bbox=)` reproduced, global_forest_watch.py:160-163).
   */
-class ShapefileDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "graft-shp"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    ShapefileDataSource.Schema
-  override def getTable(
-      schema: StructType,
-      partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new ShapefileTable(properties.asScala.toMap)
-}
-
-object ShapefileDataSource {
-  val Schema: StructType = StructType(Seq(
+class ShapefileDataSource extends GraftSource("shp") {
+  override protected def schema(o: GraftOptions): StructType = StructType(Seq(
     StructField("record", IntegerType, nullable = false),
     StructField("zone", LongType, nullable = false),
     StructField("part", IntegerType, nullable = false),
     StructField("xs", ArrayType(DoubleType, containsNull = false), nullable = false),
     StructField("ys", ArrayType(DoubleType, containsNull = false), nullable = false)))
+  override protected def table(o: GraftOptions, schema: StructType): GraftTable = {
+    val spec = ShapefileSpec(
+      shp = o("path"),
+      idField = o("idField"),
+      bbox = o.get("bbox").map { s =>
+        val p = s.split(",").map(_.trim.toDouble)
+        require(p.length == 4, "bbox must be 'xlo,ylo,xhi,yhi'")
+        (p(0), p(1), p(2), p(3))
+      },
+      partitions = o.int("partitions", 8))
+    new GraftTable(s"graft_shp(${spec.shp})", schema)(() => new ShapefileScan(spec, schema))
+  }
 }
 
 case class ShapefileSpec(shp: String, idField: String,
@@ -53,26 +46,8 @@ case class ShapefileSpec(shp: String, idField: String,
   def dbf: String = shp.stripSuffix(".shp") + ".dbf"
 }
 
-class ShapefileTable(props: Map[String, String]) extends Table with SupportsRead {
-  private val spec = ShapefileSpec(
-    shp = props.getOrElse("path", sys.error("graft-shp: 'path' option required")),
-    idField = props.getOrElse("idfield", sys.error("graft-shp: 'idfield' option required")),
-    bbox = props.get("bbox").map { s =>
-      val p = s.split(",").map(_.trim.toDouble)
-      require(p.length == 4, "bbox must be 'xlo,ylo,xhi,yhi'")
-      (p(0), p(1), p(2), p(3))
-    },
-    partitions = props.getOrElse("partitions", "8").toInt)
-  override def name(): String = s"graft_shp(${spec.shp})"
-  override def schema(): StructType = ShapefileDataSource.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    () => new ShapefileScan(spec)
-}
-
-class ShapefileScan(spec: ShapefileSpec) extends Scan with Batch {
-  override def readSchema(): StructType = ShapefileDataSource.Schema
+class ShapefileScan(spec: ShapefileSpec, schema: StructType) extends Scan with Batch {
+  override def readSchema(): StructType = schema
   override def toBatch: Batch = this
 
   @transient private lazy val locs = Shapefile.index(spec.shx)
@@ -81,15 +56,9 @@ class ShapefileScan(spec: ShapefileSpec) extends Scan with Batch {
     s"graft-shp ${spec.shp} records=${locs.size}" +
       spec.bbox.map(b => s" bbox=$b").getOrElse("")
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val n = locs.size
-    if (n == 0) return Array.empty
-    val bands = math.min(spec.partitions, n).max(1)
-    val step = math.ceil(n.toDouble / bands).toInt
-    (0 until n by step)
-      .map(lo => ShapefilePartition(lo, math.min(lo + step, n)): InputPartition)
-      .toArray
-  }
+  override def planInputPartitions(): Array[InputPartition] =
+    GraftSource.bands(0, locs.size, spec.partitions)
+      .map { case (lo, hi) => ShapefilePartition(lo, hi): InputPartition }.toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
     new ShapefileReaderFactory(spec, locs)

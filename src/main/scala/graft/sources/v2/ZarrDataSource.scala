@@ -1,18 +1,9 @@
 package graft.sources.v2
 
-import java.util
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources
-import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.sources.zarr.ZarrStore
@@ -32,107 +23,61 @@ import graft.sources.zarr.ZarrStore
   * coordinate vector; every filter stays residual. NaN fills are
   * dropped at the scan (the converter contract's NaN→absent rule).
   */
-class ZarrDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "graft-zarr"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    ZarrDataSource.Schema
-  override def getTable(
-      schema: StructType,
-      partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new ZarrTable(properties.asScala.toMap)
-}
-
-object ZarrDataSource {
-  val Schema: StructType = StructType(Seq(
-    StructField("latitude", DoubleType, nullable = false),
-    StructField("longitude", DoubleType, nullable = false),
-    StructField("value", DoubleType, nullable = false)))
+class ZarrDataSource extends GraftSource("zarr") {
   /** 3-D variables carry the leading coordinate as `t`. */
-  val Schema3: StructType = StructType(
-    StructField("t", DoubleType, nullable = false) +: Schema.fields.toSeq)
+  override protected def schema(o: GraftOptions): StructType = {
+    val spec = ZarrSpec(o)
+    val latLon = Seq(
+      StructField("latitude", DoubleType, nullable = false),
+      StructField("longitude", DoubleType, nullable = false),
+      StructField("value", DoubleType, nullable = false))
+    spec.meta.shape.length match {
+      case 2 => StructType(latLon)
+      case 3 => StructType(StructField("t", DoubleType, nullable = false) +: latLon)
+      case n => sys.error(s"${spec.varName}: $n-D arrays unsupported (need 2 or 3)")
+    }
+  }
+  override protected def table(o: GraftOptions, schema: StructType): GraftTable = {
+    val spec = ZarrSpec(o)
+    new GraftTable(s"graft_zarr(${spec.store}#${spec.varName})", schema)(
+      new BoundsScanBuilder(schema, "latitude", "t") {
+        override def build(): Scan = {
+          val ((latLo, latHi), (tLo, tHi)) = (bounds("latitude"), bounds("t"))
+          new ZarrScan(spec, required, latLo, latHi, tLo, tHi)
+        }
+      })
+  }
 }
 
 case class ZarrSpec(store: String, varName: String, latVar: String,
-    lonVar: String, tVar: String, keepNaN: Boolean)
-
-class ZarrTable(props: Map[String, String]) extends Table with SupportsRead {
-  private val spec = ZarrSpec(
-    store = props.getOrElse("path", sys.error("graft-zarr: 'path' option required")),
-    varName = props.getOrElse("var", sys.error("graft-zarr: 'var' option required")),
-    latVar = props.getOrElse("latvar", "lat"),
-    lonVar = props.getOrElse("lonvar", "lon"),
-    tVar = props.getOrElse("tvar", "time"),
-    keepNaN = props.getOrElse("keepnan", "false").toBoolean)
-  override def name(): String = s"graft_zarr(${spec.store}#${spec.varName})"
-  // the variable's metadata, read once at planning: it fixes the schema
-  // (rank) and travels with every input partition
-  private lazy val meta = ZarrStore.readMeta(
+    lonVar: String, tVar: String, keepNaN: Boolean) {
+  /** The variable's metadata, read at planning: it fixes the schema
+    * (rank) and travels with every input partition.
+    */
+  @transient lazy val meta: ZarrStore.ArrayMeta = ZarrStore.readMeta(
     org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration,
-    s"${spec.store}/${spec.varName}")
-  private lazy val full: StructType = meta.shape.length match {
-    case 2 => ZarrDataSource.Schema
-    case 3 => ZarrDataSource.Schema3
-    case n => sys.error(s"${spec.varName}: $n-D arrays unsupported (need 2 or 3)")
-  }
-  override def schema(): StructType = full
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ZarrScanBuilder(spec, meta, full)
+    s"$store/$varName")
 }
 
-class ZarrScanBuilder(spec: ZarrSpec, meta: ZarrStore.ArrayMeta, full: StructType)
-    extends ScanBuilder
-    with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters {
-  private var required: StructType = full
-  private var latLo = Double.NegativeInfinity
-  private var latHi = Double.PositiveInfinity
-  private var tLo = Double.NegativeInfinity
-  private var tHi = Double.PositiveInfinity
-  private var accepted: Array[sources.Filter] = Array.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def pushFilters(filters: Array[sources.Filter]): Array[sources.Filter] = {
-    def num(v: Any): Option[Double] = v match {
-      case d: Double => Some(d)
-      case f: Float => Some(f.toDouble)
-      case i: Int => Some(i.toDouble)
-      case l: Long => Some(l.toDouble)
-      case _ => None
-    }
-    accepted = filters.filter {
-      case sources.GreaterThan("latitude", v) => num(v).exists { d => latLo = math.max(latLo, d); true }
-      case sources.GreaterThanOrEqual("latitude", v) => num(v).exists { d => latLo = math.max(latLo, d); true }
-      case sources.LessThan("latitude", v) => num(v).exists { d => latHi = math.min(latHi, d); true }
-      case sources.LessThanOrEqual("latitude", v) => num(v).exists { d => latHi = math.min(latHi, d); true }
-      case sources.GreaterThan("t", v) => num(v).exists { d => tLo = math.max(tLo, d); true }
-      case sources.GreaterThanOrEqual("t", v) => num(v).exists { d => tLo = math.max(tLo, d); true }
-      case sources.LessThan("t", v) => num(v).exists { d => tHi = math.min(tHi, d); true }
-      case sources.LessThanOrEqual("t", v) => num(v).exists { d => tHi = math.min(tHi, d); true }
-      case sources.EqualTo("t", v) =>
-        num(v).exists { d => tLo = math.max(tLo, d); tHi = math.min(tHi, d); true }
-      case _ => false
-    }
-    filters
-  }
-
-  override def pushedFilters(): Array[sources.Filter] = accepted
-
-  override def build(): Scan =
-    new ZarrScan(spec, meta, required, latLo, latHi, tLo, tHi)
+object ZarrSpec {
+  def apply(o: GraftOptions): ZarrSpec = ZarrSpec(
+    store = o("path"),
+    varName = o("var"),
+    latVar = o.getOrElse("latVar", "lat"),
+    lonVar = o.getOrElse("lonVar", "lon"),
+    tVar = o.getOrElse("tVar", "time"),
+    keepNaN = o.bool("keepNaN", false))
 }
 
-class ZarrScan(spec: ZarrSpec, meta: ZarrStore.ArrayMeta, required: StructType,
+class ZarrScan(spec: ZarrSpec, required: StructType,
     latLo: Double, latHi: Double, tLo: Double, tHi: Double)
     extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
 
   override def description(): String = s"graft-zarr ${spec.store}#${spec.varName}"
+
+  private def meta = spec.meta
 
   private def sc = org.apache.spark.sql.SparkSession.active.sparkContext
 
@@ -145,21 +90,13 @@ class ZarrScan(spec: ZarrSpec, meta: ZarrStore.ArrayMeta, required: StructType,
     val nChunkT = if (is3) (meta.shape(0) + meta.chunks(0) - 1) / meta.chunks(0) else 1
     val nChunkRows = (meta.shape(latDim) + meta.chunks(latDim) - 1) / meta.chunks(latDim)
     val nChunkCols = (meta.shape(lonDim) + meta.chunks(lonDim) - 1) / meta.chunks(lonDim)
-    // chunk pruning along axis `dim` from its coordinate vector `coord`,
-    // read only when a bound was pushed (one whole cell of slack each
-    // side — magnitude-safe; filters are residual)
-    def keep(dim: Int, coord: String, lo0: Double, hi0: Double): Int => Boolean =
-      if (!lo0.isFinite && !hi0.isFinite) _ => true
-      else {
-        val xs = ZarrStore.readVector(sc.hadoopConfiguration, s"${spec.store}/$coord")
-        val idx = xs.indices.filter(i => xs(i) >= lo0 && xs(i) <= hi0)
-        if (idx.isEmpty) _ => false
-        else {
-          val lo = math.max(idx.min - 1, 0)
-          val hi = math.min(idx.max + 1, xs.length - 1)
-          c => c * meta.chunks(dim) <= hi && (c + 1) * meta.chunks(dim) - 1 >= lo
-        }
-      }
+    // chunk pruning along axis `dim`: the chunks that overlap the index
+    // window of its coordinate vector `coord` (GraftSource.window)
+    def keep(dim: Int, coord: String, lo0: Double, hi0: Double): Int => Boolean = {
+      val (lo, hi) = GraftSource.window(meta.shape(dim), lo0, hi0)(
+        ZarrStore.readVector(sc.hadoopConfiguration, s"${spec.store}/$coord"))
+      c => c * meta.chunks(dim) < hi && (c + 1) * meta.chunks(dim) > lo
+    }
     val keepRow = keep(latDim, spec.latVar, latLo, latHi)
     val keepT: Int => Boolean =
       if (is3) keep(0, spec.tVar, tLo, tHi) else _ => true

@@ -4,8 +4,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Session
 
-/** Pins the conf profiles the mains get from `core.Session` and the
-  * SPARK_GRAFT_CONF grammar, without building a second session.
+/** Pins the conf profiles the mains get from `core.Session`, the
+  * SPARK_GRAFT_CONF grammar and which of its pairs apply, without
+  * building a second SparkContext.
   */
 class SessionSpec extends AnyFunSuite {
 
@@ -30,5 +31,21 @@ class SessionSpec extends AnyFunSuite {
     assert(Session.parseConf("k=v; k2 = v2;;bad;=x;k3=a=b") ==
       Seq("k" -> "v", "k2" -> "v2", "k3" -> "a=b"))
     assert(Session.parseConf("") == Nil)
+  }
+
+  test("SPARK_GRAFT_CONF applies runtime SQL confs and reports the rest as skipped") {
+    // a child session: its own SQL conf over the shared SparkContext
+    val conf = SparkSpec.session.newSession().conf
+    val removedKnobs = Seq(
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "32k",
+      "spark.sql.files.openCostInBytes" -> "65536",
+      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "4096",
+      "spark.sql.shuffle.partitions" -> "7")
+    val lines = Session.applyConf(conf, ("spark.master" -> "local[9]") +: removedKnobs)
+    assert(lines.head == "skipped spark.master: not a runtime SQL conf")
+    assert(lines.tail == removedKnobs.map { case (k, v) => s"$k=$v" })
+    removedKnobs.foreach { case (k, v) => assert(conf.get(k) == v, k) }
+    assert(conf.get("spark.sql.shuffle.partitions") == "7")
+    assert(SparkSpec.session.conf.get("spark.sql.shuffle.partitions") == "4")
   }
 }

@@ -108,6 +108,14 @@ class RasterRowReuseSpec extends SparkSpec {
       dis.toSet)
   }
 
+  test("graft-grid: latitude and longitude of a banded grid") {
+    assertReadsBack(
+      () => spark.read.format("graft-grid").option("latMax", 42.0).option("lonMin", 3.0)
+        .option("res", 0.5).option("nLat", lats.length).option("nLon", lons.length)
+        .option("partitions", "3").load(),
+      (for (i <- lats.indices; j <- lons.indices) yield Seq(lats(i), lons(j))).toSet)
+  }
+
   test("graft-grib: every column, withStep, over members and steps") {
     val cells = for {
       s <- Seq(24, 48); m <- 0 until 3; i <- lats.indices; j <- lons.indices
