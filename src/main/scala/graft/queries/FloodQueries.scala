@@ -308,21 +308,26 @@ object FloodQueries {
              sum(l_quantity) AS sum_v
       FROM lineitem GROUP BY 1, 2"""))
 
-  /** S4→yes: the reference's REAL NetCDF-4 threshold inputs, end-to-end.
+  /** S4→yes: the GloFAS NetCDF-4 threshold inputs, end-to-end.
     * Replays rp_combined_thresh_pq (rp_thresholds.py:108-131): each
     * RP{2,5,20}ythresholds_GloFASv40.nc unpivots to (latitude, longitude,
-    * threshold) via the graft-netcdf DSv2 source (ranged row-band reads of
-    * the contiguous variable), coordinates round to the 3-decimal GloFAS
-    * grid (as integer milli-keys — the robust float-join form of SURVEY
-    * §7.4), the three grids inner-join, and add_geometry synthesizes the
-    * grid-cell WKT box (transforms.py:268-315).
+    * threshold) via the graft-netcdf DSv2 source (each row band inflates
+    * the deflated chunks it intersects), coordinates round to the
+    * 3-decimal GloFAS grid (as integer milli-keys — the robust float-join
+    * form of SURVEY §7.4), the three grids inner-join, and add_geometry
+    * synthesizes the grid-cell WKT box (transforms.py:268-315).
     *
-    * The oracle reads parquet produced by a fully INDEPENDENT pure-python
-    * HDF5 parser (tools/nc_to_parquet.py → data/rp_*_thresh.parquet), so a
-    * hash match proves both format parsers and both combine pipelines
-    * agree bit-for-bit on all 644 000 real cells.
+    * The input is the in-repo fixture under data/rp_nc: the real files'
+    * 644 000 cells per grid (file and variable names kept), rewritten as
+    * chunked NetCDF-4 by Hdf5Writer from the committed python parse
+    * (graft.RpNcFixture; FIXTURES.md §10). The oracle reads that python
+    * parse (tools/nc_to_parquet.py → data/rp_*_thresh.parquet), which the
+    * same tool reproduces exactly from the fixture bytes, so a hash match
+    * proves the Scala reader and combine pipeline agree bit-for-bit with
+    * an independent HDF5 parser and DuckDB. The check against the
+    * netcdf-c-written originals lives in NetcdfSpec.
     */
-  private val NcDir = "/root/reference/auxiliary_data/flood"
+  private val NcDir = "/root/repo/data/rp_nc"
   private val PyParquetDir = "/root/repo/data"
 
   val q72RpCombinedNc = Q(
@@ -615,12 +620,12 @@ object FloodQueries {
   // END-TO-END flood integration (the reference's entire `forecast`
   // asset chain, discharge.py:223-409, from BYTES to final tables):
   // GRIB2 ensemble messages (multi-step, multi-member — the cf/pf split
-  // of io_managers.py:193-210) ⋈ the three REAL GloFAS RP NetCDF
-  // threshold files (rp_thresholds.py:108-131, read with the
-  // zero-shuffle aligned multi-scan) → exceedance flags → grouped exact
-  // quantiles → control join-back → peak/tendency/intensity → detailed
-  // + summary with WKT — ONE composed Catalyst DAG whose only
-  // materialization is the audited `detailed` cache
+  // of io_managers.py:193-210) ⋈ the three GloFAS RP NetCDF threshold
+  // files (rp_thresholds.py:108-131; q72's in-repo data/rp_nc fixture,
+  // read with the zero-shuffle aligned multi-scan) → exceedance flags →
+  // grouped exact quantiles → control join-back → peak/tendency/
+  // intensity → detailed + summary with WKT — ONE composed Catalyst DAG
+  // whose only materialization is the audited `detailed` cache
   // (FloodPipelineSpec pins that).
   //
   // The fixture ensemble grid is a 40×40 window OF the real GloFAS
@@ -653,7 +658,8 @@ object FloodQueries {
         col("value").as("dis24"))
   }
 
-  /** The real thresholds: three RP NetCDFs through the aligned
+  /** The GloFAS thresholds: the three RP NetCDFs of the data/rp_nc
+    * fixture (the real grids' values, see q72) through the aligned
     * zero-shuffle multi-scan (q130's path), area-restricted to the
     * fixture window (P3), coords widened to double for the rounded join.
     */
@@ -919,8 +925,9 @@ object FloodQueries {
     * exchanges (PlanSpec pins that). This is the source-side image of
     * `xr.open_dataset` aligning variables on shared dims
     * (rp_thresholds.py:108-131); at 100 TB it replaces q72's one wide
-    * union+pivot exchange with nothing. The oracle joins the three
-    * INDEPENDENT python-parsed parquets on exact coordinates.
+    * union+pivot exchange with nothing. The input is q72's data/rp_nc
+    * fixture; the oracle joins the three INDEPENDENT python-parsed
+    * parquets on exact coordinates.
     */
   lazy val q130RpZip = Q(
     "q130_rp_zip",

@@ -7,8 +7,11 @@ import graft.SparkSpec
 
 /** Pins the end-to-end flood integration composition (q140/q141): the
   * reference's whole `forecast` asset chain (discharge.py:223-409) from
-  * GRIB2 ensemble bytes + real RP NetCDF thresholds runs as ONE Catalyst
-  * DAG whose only materialization is the audited `detailed` cache.
+  * GRIB2 ensemble bytes + the RP NetCDF thresholds runs as ONE Catalyst
+  * DAG whose only materialization is the audited `detailed` cache. The
+  * thresholds are the in-repo data/rp_nc fixture: the real GloFAS grids'
+  * values, written as chunked NetCDF-4 by Hdf5Writer and cross-checked
+  * against the independent python HDF5 parser (FIXTURES.md §10).
   */
 class E2eFloodSpec extends SparkSpec {
 

@@ -36,9 +36,12 @@ class Hdf5WriterSpec extends SparkSpec {
 
   test("lookup3 checksum matches the netcdf-c-written reference header") {
     // root OHDR of the real RP2y file spans bytes 96..327; stored
-    // checksum 0xa42119c0 (verified independently in python)
-    val real = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-      "/root/reference/auxiliary_data/flood/RP2ythresholds_GloFASv40.nc"))
+    // checksum 0xa42119c0 (verified independently in python); the
+    // netcdf-c-written file lives outside the repo, so the case runs
+    // only where it is present (as in NetcdfSpec)
+    val path = "/root/reference/auxiliary_data/flood/RP2ythresholds_GloFASv40.nc"
+    assume(new java.io.File(path).isFile)
+    val real = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
     assert(Hdf5Writer.lookup3(real, 96, 327 - 96) == 0xa42119c0)
   }
 
