@@ -327,7 +327,9 @@ object FloodQueries {
     * an independent HDF5 parser and DuckDB. The check against the
     * netcdf-c-written originals lives in NetcdfSpec.
     */
-  private val NcDir = "/root/repo/data/rp_nc"
+  // resolved against the working directory, which sbt and tools/run.sh
+  // set to the repository root
+  private val NcDir = new java.io.File("data/rp_nc").getAbsolutePath
   private val PyParquetDir = "/root/repo/data"
 
   val q72RpCombinedNc = Q(
