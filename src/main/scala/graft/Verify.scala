@@ -30,9 +30,9 @@ object Verify {
     // canonicalized plan hash per query (r16 verdict item 7: coverage
     // beyond the 21 bench headliners) — written as a sidecar;
     // check.py warns on drift against the committed per-SF baseline.
-    // Full-run hashes are exactly reproducible; subset runs can differ
-    // for cache-sharing queries (the r7 lesson), which check.py handles
-    // by skipping the comparison under a SUBSET_RUN marker.
+    // Every query is built after the previous one's caches are released,
+    // so a hash does not depend on which queries ran before it: full,
+    // subset and incremental runs give the same hash per query.
     val planHashes = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // SPARK_GRAFT_INCREMENTAL=1 (r16 verdict item 8 — the sf1 grind):
     // reuse the PREVIOUS dump in this outDir for any query whose
@@ -82,11 +82,9 @@ object Verify {
         graft.sources.FsOps.delete(spark, s"$outDir/$name")
       }
       // queries run sequentially and the dump above is a full
-      // materialization, so nothing downstream still needs a cache a
-      // query registered for its own lazy plan (q162's eval-gram table
-      // + bloom view) — release it so a 200-query run never accumulates
-      // cached tables or temp views (the r16 advice item)
-      finally graft.core.ScopedCache.releaseAll()
+      // materialization: end the query's caches and checkpoints with it,
+      // so the next query neither reuses them nor finds them in memory
+      finally graft.core.Checkpoints.releaseAll(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -109,17 +107,11 @@ object Verify {
     // queries erred and the artifact showed 112/112 "all green").
     Files.writeString(Paths.get(s"$outDir/query_names.json"),
       SparkEntry.queries.keys.toSeq.sorted.map(q).mkString("[", ",", "]"))
-    // "_mode" lets check.py drift-compare FULL runs only: an
-    // incremental/subset run skips queries, which changes the
-    // cache-substitution context and legitimately re-renders scan nodes
-    // in cache-sharing queries (the r7 like-runs rule)
-    val mode = if (only.isDefined) "subset"
-      else if (nSkipped > 0) "incremental" else "full"
     // "_conf" records the applied SPARK_GRAFT_CONF: a conf-tainted run is
     // never drift-compared, so it can never be reseeded as the baseline
     val conf = sys.env.getOrElse("SPARK_GRAFT_CONF", "")
     Files.writeString(Paths.get(s"$outDir/plan_hashes.json"),
-      (Seq(s"${q("_mode")}: ${q(mode)}", s"${q("_conf")}: ${q(conf)}") ++
+      (Seq(s"${q("_conf")}: ${q(conf)}") ++
         planHashes.toSeq.sortBy(_._1)
         .map { case (k, v) => s"${q(k)}: ${q(v)}" }).mkString("{", ",", "}"))
     if (nSkipped > 0)

@@ -1,9 +1,10 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** Block management for per-round `localCheckpoint` loops.
+/** Block management for per-round `localCheckpoint` loops, and the one
+  * end-of-query release.
   *
   * `Dataset.unpersist` only reaches cache-manager entries — the blocks
   * a localCheckpoint stores belong to the underlying RDD and are
@@ -96,5 +97,22 @@ object Checkpoints {
         }
       case None => d => d.localCheckpoint(eager = true)
     }
+  }
+
+  /** End every query-scoped materialization in `spark`: drop all
+    * cache-manager entries, then unpersist every persistent RDD —
+    * local-checkpoint blocks and RDD-level `persist`s included, which
+    * `clearCache` does not reach. A query's `.cache()`s and checkpoints
+    * live until this runs: Verify calls it after each query's dump (the
+    * dump is a full materialization, so nothing still reads them) and
+    * specs call it in teardown. Bench never does — its passes time the
+    * warm cache on purpose. Spark's plan-keyed cache manager is then the
+    * only reuse across calls: a rebuild of the same plan within one
+    * query's lifetime hits the same entry.
+    */
+  def releaseAll(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
   }
 }

@@ -15,17 +15,15 @@ import org.apache.spark.sql.DataFrame
   * nondeterminism is exactly the noise this fingerprint must ignore).
   * Run-specific tokens are normalized away so the hash is stable across
   * JVMs and checkouts: expression IDs, plan IDs, per-session temp/dir
-  * paths, exchange/subquery IDs, and file-listing byte counts.
+  * paths, the checkout path of in-repo fixtures, exchange/subquery IDs,
+  * broadcast ids, and file-listing byte counts.
   *
-  * Comparability caveat: hashes are comparable only between runs of the
-  * SAME query set. Spark substitutes any logical subtree that matches an
-  * existing cache entry, so a query sharing a cacheable subtree with
-  * another query in the run gets different scan nodes in a full run than
-  * in a SPARK_GRAFT_ONLY subset run (verified: full-vs-full and
-  * subset-vs-subset reproduce exactly across JVMs; full-vs-subset
-  * differs for the cache-sharing dedup queries). Round-over-round
-  * BENCH_r{N} comparisons are always full-run-vs-full-run, so this
-  * never affects the intended use.
+  * Cache context: Spark substitutes any logical subtree that matches a
+  * live cache entry, so a frame built while another query's caches are
+  * still held can hash differently. Verify releases every query's caches
+  * before building the next one (`Checkpoints.releaseAll`), which makes
+  * each query's hash independent of the queries run before it — a full
+  * run, a reversed run and a SPARK_GRAFT_ONLY run agree.
   */
 object PlanHash {
 
@@ -64,6 +62,15 @@ object PlanHash {
       // absolute paths (sf dirs, session tmpdirs, bucketed-table dirs)
       .replaceAll("file:[^\\s,\\]\\)]+", "path")
       .replaceAll("/[A-Za-z0-9_./-]*(?:testdata|tmp|target)/[^\\s,\\]\\)]*", "path")
+      // the checkout itself: in-repo fixtures are read by absolute path,
+      // under the working directory (the graft-netcdf scan prints
+      // <cwd>/data/rp_nc/...) or a fixed checkout path, so print every
+      // path into a data/ dir relative to the repository root
+      .replaceAll("/(?:[A-Za-z0-9_.-]+/)*?(data/)", "$1")
+      // broadcast variables print their SparkContext-wide id
+      // (ArgmaxCosine's centroid index: Broadcast(4) when its query runs
+      // first, Broadcast(306) after the vector queries)
+      .replaceAll("Broadcast\\(\\d+\\)", "Broadcast(x)")
       // TRUNCATED filter-metadata values (spark.sql.maxMetadataStringLength
       // cuts at 100 RAW chars, so the cut point shifts with exprId digit
       // counts — a rebuild crossing a 3→4 digit boundary hashed

@@ -43,14 +43,7 @@ object ConnectedComponents {
     */
   def run(edges: DataFrame, maxIter: Int = 50,
       checkpointDir: Option[String] = None): DataFrame = {
-    checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
-    // reliable and local checkpoints both truncate lineage; only the
-    // reliable one survives executor loss. Mixing them would not help:
-    // a round downstream of a lost LOCAL checkpoint is unrecoverable,
-    // so in reliable mode EVERY round goes to the checkpoint store.
-    def save(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(eager = true)
-      else df.localCheckpoint(eager = true)
+    val save = graft.core.Checkpoints.saver(edges, checkpointDir)
 
     val sym = save(edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"))
@@ -85,8 +78,8 @@ object ConnectedComponents {
       val cur = labelSum(jumped)
       converged = cur.compareTo(prev) == 0
       prev = cur
-      // free the superseded round's local-checkpoint blocks (no-op for
-      // reliable checkpoints — their rdd holds no block-manager storage)
+      // free the superseded round: its local-checkpoint blocks, or its
+      // reliable checkpoint files
       graft.core.Checkpoints.release(labels)
       labels = jumped
       iter += 1

@@ -52,88 +52,20 @@ object Similarity {
         array((0 until d).map(i => col(s"_c$i")): _*).as("centroid"))
   }
 
-  /** Index-cache key: the OWNING SESSION BY REFERENCE plus the logical
-    * key. The cached DataFrame pins its session for the entry's whole
-    * lifetime, so reference identity is collision-free (the GC can never
-    * recycle a live key's identity), unlike a bare identityHashCode
-    * string.
-    */
-  private final class SessionKey(
-      val session: org.apache.spark.sql.SparkSession, val key: String) {
-    override def equals(o: Any): Boolean = o match {
-      case that: SessionKey => (that.session eq session) && that.key == key
-      case _ => false
-    }
-    override def hashCode: Int =
-      System.identityHashCode(session) * 31 + key.hashCode
-  }
-
-  private val indexCache =
-    new java.util.concurrent.ConcurrentHashMap[SessionKey, DataFrame]()
-
-  /** Drop every entry owned by a stopped session (called on each index
-    * access, and from the context-stop listener registered per entry).
-    */
-  private def sweepIndexCache(): Unit = {
-    val it = indexCache.keySet().iterator()
-    while (it.hasNext) {
-      if (it.next().session.sparkContext.isStopped) it.remove()
-    }
-  }
-
-  private[operators] def evictSession(
-      session: org.apache.spark.sql.SparkSession): Unit = {
-    val it = indexCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey.session eq session) {
-        // free cache storage too when the session is still alive (a
-        // stopped context dropped its executors' storage already)
-        if (!session.sparkContext.isStopped)
-          e.getValue.unpersist(blocking = false)
-        it.remove()
-      }
-    }
-  }
-
-  /** Explicitly drop one persisted index: unpersists the cached
-    * centroid table and removes the entry, so a long-lived session that
-    * rebuilds indexes (daily re-index, A/B keys) does not accumulate
-    * cache storage. No-op if the key is absent.
-    */
-  def dropIndex(session: org.apache.spark.sql.SparkSession, key: String): Unit =
-    Option(indexCache.remove(new SessionKey(session, key))).foreach { df =>
-      if (!session.sparkContext.isStopped) df.unpersist(blocking = false)
-    }
-
-  private[operators] def cachedIndexCount: Int = indexCache.size()
-
-  /** Persisted IVF index: the centroid table built ONCE per (session,
-    * key), materialized in cache storage, and reused by every subsequent
-    * search — so serving queries measure serving, not index build. At
-    * cluster scale this is a written table (build job separate from query
-    * jobs); in one JVM the cached DataFrame is its image.
-    *
-    * Entries of stopped sessions are evicted both by the access-time
-    * sweep and a context-stop listener, so a long-lived multi-session
-    * JVM cannot accumulate dead indexes.
+  /** Persisted IVF index: the centroid table cached and materialized
+    * eagerly, so the searches that take it as `precomputedCentroids`
+    * measure serving, not index build. At cluster scale this is a
+    * written table (build job separate from query jobs); in one JVM the
+    * cache entry is its image. Spark keys that entry by plan, so a
+    * rebuild over the same vectors reuses it until the caller releases
+    * the query's caches (`graft.core.Checkpoints.releaseAll`).
     */
   def ivfIndex(
-      vecs: DataFrame, clusterCol: String, vecCol: String, key: String,
+      vecs: DataFrame, clusterCol: String, vecCol: String,
       dim: Int = -1): DataFrame = {
-    sweepIndexCache()
-    val session = vecs.sparkSession
-    indexCache.computeIfAbsent(new SessionKey(session, key), { _ =>
-      session.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-            evictSession(session)
-        })
-      val c = centroids(vecs, clusterCol, vecCol, dim).cache()
-      c.count() // materialize eagerly: the build cost lands here, once
-      c
-    })
+    val c = centroids(vecs, clusterCol, vecCol, dim).cache()
+    c.count() // materialize eagerly: the build cost lands here
+    c
   }
 
   /** IVF top-k: probe the `nprobe` clusters whose centroids are nearest

@@ -786,7 +786,6 @@ object DedupQueries {
       val evalGk = docs.filter(col("doc_id") % 199 === 0)
         .select(explode(StreamCuration.gramKeys(col("text"))).as("gk"))
         .distinct().cache()
-      graft.core.ScopedCache.put("q183_eval", evalGk)
       val nEval = evalGk.count()
       val m = math.max(65536L,
         math.min(1L << 27, ((nEval * 12L + 63L) / 64L) * 64L))

@@ -144,17 +144,23 @@ object PipelineQueries {
   val q43Sketches = Q(
     "q43_sketches",
     (s, dir) => {
-      Tables.load(s, dir, "lineitem")
-        .groupBy("l_returnflag")
+      val li = Tables.load(s, dir, "lineitem")
+      // one distinct key per aggregation: Spark rewrites two distinct
+      // keys in one agg into an Expand whose group order follows the
+      // keys' expression-id hashes, so the plan (and its hash) changed
+      // with how many expressions the JVM had made before the build
+      val parts = li.groupBy("l_returnflag")
+        .agg(approx_count_distinct(col("l_partkey"), rsd = 0.02).as("_ap"),
+          countDistinct(col("l_partkey")).as("exact_parts"))
+      li.groupBy("l_returnflag")
         .agg(
           approx_count_distinct(col("l_orderkey"), rsd = 0.02).as("_ao"),
           countDistinct(col("l_orderkey")).as("exact_orders"),
-          approx_count_distinct(col("l_partkey"), rsd = 0.02).as("_ap"),
-          countDistinct(col("l_partkey")).as("exact_parts"),
           approx_percentile(col("l_extendedprice"), lit(0.5), lit(10000))
             .as("_amed"),
           percentile(col("l_extendedprice"), lit(0.4)).as("_p40"),
           percentile(col("l_extendedprice"), lit(0.6)).as("_p60"))
+        .join(broadcast(parts), "l_returnflag")
         .select(col("l_returnflag"), col("exact_orders"), col("exact_parts"),
           (abs(col("_ao") - col("exact_orders")) <=
             col("exact_orders") * 0.10).as("orders_within_10pct"),

@@ -108,7 +108,7 @@ object FileReplay {
   }
 
   /** Run a streaming transform of the staged replay to completion and
-    * return the memory-sink table. `build` maps the file-source stream
+    * return the memory sink's rows. `build` maps the file-source stream
     * (schema = `schema`) to the streaming result. With a `debug` sink
     * (by default stderr when SPARK_GRAFT_STREAM_DEBUG is set) every
     * batch's duration breakdown and state operator metrics go to it
@@ -137,7 +137,12 @@ object FileReplay {
       try sq.processAllAvailable() finally sq.stop()
       for (l <- log; out <- debug) l.of(sq.runId).foreach(out)
     } finally log.foreach(s.streams.removeListener)
-    s.table(queryName)
+    // the memory sink publishes its rows as a temp view named after the
+    // query: resolve it once, then drop the name, so the query leaves no
+    // view behind (the returned frame holds the sink's plan directly)
+    val out = s.table(queryName)
+    s.catalog.dropTempView(queryName)
+    out
   }
 
   private val streamDebug: Option[String => Unit] =

@@ -24,12 +24,20 @@ class PlanHashSpec extends SparkSpec {
     val raw =
       """*(2) Project [l_orderkey#123L, revenue#4567]
         |+- Exchange hashpartitioning(k#12, 32), [plan_id=345]
+        |   +- Project [argmaxcosine(vec#7, cl#8L, Broadcast(306)) AS a#9]
+        |   +- BatchScan graft-netcdf /home/u/graft/data/rp_nc/RP2ythresholds_GloFASv40.nc#2yRP_GloFASv4 rows=[0..460)
         |   +- FileScan parquet [k#12] Location: InMemoryFileIndex(1 paths)[file:/root/testdata/sf0.1/lineitem.parquet], Statistics(sizeInBytes=12.3 MiB)""".stripMargin
     val canon = PlanHash.canonicalize(raw)
     assert(!canon.contains("#123"), canon)
     assert(!canon.contains("plan_id=345"), canon)
     assert(!canon.contains("sf0.1"), canon)
     assert(!canon.contains("12.3"), canon)
+    // broadcast ids are a SparkContext-wide counter
+    assert(!canon.contains("306"), canon)
+    assert(canon.contains("Broadcast(x)"), canon)
+    // an in-repo fixture reads the same from any checkout
+    assert(!canon.contains("/home/u/graft"), canon)
+    assert(canon.contains(" data/rp_nc/RP2ythresholds_GloFASv40.nc#"), canon)
     // dtype suffix survives — a long→int change must move the hash
     assert(canon.contains("#xL"), canon)
   }

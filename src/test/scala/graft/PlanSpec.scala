@@ -1,5 +1,7 @@
 package graft
 
+import org.scalatest.BeforeAndAfterEach
+
 import graft.queries.Registry
 
 /** Physical-plan regression tests for the scale-critical properties the
@@ -8,8 +10,12 @@ import graft.queries.Registry
   * sort-merge join against a dimension table, or an unpushed filter fails
   * here long before it would show up in a benchmark at scale.
   */
-class PlanSpec extends SparkSpec {
+class PlanSpec extends SparkSpec with BeforeAndAfterEach {
   private val dir = "/root/testdata/sf0.001"
+
+  // each test's query ends with the test: its caches and checkpoints
+  // are released, as Verify releases them after each query
+  override def afterEach(): Unit = graft.core.Checkpoints.releaseAll(spark)
 
   private def plan(name: String): String =
     Registry.queries(name)(spark, dir).queryExecution.executedPlan.toString
@@ -82,7 +88,6 @@ class PlanSpec extends SparkSpec {
     val p = plan("q161_image_dhash")
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
-    spark.sharedState.cacheManager.clearCache()
   }
 
 
@@ -383,7 +388,6 @@ class PlanSpec extends SparkSpec {
     val exKeys = "Exchange hashpartitioning\\((\\w+)".r
       .findAllMatchIn(p).map(_.group(1)).toSet
     assert(exKeys.size <= 2, s"train gram scan gained extra shuffles ($exKeys):\n$p")
-    graft.core.ScopedCache.releaseAll()
   }
 
   test("q163: classifier weights join is a broadcast, never a shuffle of features") {

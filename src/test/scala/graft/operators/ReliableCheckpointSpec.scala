@@ -54,6 +54,21 @@ class ReliableCheckpointSpec extends SparkSpec {
     (1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L),
     (5L, 6L), (6L, 4L), (7L, 1L), (7L, 4L), (8L, 7L))
 
+  test("ConnectedComponents.run: reliable arm == local arm, one checkpoint per round") {
+    val e = edges.toDF("src", "dst")
+    val local = ConnectedComponents.run(e)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(local.values.toSet == Set(1L)) // one component
+    val dir = tmp("cc")
+    // statics (sym, labels_0) + one per round: 3 rounds on this graph
+    // (two relabelling rounds, then the stable-sum round)
+    val rel = pinned(dir, 2 + 3) {
+      ConnectedComponents.run(e, checkpointDir = Some(dir.toString))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    assert(rel == local)
+  }
+
   test("PageRank.run: reliable arm == local arm, one checkpoint per round") {
     val e = edges.toDF("src", "dst")
     val rounds = 4

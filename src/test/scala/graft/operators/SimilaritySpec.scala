@@ -107,8 +107,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("ivfSearch through the persisted index equals the build-per-query path") {
     val query = Seq.tabulate(12)(i => if (i == 4) 10.0 else 0.1)
-    val idx = Similarity.ivfIndex(clustered, "cluster", "vec",
-      key = "spec-clustered", dim = 12)
+    val idx = Similarity.ivfIndex(clustered, "cluster", "vec", dim = 12)
     val viaIndex = Similarity.ivfSearch(clustered, "cluster", "vec", "vec_id",
       query, nprobe = 1, k = 5, precomputedCentroids = Some(idx))
       .select("vec_id").as[Long].collect().toSeq
@@ -116,49 +115,20 @@ class SimilaritySpec extends SparkSpec {
       query, nprobe = 1, k = 5)
       .select("vec_id").as[Long].collect().toSeq
     assert(viaIndex == rebuilt)
-    // second lookup is the SAME cached plan (no rebuild)
-    assert(Similarity.ivfIndex(clustered, "cluster", "vec",
-      key = "spec-clustered") eq idx)
-  }
-
-  test("indexCache is keyed by sessionUUID and evictable per session") {
-    val s2 = spark.newSession()
-    val clustered2 = s2.createDataFrame(
-      java.util.Arrays.asList(clustered.collect(): _*), clustered.schema)
-    val before = Similarity.cachedIndexCount
-    val idx2 = Similarity.ivfIndex(clustered2, "cluster", "vec",
-      key = "evict-spec", dim = 12)
-    assert(Similarity.cachedIndexCount == before + 1)
-    // a different session with the same logical key gets its own entry
-    assert(!(Similarity.ivfIndex(clustered, "cluster", "vec",
-      key = "evict-spec", dim = 12) eq idx2))
-    assert(Similarity.cachedIndexCount == before + 2)
-    // the context-stop listener calls exactly this: the session's
-    // entries vanish while other sessions' (incl. any earlier tests')
-    // survive, and re-evicting is a no-op
-    Similarity.evictSession(s2)
-    assert(Similarity.cachedIndexCount == before + 1)
-    Similarity.evictSession(s2)
-    assert(Similarity.cachedIndexCount == before + 1)
-  }
-
-  test("dropIndex unpersists the cached centroid storage on a live session") {
-    val before = Similarity.cachedIndexCount
-    val idx = Similarity.ivfIndex(clustered, "cluster", "vec",
-      key = "drop-spec", dim = 12)
-    assert(Similarity.cachedIndexCount == before + 1)
-    assert(idx.storageLevel.useMemory, "index not cached")
-    Similarity.dropIndex(spark, "drop-spec")
-    assert(Similarity.cachedIndexCount == before)
-    assert(!idx.storageLevel.useMemory,
-      "dropIndex left the centroid table persisted")
-    // absent key: no-op
-    Similarity.dropIndex(spark, "drop-spec")
-    // a rebuild after the drop is a fresh entry, not the old reference
-    val again = Similarity.ivfIndex(clustered, "cluster", "vec",
-      key = "drop-spec", dim = 12)
-    assert(!(again eq idx))
-    Similarity.dropIndex(spark, "drop-spec")
+    // a second build plans an InMemoryRelation over the SAME cache
+    // entry (Spark's plan-keyed cache manager) and adds no new one
+    def builders(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.withCachedData.collect {
+        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
+          r.cacheBuilder
+      }
+    def persisted = spark.sparkContext.getPersistentRDDs.size
+    val before = persisted
+    val again = Similarity.ivfIndex(clustered, "cluster", "vec", dim = 12)
+    val Seq(b0) = builders(idx)
+    val Seq(b1) = builders(again)
+    assert(b1 eq b0)
+    assert(persisted == before)
   }
 
   test("ivfSearch with nprobe=all equals brute force everywhere") {
