@@ -11,9 +11,8 @@ import graft.sources.nc.Hdf5Writer
   * `Hdf5Writer.writeGrid` at `chunkRows = 20` (23 full row bands, no
   * padded edge chunk). Coordinates are the parquet's own doubles and
   * values are written verbatim, the netCDF default fill 9.96921e36 of the
-  * land cells included. The Hadoop `.crc` side file of each output is
-  * removed. FIXTURES.md §10 records each file's md5 and the cross-check
-  * with `tools/nc_to_parquet.py`.
+  * land cells included. FIXTURES.md §10 records each file's md5 and the
+  * cross-check with `tools/nc_to_parquet.py`.
   *
   * Usage: tools/run.sh graft.RpNcFixture [dataDir]  (default: data)
   */
@@ -36,7 +35,6 @@ object RpNcFixture {
       val name = s"RP${n}ythresholds_GloFASv40.nc"
       Hdf5Writer.writeGrid(df, s"$outDir/$name", varName,
         "latitude", "longitude", varName, lats, lons, ChunkRows)
-      new java.io.File(outDir, s".$name.crc").delete()
       println(s"$outDir/$name: ${lats.length} x ${lons.length}, $varName")
     } finally spark.stop()
   }

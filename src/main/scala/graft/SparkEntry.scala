@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.queries.Registry
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The engine's entry point (build plan: SURVEY.md §7).
   * The query surface itself lives in graft.queries (one `Q` per operator
   * row of SURVEY §2, each with its DuckDB oracle when SQL-expressible).
   */

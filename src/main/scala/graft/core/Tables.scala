@@ -19,6 +19,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final class SchemaDriftException(msg: String) extends RuntimeException(msg)
 
 object Tables {
+
+  /** The in-repo fixture root `data/`, resolved against the working
+    * directory, which sbt and tools/run.sh set to the repository root
+    * (`PlanHash` prints paths into it relative to that root).
+    */
+  val DataDir: String = new java.io.File("data").getAbsolutePath
+
   val All: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")

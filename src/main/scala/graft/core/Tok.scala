@@ -16,8 +16,8 @@ import graft.functions.UnicodeTokens
   * corpora).
   *
   * Invariant (the migration's regression gate): on pure-ASCII text the
-  * kernel produces EXACTLY the tokens of the legacy
-  * `filter(split(lower(text), "\\s+"), _.nonEmpty)` — so adopting this
+  * kernel produces EXACTLY the tokens of the legacy lowercased `\s+`
+  * split with empties dropped ([[legacyWords]]) — so adopting this
   * seam moves NO output on whitespace-script corpora
   * (UnicodeTokensSpec pins it property-style).
   *
@@ -28,11 +28,18 @@ import graft.functions.UnicodeTokens
   */
 object Tok {
 
-  /** Script-aware word tokens of lower(text) — the default seam.
+  /** Script-aware word tokens of the lowercased text — the default seam.
     * Never yields empty or null tokens (runs are maximal non-separator
     * spans), so no length>0 filter is needed downstream.
+    *
+    * One kernel lowercases and splits ([[UnicodeTokens]] with
+    * `lowercase`), bit-identical to Spark's `lower` followed by the
+    * tokenizer (UnicodeTokensSpec). Spark's own `lower` is kept out: on
+    * non-ASCII text it initializes `CollationAwareUTF8String`, whose
+    * ~2 s static title-case table stalls every task thread of the JVM
+    * that first meets such a document.
     */
-  def words(text: Column): Column = UnicodeTokens(lower(text))
+  def words(text: Column): Column = UnicodeTokens.lowered(text)
 
   /** Case-preserving variant (the few case-sensitive consumers). */
   def wordsCased(text: Column): Column = UnicodeTokens(text)
@@ -46,10 +53,10 @@ object Tok {
 
   /** DuckDB fragment producing the same token list as [[words]] over
     * the SQL expression `expr` (usually a column name). Generated from
-    * the kernel's own pattern constant.
+    * the kernel's own pattern constant; `lcase` is DuckDB's `lower`.
     */
   def sqlWords(expr: String): String =
-    "regexp_extract_all(lower(" + expr + "), '" + UnicodeTokens.Re2Pattern + "')"
+    "regexp_extract_all(lcase(" + expr + "), '" + UnicodeTokens.Re2Pattern + "')"
 
   /** DuckDB twin of [[wordsCased]]. */
   def sqlWordsCased(expr: String): String =

@@ -6,7 +6,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
+import com.ibm.icu.lang.UCharacter
 
 /** Script-aware tokenizer — the r16 verdict's top item: the whole text
   * family splits on `\s+`, so a CJK/Thai document is ONE token and
@@ -43,9 +45,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * versions; chars added in newer Unicode versions could diverge, which
   * is a fixture-design constraint, not a runtime hazard.
   *
-  * Lowercasing is the CALLER's step (`lower(col)` before this) — kept
-  * out of the kernel so the segmentation is case-independent and the
-  * oracle mirrors it with SQL `lower`.
+  * `lowercase = true` lowercases inside the same pass, with the exact
+  * semantics of Spark's default (UTF8_BINARY, ICU case mappings)
+  * `lower()`: all-ASCII input lowercases A–Z byte-wise and splits on
+  * bytes; anything else goes through
+  * `UCharacter.toLowerCase(s.toValidString)`, the call
+  * `CollationAwareUTF8String.toLowerCaseSlow` makes. Calling ICU
+  * directly keeps `CollationAwareUTF8String` out of the JVM: its static
+  * initializer builds a title-case table over all 1,114,112 code points
+  * (~2 s, while every other task thread waits on the class-init lock).
+  * The segmentation itself is case-independent, and the oracle mirrors
+  * the lowercase step with DuckDB's `lcase` (`Tok.sqlWords`).
   *
   * INDIC / COMBINING-MARK segmentation (r17 verdict #8, decided r18 —
   * documented behavior, pinned by UnicodeTokensSpec):
@@ -71,10 +81,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * Reference has no text operators; this serves the LLM-training-data
   * brief (multilingual corpus curation at 100 TB).
   */
-case class UnicodeTokens(child: Expression) extends UnaryExpression {
+case class UnicodeTokens(child: Expression, lowercase: Boolean = false)
+    extends UnaryExpression {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullIntolerant: Boolean = true
+
+  // the case-preserving form prints as it did before the flag existed,
+  // so the plans (and plan hashes) of its callers do not move
+  override protected def stringArgs: Iterator[Any] =
+    if (lowercase) super.stringArgs else Iterator(child)
 
   override def checkInputDataTypes()
       : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
@@ -86,12 +102,15 @@ case class UnicodeTokens(child: Expression) extends UnaryExpression {
           s"unicode_tokens needs string, got $other")
     }
 
-  override protected def nullSafeEval(input: Any): Any =
-    UnicodeTokens.compute(input.asInstanceOf[UTF8String])
+  override protected def nullSafeEval(input: Any): Any = {
+    val s = input.asInstanceOf[UTF8String]
+    if (lowercase) UnicodeTokens.computeLower(s) else UnicodeTokens.compute(s)
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val cls = UnicodeTokens.getClass.getName.stripSuffix("$")
-    defineCodeGen(ctx, ev, c => s"$cls.compute($c)")
+    val fn = if (lowercase) "computeLower" else "compute"
+    defineCodeGen(ctx, ev, c => s"$cls.$fn($c)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): UnicodeTokens =
@@ -103,14 +122,26 @@ object UnicodeTokens {
   def apply(col: Column): Column =
     GraftColumnBridge.toColumn(UnicodeTokens(GraftColumnBridge.toExpression(col)))
 
+  /** Tokens of `lower(col)` from one kernel (see `lowercase`). */
+  def lowered(col: Column): Column =
+    GraftColumnBridge.toColumn(
+      UnicodeTokens(GraftColumnBridge.toExpression(col), lowercase = true))
+
   private def isSep(cp: Int): Boolean =
     cp == ' ' || cp == '\t' || cp == '\n' || cp == '\r' ||
       cp == '\f' || cp == 0x0B || cp == 0x3000
 
+  /** The lowest Han/Hiragana/Katakana/Thai code point on this JDK
+    * (U+0E01 THAI CHARACTER KO KAI); everything below it skips the
+    * `UnicodeScript.of` binary search (UnicodeTokensSpec checks the
+    * whole code-point range).
+    */
+  val FirstSingleton: Int = 0x0E01
+
   /** Singleton-script membership. Public so oracle-side helpers and
     * specs classify identically.
     */
-  def isSingleton(cp: Int): Boolean = {
+  def isSingleton(cp: Int): Boolean = cp >= FirstSingleton && {
     val s = Character.UnicodeScript.of(cp)
     (s eq Character.UnicodeScript.HAN) ||
       (s eq Character.UnicodeScript.HIRAGANA) ||
@@ -118,11 +149,46 @@ object UnicodeTokens {
       (s eq Character.UnicodeScript.THAI)
   }
 
-  def compute(s: UTF8String): ArrayData = {
+  def compute(s: UTF8String): ArrayData = tokenize(s.toString)
+
+  /** Tokens of `lower(s)`: bit-identical to `compute(lower(s))`. */
+  def computeLower(s: UTF8String): ArrayData =
+    if (s.isFullAscii) asciiLower(s)
+    else tokenize(UCharacter.toLowerCase(s.toValidString))
+
+  /** All-ASCII input: lowercase into one fresh buffer and cut the tokens
+    * out of it without copying (no ASCII code point is a singleton, so
+    * tokens are exactly the runs between separator bytes).
+    */
+  private def asciiLower(s: UTF8String): ArrayData = {
+    val n = s.numBytes
+    val base = s.getBaseObject
+    val off = s.getBaseOffset
+    val buf = new Array[Byte](n)
+    val out = new java.util.ArrayList[UTF8String](16)
+    var runStart = -1
+    var i = 0
+    while (i < n) {
+      val b = Platform.getByte(base, off + i)
+      if (isSep(b)) {
+        if (runStart >= 0) {
+          out.add(UTF8String.fromBytes(buf, runStart, i - runStart))
+          runStart = -1
+        }
+      } else {
+        buf(i) = if (b >= 'A' && b <= 'Z') (b + 32).toByte else b
+        if (runStart < 0) runStart = i
+      }
+      i += 1
+    }
+    if (runStart >= 0) out.add(UTF8String.fromBytes(buf, runStart, n - runStart))
+    new GenericArrayData(out.toArray)
+  }
+
+  private def tokenize(str: String): ArrayData = {
     // one java String per row: codepoint classification needs chars,
     // and the tokens are fresh UTF8Strings anyway — the allocation is
     // the same order as the output
-    val str = s.toString
     val n = str.length
     val out = new java.util.ArrayList[UTF8String](16)
     var i = 0

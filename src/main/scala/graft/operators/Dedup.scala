@@ -56,52 +56,54 @@ object Dedup {
     pmod(shiftright(gk, 15 * j), lit(m))
   }
 
-  /** Distinct word n-gram shingles of a text column. Docs with fewer
-    * than n tokens yield an empty array (NOT sequence(1, 0), which is
-    * DESCENDING in Spark and feeds slice an illegal start of 0).
-    * Tokenization is the script-aware default seam ([[graft.core.Tok]])
-    * since r18 — CJK/Thai docs shingle over singleton codepoints instead
-    * of collapsing into one `\s+` token; ASCII shingles are unchanged
-    * (the kernel degenerates to the legacy split there).
+  /** Distinct word n-gram shingles of a text column, in first-occurrence
+    * order. Docs with fewer than n tokens (and null text) yield an empty
+    * array. Tokenization is the script-aware default seam
+    * ([[graft.core.Tok]]) since r18 — CJK/Thai docs shingle over
+    * singleton codepoints instead of collapsing into one `\s+` token;
+    * ASCII shingles are unchanged (the kernel degenerates to the legacy
+    * split there). One codegen'd kernel ([[graft.functions.WordShingles]])
+    * builds them: the higher-order chain it replaced ran interpreted, and
+    * where a `size(sh) > 0` Filter was pushed below the projection it
+    * re-tokenized the document once per shingle (~50× per doc). A caller
+    * that filters on the shingles should do so above a materialization
+    * ([[minhashCandidates]]), or the filter still re-inlines the
+    * tokenizer once.
     */
-  def shingles(text: Column, n: Int): Column = {
-    val toks = graft.core.Tok.words(text)
-    array_distinct(
-      filter(
-        when(size(toks) >= n,
-          transform(sequence(lit(1), size(toks) - (n - 1)),
-            i => concat_ws(" ", slice(toks, i, lit(n)))))
-          .otherwise(array().cast("array<string>")),
-        s => length(s) > 0))
-  }
+  def shingles(text: Column, n: Int): Column =
+    graft.functions.WordShingles(graft.core.Tok.words(text), n)
+
+  /** `xxhash64` of every shingle (one kernel, bit-identical to
+    * `transform(sh, s -> xxhash64(s))`).
+    */
+  def shingleHashes(shingleCol: Column): Column =
+    graft.functions.ShingleHashes(shingleCol)
 
   /** The (id, gk) table of DISTINCT word-3-gram 60-bit md5 keys — the
     * shared gram builder of the decontamination family (q84/q151/q162/
     * q147 stage 4). Tokens come from the script-aware default seam
     * ([[graft.core.Tok.words]] — CJK/Thai singletons, ASCII identical
-    * to the legacy `\s+` split); grams are space-joined triples; keys
-    * are [[md5Hash64]] so the DuckDB oracle replays them exactly (its
-    * tokens come from the RE2 regex GENERATED from the same pattern
-    * constant). The gram expression is
-    * TOTAL (greatest-bounded sequence + trimming slice — the round-5
-    * lesson: explode's inferred predicate merges into the upstream
-    * Filter and codegen may evaluate the array expr before the AND
-    * short-circuits).
+    * to the legacy `\s+` split); grams are the space-joined triples of
+    * [[shingles]]; keys are [[md5Hash64]] so the DuckDB oracle replays
+    * them exactly (its tokens come from the RE2 regex GENERATED from the
+    * same pattern constant).
     *
-    * explode_OUTER, deliberately: with plain explode,
-    * InferFiltersFromGenerate adds a `size(gs) > 0` guard that pushes
-    * below this projection chain, re-inlining the WHOLE gram
-    * construction — tokenization included, no longer an attribute —
-    * into ONE Filter evaluation per row: each of ~50 lambda elements
-    * re-evaluates three element_at over the re-inlined split, ~150
-    * tokenizations per document (measured 12.3 s vs 1.1 s on the sf0.1
-    * documents scan). The outer form infers no such predicate; the
-    * explicit isNotNull drops the single null row an empty gram array
-    * would emit (none exists past the size>=3 filter — this is belt
-    * and braces, not semantics).
+    * No Filter sits below the generator: the gram kernel returns an
+    * empty array for docs with fewer than 3 tokens, so nothing is
+    * pushed down to re-evaluate the tokenizer. explode_OUTER,
+    * deliberately: with plain explode, InferFiltersFromGenerate adds a
+    * `size(gs) > 0` guard that pushes below the projection, re-inlining
+    * the WHOLE gram construction — tokenization included — into a
+    * Filter (measured 12.3 s vs 1.1 s on the sf0.1 documents scan when
+    * that construction was a higher-order chain). The outer form infers
+    * no such predicate; the isNotNull above the generator drops the one
+    * null row an empty gram array emits.
     */
   def wordGramKeys(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    wordGramKeysFrom(docs, idCol, graft.core.Tok.words(col(textCol)))
+    docs.select(col(idCol),
+        explode_outer(shingles(col(textCol), 3)).as("g"))
+      .filter(col("g").isNotNull)
+      .select(col(idCol), md5Hash64(col("g")).as("gk"))
 
   /** Alias of [[wordGramKeys]], kept for the r17 call sites (q211) from
     * when the script-aware tokenizer was opt-in; since r18 it IS the
@@ -109,20 +111,6 @@ object Dedup {
     */
   def wordGramKeysUnicode(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     wordGramKeys(docs, idCol, textCol)
-
-  private def wordGramKeysFrom(docs: DataFrame, idCol: String,
-      toks: Column): DataFrame = {
-    docs.select(col(idCol), toks.as("w"))
-      .filter(size(col("w")) >= 3)
-      .select(col(idCol), array_distinct(expr(
-        "transform(slice(sequence(1, greatest(size(w) - 2, 1)), 1," +
-          " greatest(size(w) - 2, 0))," +
-          " i -> concat(element_at(w, i), ' ', element_at(w, i + 1)," +
-          " ' ', element_at(w, i + 2)))")).as("gs"))
-      .select(col(idCol), explode_outer(col("gs")).as("g"))
-      .filter(col("g").isNotNull)
-      .select(col(idCol), md5Hash64(col("g")).as("gk"))
-  }
 
   /** MinHash signature from PRE-HASHED shingles: the k orderings come
     * from re-hashing the compact (hash, j) pair — a 16-byte xxhash64
@@ -132,7 +120,7 @@ object Dedup {
     * whole k-wide signature is one custom codegen'd Expression
     * ([[graft.functions.MinhashSignature]]) — a single unboxed pass,
     * no k intermediate arrays. `hashCol` should be a materialized column
-    * (attribute), not an inline `transform(...)` expression, or Catalyst
+    * (attribute), not an inline hashing expression, or Catalyst
     * inlines the string hashing into the consumer.
     */
   def minhashSignatureFromHashes(hashCol: Column, k: Int): Column =
@@ -142,18 +130,16 @@ object Dedup {
     * the hot path pre-hash once and use [[minhashSignatureFromHashes]]).
     */
   def minhashSignature(shingleCol: Column, k: Int): Column =
-    minhashSignatureFromHashes(transform(shingleCol, s => xxhash64(s)), k)
+    minhashSignatureFromHashes(shingleHashes(shingleCol), k)
 
-  /** Explode a signature into (band_id, band_hash) rows: `bands` bands of
-    * `k/bands` rows each, hashed together.
+  /** A signature's LSH bands as an array of (band_id, band_hash) structs,
+    * ready to explode: `bands` bands of `k/bands` rows each, hashed
+    * together. One kernel ([[graft.functions.BandHashes]]), bit-identical
+    * to `xxhash64(concat_ws(',', slice(sig, b*rows + 1, rows)), b)` per
+    * band, so the LSH buckets are those of the builtin form.
     */
-  def bandedSignature(sigCol: Column, k: Int, bands: Int): Column = {
-    val rows = k / bands
-    transform(sequence(lit(0), lit(bands - 1)),
-      b => struct(b.as("band_id"),
-        xxhash64(concat_ws(",", slice(sigCol, b * rows + 1, lit(rows))), b)
-          .as("band_hash")))
-  }
+  def bandedSignature(sigCol: Column, k: Int, bands: Int): Column =
+    graft.functions.BandHashes(sigCol, k, bands)
 
   /** Candidate duplicate pairs (idA < idB) that share at least one LSH
     * band bucket, with exact Jaccard over the shingle sets attached.
@@ -165,16 +151,19 @@ object Dedup {
     // shingle+hash table: strings hashed ONCE into a materialized column
     // (so the k-way permutation below reads longs, never re-hashes
     // strings), reused by banding and by verification (at cluster scale
-    // this is the table you'd persist)
+    // this is the table you'd persist). Each document is tokenized once:
+    // the empty-shingle filter reads the cached attribute, where a
+    // filter below the cache would be pushed under the projection and
+    // re-inline the tokenizer into its condition. Docs with fewer than n
+    // tokens stay in the cache with empty arrays and never reach a band.
     val sh = docs.select(col(idCol).as("id"),
       shingles(col(textCol), n).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .withColumn("shh", transform(col("sh"), s => xxhash64(s)))
+      .withColumn("shh", shingleHashes(col("sh")))
       .cache()
     // cache the banded signatures BEFORE exploding: otherwise Catalyst
     // collapses the projection into the generator and recomputes the full
     // k-hash signature once per band row (bands× the hash work)
-    val sig = sh.select(col("id"),
+    val sig = sh.filter(size(col("sh")) > 0).select(col("id"),
       bandedSignature(minhashSignatureFromHashes(col("shh"), k), k, bands)
         .as("bands"))
       .cache()

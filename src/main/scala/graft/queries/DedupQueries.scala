@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
+import graft.core.Tables.DataDir
 import graft.operators.{Dedup, Multimodal}
 
 /** Fuzzy-dedup + multimodal surface over the testdata tables — all fully
@@ -346,17 +347,17 @@ object DedupQueries {
     (s, _) => {
       val media = s.read.format("binaryFile")
         .option("pathGlobFilter", "*.png")
-        .load("/root/repo/data/png")
+        .load(s"$DataDir/png")
         .select(
           regexp_extract(col("path"), "img_(\\d+)\\.png$", 1)
             .cast("long").as("media_id"),
           col("content").as("payload"))
       Multimodal.decodeImages(media)
     },
-    Some("""
+    Some(s"""
       SELECT media_id, width, height, channels, pix_sum, mean_intensity,
              p00, p01, p10, p11
-      FROM '/root/repo/data/png_expected.parquet'"""))
+      FROM '$DataDir/png_expected.parquet'"""))
 
   /** REAL audio decode end-to-end: WAV bytes through Spark's binaryFile
     * source, parsed by the pure-JVM RIFF/WAVE PCM reader behind the
@@ -373,17 +374,17 @@ object DedupQueries {
     (s, _) => {
       val media = s.read.format("binaryFile")
         .option("pathGlobFilter", "*.wav")
-        .load("/root/repo/data/wav")
+        .load(s"$DataDir/wav")
         .select(
           regexp_extract(col("path"), "clip_(\\d+)\\.wav$", 1)
             .cast("long").as("media_id"),
           col("content").as("payload"))
       Multimodal.decodeWav(media)
     },
-    Some("""
+    Some(s"""
       SELECT media_id, sample_rate, channels, n_frames, abs_sum, peak,
              b0, b1, b2, b3
-      FROM '/root/repo/data/wav_expected.parquet'"""))
+      FROM '$DataDir/wav_expected.parquet'"""))
 
   /** REAL video decode end-to-end: RIFF/AVI containers with uncompressed
     * 24-bit DIB frames through binaryFile → the pure-JVM container+frame
@@ -400,17 +401,17 @@ object DedupQueries {
     (s, _) => {
       val media = s.read.format("binaryFile")
         .option("pathGlobFilter", "*.avi")
-        .load("/root/repo/data/avi")
+        .load(s"$DataDir/avi")
         .select(
           regexp_extract(col("path"), "clip_(\\d+)\\.avi$", 1)
             .cast("long").as("media_id"),
           col("content").as("payload"))
       Multimodal.decodeAviFrames(media, everyNth = 3)
     },
-    Some("""
+    Some(s"""
       SELECT media_id, frame_idx, width, height, n_frames, pix_sum,
              p00, p01, p10, p11
-      FROM '/root/repo/data/avi_expected.parquet'"""))
+      FROM '$DataDir/avi_expected.parquet'"""))
 
   /** REAL compressed-video decode: MJPEG AVI — the most common legacy AVI
     * payload — where each "00dc" chunk is a standalone baseline JPEG
@@ -427,17 +428,17 @@ object DedupQueries {
     (s, _) => {
       val media = s.read.format("binaryFile")
         .option("pathGlobFilter", "*.avi")
-        .load("/root/repo/data/avi_mjpg")
+        .load(s"$DataDir/avi_mjpg")
         .select(
           regexp_extract(col("path"), "clip_(\\d+)\\.avi$", 1)
             .cast("long").as("media_id"),
           col("content").as("payload"))
       Multimodal.decodeAviFrames(media, everyNth = 3)
     },
-    Some("""
+    Some(s"""
       SELECT media_id, frame_idx, width, height, n_frames, pix_sum,
              p00, p01, p10, p11
-      FROM '/root/repo/data/avi_mjpg_expected.parquet'"""))
+      FROM '$DataDir/avi_mjpg_expected.parquet'"""))
 
   /** Similarity over REAL decoded features — the embedding is a pure
     * function of decoded pixels/samples, not of md5(payload): images
@@ -459,11 +460,11 @@ object DedupQueries {
           .select(regexp_extract(col("path"), re, 1).cast("long").as("media_id"),
             col("content").as("payload"))
       val img = Multimodal.decodeImages(
-          files("/root/repo/data/png", "*.png", "img_(\\d+)\\.png$"))
+          files(s"$DataDir/png", "*.png", "img_(\\d+)\\.png$"))
         .select(col("media_id"),
           array(col("p00"), col("p01"), col("p10"), col("p11")).as("emb"))
       val aud = Multimodal.decodeWav(
-          files("/root/repo/data/wav", "*.wav", "clip_(\\d+)\\.wav$"))
+          files(s"$DataDir/wav", "*.wav", "clip_(\\d+)\\.wav$"))
         .select((col("media_id") + 1000).as("media_id"),
           array(col("b0"), col("b1"), col("b2"), col("b3")).as("emb"))
       val all = img.unionByName(aud)
@@ -475,13 +476,13 @@ object DedupQueries {
         .orderBy(col("cos_sim").desc, col("media_id").asc)
         .limit(10)
     },
-    Some("""
+    Some(s"""
       WITH img AS (
         SELECT media_id, [p00, p01, p10, p11] AS emb
-        FROM '/root/repo/data/png_expected.parquet'),
+        FROM '$DataDir/png_expected.parquet'),
       aud AS (
         SELECT media_id + 1000 AS media_id, [b0, b1, b2, b3] AS emb
-        FROM '/root/repo/data/wav_expected.parquet'),
+        FROM '$DataDir/wav_expected.parquet'),
       alle AS (SELECT * FROM img UNION ALL SELECT * FROM aud),
       q AS (SELECT emb AS qemb FROM alle WHERE media_id = 1),
       sims AS (
@@ -520,13 +521,13 @@ object DedupQueries {
         col("doc_id").as("item_id"),
         size(graft.core.Tok.words(col("text"))).cast("long").as("cost"))
       val img = Multimodal.decodeImages(
-          files("/root/repo/data/png", "*.png", "img_(\\d+)\\.png$"))
+          files(s"$DataDir/png", "*.png", "img_(\\d+)\\.png$"))
         .select(lit("image").as("kind"),
           (col("media_id") + 1000000L).as("item_id"),
           (expr("(width + 15) div 16") * expr("(height + 15) div 16"))
             .cast("long").as("cost"))
       val aud = Multimodal.decodeWav(
-          files("/root/repo/data/wav", "*.wav", "clip_(\\d+)\\.wav$"))
+          files(s"$DataDir/wav", "*.wav", "clip_(\\d+)\\.wav$"))
         .select(lit("audio").as("kind"),
           (col("media_id") + 2000000L).as("item_id"),
           expr("(n_frames * 25 + sample_rate - 1) div sample_rate")
@@ -544,16 +545,16 @@ object DedupQueries {
     Some("""
       WITH text AS (
         SELECT 'text' AS kind, doc_id AS item_id,
-               CAST(len(""" + graft.core.Tok.sqlWords("text") + """) AS BIGINT) AS cost
+               CAST(len(""" + graft.core.Tok.sqlWords("text") + s""") AS BIGINT) AS cost
         FROM documents),
       img AS (
         SELECT 'image' AS kind, media_id + 1000000 AS item_id,
                CAST(((width + 15) // 16) * ((height + 15) // 16) AS BIGINT) AS cost
-        FROM '/root/repo/data/png_expected.parquet'),
+        FROM '$DataDir/png_expected.parquet'),
       aud AS (
         SELECT 'audio' AS kind, media_id + 2000000 AS item_id,
                CAST((n_frames * 25 + sample_rate - 1) // sample_rate AS BIGINT) AS cost
-        FROM '/root/repo/data/wav_expected.parquet'),
+        FROM '$DataDir/wav_expected.parquet'),
       items AS (
         SELECT *, item_id % 7 AS ord FROM
           (SELECT * FROM text UNION ALL SELECT * FROM img
@@ -657,16 +658,16 @@ object DedupQueries {
     "q161_image_dhash",
     (s, _) => {
       val files = s.read.format("binaryFile").option("pathGlobFilter", "*.png")
-        .load("/root/repo/data/png_dedup")
+        .load(s"$DataDir/png_dedup")
         .select(regexp_extract(col("path"), "img_(\\d+)\\.png$", 1)
           .cast("long").as("media_id"),
           col("content").as("payload"))
       val h = Multimodal.imageDhash(files).select("media_id", "dhash").cache()
       Multimodal.dhashNearDupPairs(h, maxHamming = 3)
     },
-    Some("""
+    Some(s"""
       WITH h AS (SELECT media_id, dhash
-                 FROM '/root/repo/data/dhash_expected.parquet')
+                 FROM '$DataDir/dhash_expected.parquet')
       SELECT a.media_id AS id_a, b.media_id AS id_b,
              a.dhash AS dhash_a, b.dhash AS dhash_b,
              CAST(bit_count(xor(a.dhash, b.dhash)) AS BIGINT) AS hamming
@@ -690,16 +691,16 @@ object DedupQueries {
     (s, _) => {
       val media = s.read.format("binaryFile")
         .option("pathGlobFilter", "*.wav")
-        .load("/root/repo/data/wav")
+        .load(s"$DataDir/wav")
         .select(
           regexp_extract(col("path"), "clip_(\\d+)\\.wav$", 1)
             .cast("long").as("media_id"),
           col("content").as("payload"))
       Multimodal.wavFingerprint(media)
     },
-    Some("""
+    Some(s"""
       SELECT media_id, win, fp, approx
-      FROM '/root/repo/data/audio_fp_expected.parquet'"""))
+      FROM '$DataDir/audio_fp_expected.parquet'"""))
 
   /** Scene-cut detection over the REAL decoded AVI frames: consecutive
     * sampled frames (q94's every-3rd decode) whose exact pixel sums jump
@@ -717,7 +718,7 @@ object DedupQueries {
       import org.apache.spark.sql.expressions.Window
       val media = s.read.format("binaryFile")
         .option("pathGlobFilter", "*.avi")
-        .load("/root/repo/data/avi")
+        .load(s"$DataDir/avi")
         .select(
           regexp_extract(col("path"), "clip_(\\d+)\\.avi$", 1)
             .cast("long").as("media_id"),
@@ -737,10 +738,10 @@ object DedupQueries {
           coalesce(min(when(col("cut") === 1, col("frame_idx"))), lit(-1))
             .as("first_cut_idx"))
     },
-    Some("""
+    Some(s"""
       WITH f AS (
         SELECT media_id, frame_idx, pix_sum
-        FROM '/root/repo/data/avi_expected.parquet'),
+        FROM '$DataDir/avi_expected.parquet'),
       l AS (
         SELECT media_id, frame_idx, pix_sum,
                lag(pix_sum) OVER (PARTITION BY media_id
@@ -1133,7 +1134,7 @@ object DedupQueries {
     (s, _) => {
       val media = s.read.format("binaryFile")
         .option("pathGlobFilter", "*.avi")
-        .load("/root/repo/data/avi_dedup")
+        .load(s"$DataDir/avi_dedup")
         .select(
           regexp_extract(col("path"), "clip_(\\d+)\\.avi$", 1)
             .cast("long").as("media_id"),
@@ -1141,9 +1142,9 @@ object DedupQueries {
       Multimodal.videoNearDupPairs(
         Multimodal.aviFrameDhash(media, everyNth = 3))
     },
-    Some("""
+    Some(s"""
       WITH h0 AS (SELECT DISTINCT media_id, dhash
-                  FROM '/root/repo/data/video_dhash_expected.parquet'),
+                  FROM '$DataDir/video_dhash_expected.parquet'),
       rare AS (SELECT dhash FROM h0 GROUP BY 1 HAVING count(*) <= 50),
       h AS (SELECT h0.media_id, h0.dhash FROM h0 JOIN rare USING (dhash)),
       sizes AS (SELECT media_id, count(*) AS n FROM h GROUP BY 1),

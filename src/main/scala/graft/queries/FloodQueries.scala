@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Sql, Tables}
+import graft.core.Tables.DataDir
 import graft.operators.{FloodOps, FloodPipeline, GridOps}
 
 /** The flood/grid operator library exercised through the driver's DuckDB
@@ -327,10 +328,7 @@ object FloodQueries {
     * an independent HDF5 parser and DuckDB. The check against the
     * netcdf-c-written originals lives in NetcdfSpec.
     */
-  // resolved against the working directory, which sbt and tools/run.sh
-  // set to the repository root
-  private val NcDir = new java.io.File("data/rp_nc").getAbsolutePath
-  private val PyParquetDir = "/root/repo/data"
+  private val NcDir = s"$DataDir/rp_nc"
 
   val q72RpCombinedNc = Q(
     "q72_rp_combined_nc",
@@ -386,17 +384,17 @@ object FloodQueries {
         SELECT CAST(round(latitude*1000) AS BIGINT) AS lat_key,
                CAST(round(longitude*1000) AS BIGINT) AS lon_key,
                "2yRP_GloFASv4" AS threshold_2y
-        FROM '$PyParquetDir/rp_2y_thresh.parquet'),
+        FROM '$DataDir/rp_2y_thresh.parquet'),
       t5 AS (
         SELECT CAST(round(latitude*1000) AS BIGINT) AS lat_key,
                CAST(round(longitude*1000) AS BIGINT) AS lon_key,
                "5yRP_GloFASv4" AS threshold_5y
-        FROM '$PyParquetDir/rp_5y_thresh.parquet'),
+        FROM '$DataDir/rp_5y_thresh.parquet'),
       t20 AS (
         SELECT CAST(round(latitude*1000) AS BIGINT) AS lat_key,
                CAST(round(longitude*1000) AS BIGINT) AS lon_key,
                "20yRP_GloFASv4" AS threshold_20y
-        FROM '$PyParquetDir/rp_20y_thresh.parquet'),
+        FROM '$DataDir/rp_20y_thresh.parquet'),
       j AS (
         SELECT t2.lat_key, t2.lon_key, threshold_2y, threshold_5y, threshold_20y
         FROM t2 JOIN t5 USING (lat_key, lon_key) JOIN t20 USING (lat_key, lon_key)),
@@ -464,14 +462,14 @@ object FloodQueries {
         s.read.format("graft-grib").option("path", path).load()
           .filter(col("data_type") === dt).drop("data_type")
       val ens = graft.sources.RasterContract.concatEnsemble(
-        read("/root/repo/data/ens_cf.grib2", "cf"),
-        read("/root/repo/data/ens_pf.grib2", "pf"))
+        read(s"$DataDir/ens_cf.grib2", "cf"),
+        read(s"$DataDir/ens_pf.grib2", "pf"))
       ens.select(col("number"), col("latitude"), col("longitude"),
         col("value").as("dis24"))
     },
-    Some("""
+    Some(s"""
       SELECT number, latitude, longitude, dis24
-      FROM '/root/repo/data/ens_expected.parquet'"""))
+      FROM '$DataDir/ens_expected.parquet'"""))
 
   /** S3 depth: complex packing — the representation genuine CDS GloFAS
     * downloads actually use (the reference opens them with cfgrib,
@@ -487,10 +485,10 @@ object FloodQueries {
     "q79_grib_complex",
     (s, _) =>
       s.read.format("graft-grib")
-        .option("path", "/root/repo/data/ens_complex.grib2").load(),
-    Some("""
+        .option("path", s"$DataDir/ens_complex.grib2").load(),
+    Some(s"""
       SELECT data_type, number, latitude, longitude, value
-      FROM '/root/repo/data/ens_complex_expected.parquet'"""))
+      FROM '$DataDir/ens_complex_expected.parquet'"""))
 
   /** S3 depth: bitmap-masked messages (GRIB2 section 6, indicator 0) —
     * how real ECMWF/GloFAS fields mask ocean/invalid cells. The
@@ -508,11 +506,11 @@ object FloodQueries {
     "q100_grib_bitmap",
     (s, _) =>
       s.read.format("graft-grib")
-        .option("path", "/root/repo/data/ens_bitmap.grib2").load()
+        .option("path", s"$DataDir/ens_bitmap.grib2").load()
         .filter(!isnan(col("value"))),
-    Some("""
+    Some(s"""
       SELECT data_type, number, latitude, longitude, value
-      FROM '/root/repo/data/ens_bitmap_expected.parquet'"""))
+      FROM '$DataDir/ens_bitmap_expected.parquet'"""))
 
   /** S3 depth: PNG packing (GRIB2 data-representation template 5.41) —
     * the one compressed GRIB representation a JVM decodes with zero
@@ -527,10 +525,10 @@ object FloodQueries {
     "q104_grib_png",
     (s, _) =>
       s.read.format("graft-grib")
-        .option("path", "/root/repo/data/ens_png.grib2").load(),
-    Some("""
+        .option("path", s"$DataDir/ens_png.grib2").load(),
+    Some(s"""
       SELECT data_type, number, latitude, longitude, value
-      FROM '/root/repo/data/ens_png_expected.parquet'"""))
+      FROM '$DataDir/ens_png_expected.parquet'"""))
 
   /** S4 write-back: the NetCDF SINK (reference: upstream.py:52
     * `to_netcdf`, io_managers.py:222-223), exercised LIVE end-to-end:
@@ -638,8 +636,6 @@ object FloodQueries {
   // independently python-parsed RP parquets.
   // -------------------------------------------------------------------
 
-  private lazy val E2eDir = "/root/repo/data"
-
   /** The ensemble forecast, from bytes: cf + pf GRIB2 files through the
     * graft-grib source (message-level planning, `withStep` lead time),
     * control renumbered to 0, lead-time hours → step/valid_for.
@@ -650,8 +646,8 @@ object FloodQueries {
         .option("withStep", "true").load()
         .filter(col("data_type") === dt).drop("data_type")
     graft.sources.RasterContract.concatEnsemble(
-      read(s"$E2eDir/e2e_cf.grib2", "cf"),
-      read(s"$E2eDir/e2e_pf.grib2", "pf"))
+      read(s"$DataDir/e2e_cf.grib2", "cf"),
+      read(s"$DataDir/e2e_pf.grib2", "pf"))
       .select(col("number"), col("latitude"), col("longitude"),
         lit("2026-01-01").cast("date").as("issued_on"),
         expr("CAST(step_hours div 24 AS INT)").as("step"),
@@ -689,16 +685,16 @@ object FloodQueries {
              CAST(step_hours // 24 AS INTEGER) AS step,
              DATE '2026-01-01' + CAST(step_hours // 24 AS INTEGER) AS valid_for,
              value AS dis24
-      FROM '$E2eDir/e2e_expected.parquet'),
+      FROM '$DataDir/e2e_expected.parquet'),
     thresholds AS (
       SELECT round(CAST(a.latitude AS DOUBLE), 3) AS latitude,
              round(CAST(a.longitude AS DOUBLE), 3) AS longitude,
              a."2yRP_GloFASv4" AS threshold_2y,
              b."5yRP_GloFASv4" AS threshold_5y,
              c."20yRP_GloFASv4" AS threshold_20y
-      FROM '$E2eDir/rp_2y_thresh.parquet' a
-      JOIN '$E2eDir/rp_5y_thresh.parquet' b USING (latitude, longitude)
-      JOIN '$E2eDir/rp_20y_thresh.parquet' c USING (latitude, longitude)
+      FROM '$DataDir/rp_2y_thresh.parquet' a
+      JOIN '$DataDir/rp_5y_thresh.parquet' b USING (latitude, longitude)
+      JOIN '$DataDir/rp_20y_thresh.parquet' c USING (latitude, longitude)
       WHERE a.latitude >= 14.0125 AND a.latitude <= 15.9875
         AND a.longitude >= 12.0125 AND a.longitude <= 13.9875),
     joined AS (
@@ -887,14 +883,14 @@ object FloodQueries {
     "q122_nc_classic",
     (s, _) =>
       s.read.format("graft-netcdf")
-        .option("path", "/root/repo/data/classic2.nc")
+        .option("path", s"$DataDir/classic2.nc")
         .option("var", "v")
         .load()
         .filter(!isnan(col("value")))
         .select(col("latitude"), col("longitude"), col("value").as("v")),
-    Some("""
+    Some(s"""
       SELECT latitude, longitude, v
-      FROM '/root/repo/data/classic_expected.parquet'"""))
+      FROM '$DataDir/classic_expected.parquet'"""))
 
   /** NetCDF classic RECORD variables (the unlimited-dimension layout
     * archive-era CMIP/station time-series use): v(time, cell) with
@@ -909,16 +905,16 @@ object FloodQueries {
     "q129_nc_record",
     (s, _) =>
       s.read.format("graft-netcdf")
-        .option("path", "/root/repo/data/classic_rec.nc")
+        .option("path", s"$DataDir/classic_rec.nc")
         .option("var", "v")
         .option("latvar", "time").option("lonvar", "cell")
         .load()
         .filter(!isnan(col("value")))
         .select(col("latitude").as("t"), col("longitude").as("cell"),
           col("value").as("v")),
-    Some("""
+    Some(s"""
       SELECT t, cell, v
-      FROM '/root/repo/data/classic_rec_expected.parquet'"""))
+      FROM '$DataDir/classic_rec_expected.parquet'"""))
 
   /** The q72 three-way RP combine WITHOUT ANY SHUFFLE: the aligned
     * multi-scan reads the same row band from all three GloFAS files in
@@ -946,7 +942,7 @@ object FloodQueries {
              a."2yRP_GloFASv4" AS threshold_2y,
              b."5yRP_GloFASv4" AS threshold_5y,
              c."20yRP_GloFASv4" AS threshold_20y
-      FROM '$PyParquetDir/rp_2y_thresh.parquet' a
-      JOIN '$PyParquetDir/rp_5y_thresh.parquet' b USING (latitude, longitude)
-      JOIN '$PyParquetDir/rp_20y_thresh.parquet' c USING (latitude, longitude)"""))
+      FROM '$DataDir/rp_2y_thresh.parquet' a
+      JOIN '$DataDir/rp_5y_thresh.parquet' b USING (latitude, longitude)
+      JOIN '$DataDir/rp_20y_thresh.parquet' c USING (latitude, longitude)"""))
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.core.{Sql, Tables}
+import graft.core.Tables.DataDir
 import graft.operators.GridOps
 import graft.sources.RasterContract
 
@@ -299,13 +300,13 @@ object SpatialQueries {
     "q76_cog_lossyear",
     (s, _) =>
       s.read.format("graft-cog")
-        .option("path", "/root/repo/data/lossyear_tiled.tif")
+        .option("path", s"$DataDir/lossyear_tiled.tif")
         .option("nodata", "0")
         .load()
         .select(col("x"), col("y"), col("value").as("lossyear")),
-    Some("""
+    Some(s"""
       SELECT x, y, lossyear
-      FROM '/root/repo/data/lossyear_expected.parquet'
+      FROM '$DataDir/lossyear_expected.parquet'
       WHERE lossyear <> 0"""))
 
   /** S6→yes: REAL Zarr v2 store ingest (io_managers.py:119-129). The
@@ -321,13 +322,13 @@ object SpatialQueries {
     "q77_zarr_uparea",
     (s, _) =>
       s.read.format("graft-zarr")
-        .option("path", "/root/repo/data/uparea.zarr")
+        .option("path", s"$DataDir/uparea.zarr")
         .option("var", "uparea")
         .load()
         .select(col("latitude"), col("longitude"), col("value").as("uparea")),
-    Some("""
+    Some(s"""
       SELECT latitude, longitude, uparea
-      FROM '/root/repo/data/uparea_expected.parquet'"""))
+      FROM '$DataDir/uparea_expected.parquet'"""))
 
   /** Zarr v3 scan through the same graft-zarr DSv2 (version dispatch on
     * zarr.json vs .zarray): the uparea grid is stored SHARDED
@@ -342,13 +343,13 @@ object SpatialQueries {
     "q120_zarr3_sharded",
     (s, _) =>
       s.read.format("graft-zarr")
-        .option("path", "/root/repo/data/uparea_v3.zarr")
+        .option("path", s"$DataDir/uparea_v3.zarr")
         .option("var", "uparea")
         .load()
         .select(col("latitude"), col("longitude"), col("value").as("uparea")),
-    Some("""
+    Some(s"""
       SELECT latitude, longitude, uparea
-      FROM '/root/repo/data/uparea_v3_expected.parquet'"""))
+      FROM '$DataDir/uparea_v3_expected.parquet'"""))
 
   /** S7→yes + the reference's real basin flow end-to-end: polygons come
     * from an actual ESRI shapefile (graft-shp DSv2 — .shx-indexed
@@ -364,7 +365,7 @@ object SpatialQueries {
     "q78_shp_zonal",
     (s, dir) => {
       val polys = s.read.format("graft-shp")
-        .option("path", "/root/repo/data/basins.shp")
+        .option("path", s"$DataDir/basins.shp")
         .option("idfield", "HYBAS_ID")
         .load()
         .select(col("zone"), col("xs"), col("ys"))
@@ -377,9 +378,9 @@ object SpatialQueries {
         .agg(count(lit(1)).as("n_points"),
           Sql.exactSum(col("c_acctbal")).as("sum_bal"))
     },
-    Some("""
+    Some(s"""
       WITH shapes AS (
-        SELECT zone, xs, ys FROM '/root/repo/data/basins_expected.parquet'),
+        SELECT zone, xs, ys FROM '$DataDir/basins_expected.parquet'),
       points AS (
         SELECT c_custkey, c_acctbal,
                (c_custkey % 20) * 0.5 + 0.25 AS latitude,
@@ -454,13 +455,13 @@ object SpatialQueries {
     "q97_bigtiff_cog",
     (s, _) =>
       s.read.format("graft-cog")
-        .option("path", "/root/repo/data/lossyear_big.tif")
+        .option("path", s"$DataDir/lossyear_big.tif")
         .option("nodata", "0")
         .load()
         .select(col("x"), col("y"), col("value").as("lossyear")),
-    Some("""
+    Some(s"""
       SELECT x, y, lossyear
-      FROM '/root/repo/data/lossyear_big_expected.parquet'
+      FROM '$DataDir/lossyear_big_expected.parquet'
       WHERE lossyear <> 0"""))
 
   /** Geodetic reprojection (operators/GeoProject): the engine image of
@@ -602,13 +603,13 @@ object SpatialQueries {
     "q207_jpeg_tables_cog",
     (s, _) =>
       s.read.format("graft-cog")
-        .option("path", "/root/repo/data/jpeg_tables.tif")
+        .option("path", s"$DataDir/jpeg_tables.tif")
         .option("nodata", "0")
         .load()
         .select(col("x"), col("y"), col("value").cast("int").as("value")),
-    Some("""
+    Some(s"""
       SELECT x, y, value
-      FROM '/root/repo/data/jpeg_tables_expected.parquet'"""))
+      FROM '$DataDir/jpeg_tables_expected.parquet'"""))
 
   /** S5 depth: the JPEG-compressed tiled write (compression 7) — the
     * reference's SERVING-PYRAMID codec (`gdal_retile.py ... -co
@@ -750,7 +751,7 @@ object SpatialQueries {
         .load()
         .select(col("x"), col("y"), col("value").cast("int").as("value"))
     },
-    Some("SELECT x, y, value FROM '/root/repo/data/cubic_expected.parquet'"))
+    Some(s"SELECT x, y, value FROM '$DataDir/cubic_expected.parquet'"))
 
   /** Small-file compaction under the gate: an orders slice is written
     * as 32 tiny part files (the streaming-sink litter pattern),
@@ -796,7 +797,7 @@ object SpatialQueries {
     "q124_zarr3d_quantiles",
     (s, _) =>
       s.read.format("graft-zarr")
-        .option("path", "/root/repo/data/uparea_v3.zarr")
+        .option("path", s"$DataDir/uparea_v3.zarr")
         .option("var", "dis")
         .load()
         .groupBy("latitude", "longitude")
@@ -804,11 +805,11 @@ object SpatialQueries {
           round(percentile(col("value"), lit(0.5)), 6).as("median_dis"),
           max("value").as("max_dis"))
         .filter(col("n_steps") >= 4),
-    Some("""
+    Some(s"""
       SELECT latitude, longitude, count(*) AS n_steps,
              round(quantile_cont(dis, 0.5), 6) AS median_dis,
              max(dis) AS max_dis
-      FROM '/root/repo/data/dis_v3_expected.parquet'
+      FROM '$DataDir/dis_v3_expected.parquet'
       GROUP BY 1, 2 HAVING count(*) >= 4"""))
 
   /** 3-D raster scan: `dis(time, lat, lon)` — the reference's actual
@@ -822,14 +823,14 @@ object SpatialQueries {
     "q123_zarr_3d",
     (s, _) =>
       s.read.format("graft-zarr")
-        .option("path", "/root/repo/data/uparea_v3.zarr")
+        .option("path", s"$DataDir/uparea_v3.zarr")
         .option("var", "dis")
         .load()
         .select(col("t"), col("latitude"), col("longitude"),
           col("value").as("dis")),
-    Some("""
+    Some(s"""
       SELECT t, latitude, longitude, dis
-      FROM '/root/repo/data/dis_v3_expected.parquet'"""))
+      FROM '$DataDir/dis_v3_expected.parquet'"""))
 
   /** Zarr v3 SHARDED sink round trip (writeGridV3 → graft-zarr read):
     * an aggregated grid is written as v3 shards — one shard object per
@@ -878,7 +879,7 @@ object SpatialQueries {
     "q117_wkb_zonal",
     (s, dir) => {
       import graft.functions.WkbRingCoords
-      val polys = s.read.parquet("/root/repo/data/basins_wkb.parquet")
+      val polys = s.read.parquet(s"$DataDir/basins_wkb.parquet")
         .select(col("zone"),
           WkbRingCoords.xs(col("wkb")).as("xs"),
           WkbRingCoords.ys(col("wkb")).as("ys"))
@@ -891,9 +892,9 @@ object SpatialQueries {
         .agg(count(lit(1)).as("n_points"),
           Sql.exactSum(col("c_acctbal")).as("sum_bal"))
     },
-    Some("""
+    Some(s"""
       WITH shapes AS (
-        SELECT zone, xs, ys FROM '/root/repo/data/basins_wkb.parquet'),
+        SELECT zone, xs, ys FROM '$DataDir/basins_wkb.parquet'),
       points AS (
         SELECT c_custkey, c_acctbal,
                (c_custkey % 20) * 0.5 + 0.25 AS latitude,
@@ -964,7 +965,7 @@ object SpatialQueries {
     "q114_arrow_scan",
     (s, _) => {
       s.read.format("graft-arrow")
-        .option("path", "/root/repo/data/metrics.arrow")
+        .option("path", s"$DataDir/metrics.arrow")
         .load()
         .groupBy(coalesce(col("sensor"), lit("(null)")).as("sensor"))
         .agg(count(lit(1)).as("n"),
@@ -972,13 +973,13 @@ object SpatialQueries {
           Sql.exactSum(col("reading")).as("sum_reading"),
           max("id").as("max_id"))
     },
-    Some("""
+    Some(s"""
       SELECT coalesce(sensor, '(null)') AS sensor,
              count(*) AS n,
              count(CASE WHEN flag THEN 1 END) AS n_flagged,
              CAST(sum(CAST(reading AS DECIMAL(27,4))) AS DOUBLE) AS sum_reading,
              max(id) AS max_id
-      FROM '/root/repo/data/arrow_expected.parquet'
+      FROM '$DataDir/arrow_expected.parquet'
       GROUP BY 1"""))
 
   /** Polygon scalar metrics over the shapefile source: shoelace area,
@@ -1000,7 +1001,7 @@ object SpatialQueries {
     "q113_polygon_metrics",
     (s, _) => {
       s.read.format("graft-shp")
-        .option("path", "/root/repo/data/basins.shp")
+        .option("path", s"$DataDir/basins.shp")
         .option("idfield", "HYBAS_ID")
         .load()
         .select(col("zone"), col("part"), col("xs"), col("ys"))
@@ -1026,7 +1027,7 @@ object SpatialQueries {
           (abs(col("a2")) / 2.0).as("area"), col("perimeter"),
           col("cx"), col("cy"))
     },
-    Some("""
+    Some(s"""
       SELECT zone, CAST(part AS BIGINT) AS part,
              abs(a2) / 2.0 AS area, perimeter,
              cxs / (3.0 * a2) AS cx, cys / (3.0 * a2) AS cy
@@ -1048,5 +1049,5 @@ object SpatialQueries {
                  [(ys[i] + ys[i+1]) * (xs[i] * ys[i+1] - xs[i+1] * ys[i])
                   for i in generate_series(1, len(xs) - 1)]),
                  (a, b) -> a + b) AS cys
-        FROM '/root/repo/data/basins_expected.parquet')"""))
+        FROM '$DataDir/basins_expected.parquet')"""))
 }

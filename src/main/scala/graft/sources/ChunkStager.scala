@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
 import org.apache.hadoop.io.IOUtils
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions.col
@@ -165,20 +165,31 @@ object ChunkStager {
   /** Run a single-file sink's write with its staging dir
     * `<path>.staging`: cleared first, so no leftover of an earlier write
     * is spliced in, and deleted afterwards, also when the write fails.
+    * On the local filesystem the output goes through the raw FS, so no
+    * Hadoop `.<name>.crc` side file lands beside it; a stale one from an
+    * earlier write is deleted, or a checksummed read would reject the
+    * new bytes.
     */
   def singleFile(spark: SparkSession, path: String)(write: Staging => Unit): Unit = {
     val out = new Path(path)
     val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val outFs = fs match {
+      case c: ChecksumFileSystem =>
+        c.getRawFileSystem.delete(c.getChecksumFile(out), false)
+        c.getRawFileSystem
+      case f => f
+    }
     val dir = new Path(path + ".staging")
     fs.delete(dir, true)
     fs.mkdirs(dir)
-    try write(new Staging(fs, dir, out)) finally fs.delete(dir, true)
+    try write(new Staging(fs, dir, outFs, out)) finally fs.delete(dir, true)
   }
 
   /** The staging dir of one single-file write; chunks are staged under
     * a writer-chosen name each.
     */
-  final class Staging private[ChunkStager] (fs: FileSystem, dir: Path, out: Path) {
+  final class Staging private[ChunkStager] (fs: FileSystem, dir: Path,
+      outFs: FileSystem, out: Path) {
 
     def stage[B](keyed: DataFrame, cells: Cells[B], maxParts: Int,
         slot: Int => Column = _ => col("chunk"))(
@@ -202,7 +213,7 @@ object ChunkStager {
       * streamed from its staged object or written as `empty`.
       */
     def concat(header: Seq[Array[Byte]], names: Seq[String], empty: Array[Byte]): Unit = {
-      val os = fs.create(out, true)
+      val os = outFs.create(out, true)
       try {
         header.foreach(os.write)
         names.foreach { n =>

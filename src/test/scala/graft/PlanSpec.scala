@@ -1,5 +1,11 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.{Expression, HigherOrderFunction}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
+import org.apache.spark.sql.execution.{FilterExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterEach
 
 import graft.queries.Registry
@@ -439,5 +445,58 @@ class PlanSpec extends SparkSpec with BeforeAndAfterEach {
   test("q184: gopher repetition stats are scan-bound — zero shuffles") {
     val p = plan("q184_gopher_ngrams")
     assert(!p.contains("Exchange"), p)
+  }
+
+  /** The expressions of every plan that building and collecting `name`
+    * executes, the eager checkpoints included, and of the cached plans
+    * those read; each flagged whether it is a Filter condition.
+    */
+  private def executedExpressions(name: String): Seq[(Boolean, Expression)] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Registry.queries(name)(spark, dir).collect()
+      // listeners hear actions asynchronously, in order: once this
+      // marker's action arrives, every earlier one has too
+      val marker = spark.range(1)
+      marker.collect()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!seen.contains(marker.queryExecution) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(seen.contains(marker.queryExecution), "listener never heard the marker")
+    } finally spark.listenerManager.unregister(listener)
+    object Plans extends AdaptiveSparkPlanHelper
+    def physical(p: SparkPlan): Seq[(Boolean, Expression)] = Plans.collect(p) {
+      case m: InMemoryTableScanExec => physical(m.relation.cachedPlan)
+      case f: FilterExec => Seq(true -> f.condition)
+      case n => n.expressions.map(false -> _)
+    }.flatten
+    def logical(p: LogicalPlan): Seq[(Boolean, Expression)] = p.collect {
+      case m: InMemoryRelation => physical(m.cachedPlan)
+      case f: Filter => Seq(true -> f.condition)
+      case n => n.expressions.map(false -> _)
+    }.flatten
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq.flatMap(qe => logical(qe.optimizedPlan))
+  }
+
+  test("q37/q147: no Filter re-evaluates the tokenizer or a higher-order function") {
+    // a size(shingles) > 0 filter pushed under the projection once
+    // inlined the whole shingle builder, tokenizer included, into an
+    // interpreted predicate: one tokenization per shingle per doc
+    for (name <- Seq("q37_minhash_dedup", "q147_corpus_curation")) {
+      val exprs = executedExpressions(name)
+      // the plans that build the shingles were among those heard
+      assert(exprs.exists(_._2.exists(_.isInstanceOf[graft.functions.UnicodeTokens])), name)
+      val bad = exprs.collect { case (true, c) => c }.filter(_.exists {
+        case _: HigherOrderFunction | _: graft.functions.UnicodeTokens => true
+        case _ => false
+      })
+      assert(bad.isEmpty, s"$name:\n${bad.mkString("\n")}")
+    }
   }
 }

@@ -114,11 +114,26 @@ class ChunkStagerSpec extends SparkSpec {
     test(s"byte identity: $name") {
       val d = tmp()
       write(d)
-      val out = Files.list(d).iterator().asScala
-        .filterNot(_.getFileName.toString.startsWith(".")).toSeq
+      val all = Files.list(d).iterator().asScala.toSeq
+      val out = all.filterNot(_.getFileName.toString.startsWith("."))
       assert(out.size == 1, out)
       assert(digest(out.head) == want, s"$name")
+      // no Hadoop checksum side file beside the output
+      assert(!all.exists(_.getFileName.toString.endsWith(".crc")), all)
     }
+
+  test("a stale .crc beside a single-file output is removed, so reads pass") {
+    val d = tmp()
+    val nc = d.resolve("a.nc")
+    Files.write(d.resolve(".a.nc.crc"), Array[Byte](1, 2, 3, 4, 5, 6, 7, 8))
+    val rows = latLonCells(22)
+    Hdf5Writer.writeGrid(rows, nc.toString, "v", "latitude", "longitude",
+      "value", lats, lons, chunkRows = 5)
+    assert(!Files.exists(d.resolve(".a.nc.crc")))
+    val back = spark.read.format("graft-netcdf").option("path", nc.toString)
+      .option("var", "v").load().filter(!isnan(col("value")))
+    assert(back.count() == rows.count())
+  }
 
   // ---- no state leaks between writes ----
 
