@@ -16,8 +16,8 @@ import graft.functions.UnicodeTokens
   * corpora).
   *
   * Invariant (the migration's regression gate): on pure-ASCII text the
-  * kernel produces EXACTLY the tokens of the legacy lowercased `\s+`
-  * split with empties dropped ([[legacyWords]]) — so adopting this
+  * kernel produces EXACTLY the tokens of the legacy
+  * `filter(split(lower(text), "\\s+"), _.nonEmpty)` — so adopting this
   * seam moves NO output on whitespace-script corpora
   * (UnicodeTokensSpec pins it property-style).
   *
@@ -28,7 +28,7 @@ import graft.functions.UnicodeTokens
   */
 object Tok {
 
-  /** Script-aware word tokens of the lowercased text — the default seam.
+  /** Script-aware word tokens of lower(text) — the default seam.
     * Never yields empty or null tokens (runs are maximal non-separator
     * spans), so no length>0 filter is needed downstream.
     *
@@ -53,10 +53,10 @@ object Tok {
 
   /** DuckDB fragment producing the same token list as [[words]] over
     * the SQL expression `expr` (usually a column name). Generated from
-    * the kernel's own pattern constant; `lcase` is DuckDB's `lower`.
+    * the kernel's own pattern constant.
     */
   def sqlWords(expr: String): String =
-    "regexp_extract_all(lcase(" + expr + "), '" + UnicodeTokens.Re2Pattern + "')"
+    "regexp_extract_all(lower(" + expr + "), '" + UnicodeTokens.Re2Pattern + "')"
 
   /** DuckDB twin of [[wordsCased]]. */
   def sqlWordsCased(expr: String): String =

@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
-import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 import com.ibm.icu.lang.UCharacter
 
@@ -47,15 +46,14 @@ import com.ibm.icu.lang.UCharacter
   *
   * `lowercase = true` lowercases inside the same pass, with the exact
   * semantics of Spark's default (UTF8_BINARY, ICU case mappings)
-  * `lower()`: all-ASCII input lowercases A–Z byte-wise and splits on
-  * bytes; anything else goes through
-  * `UCharacter.toLowerCase(s.toValidString)`, the call
+  * `lower()`: all-ASCII input goes through `toLowerCaseAscii`, anything
+  * else through `UCharacter.toLowerCase(s.toValidString)`, the call
   * `CollationAwareUTF8String.toLowerCaseSlow` makes. Calling ICU
   * directly keeps `CollationAwareUTF8String` out of the JVM: its static
   * initializer builds a title-case table over all 1,114,112 code points
   * (~2 s, while every other task thread waits on the class-init lock).
   * The segmentation itself is case-independent, and the oracle mirrors
-  * the lowercase step with DuckDB's `lcase` (`Tok.sqlWords`).
+  * the lowercase step with DuckDB's `lower` (`Tok.sqlWords`).
   *
   * INDIC / COMBINING-MARK segmentation (r17 verdict #8, decided r18 —
   * documented behavior, pinned by UnicodeTokensSpec):
@@ -153,37 +151,8 @@ object UnicodeTokens {
 
   /** Tokens of `lower(s)`: bit-identical to `compute(lower(s))`. */
   def computeLower(s: UTF8String): ArrayData =
-    if (s.isFullAscii) asciiLower(s)
+    if (s.isFullAscii) compute(s.toLowerCaseAscii)
     else tokenize(UCharacter.toLowerCase(s.toValidString))
-
-  /** All-ASCII input: lowercase into one fresh buffer and cut the tokens
-    * out of it without copying (no ASCII code point is a singleton, so
-    * tokens are exactly the runs between separator bytes).
-    */
-  private def asciiLower(s: UTF8String): ArrayData = {
-    val n = s.numBytes
-    val base = s.getBaseObject
-    val off = s.getBaseOffset
-    val buf = new Array[Byte](n)
-    val out = new java.util.ArrayList[UTF8String](16)
-    var runStart = -1
-    var i = 0
-    while (i < n) {
-      val b = Platform.getByte(base, off + i)
-      if (isSep(b)) {
-        if (runStart >= 0) {
-          out.add(UTF8String.fromBytes(buf, runStart, i - runStart))
-          runStart = -1
-        }
-      } else {
-        buf(i) = if (b >= 'A' && b <= 'Z') (b + 32).toByte else b
-        if (runStart < 0) runStart = i
-      }
-      i += 1
-    }
-    if (runStart >= 0) out.add(UTF8String.fromBytes(buf, runStart, n - runStart))
-    new GenericArrayData(out.toArray)
-  }
 
   private def tokenize(str: String): ArrayData = {
     // one java String per row: codepoint classification needs chars,

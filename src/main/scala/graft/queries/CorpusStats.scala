@@ -239,7 +239,10 @@ object CorpusStats {
     "q186_hll_distinct",
     (s, dir) => {
       val docs = t(s, dir)("documents")
-      val sh = docs.select(explode(Dedup.shingles(col("text"), 3)).as("sh"))
+      // explode_OUTER + isNotNull: plain explode's inferred
+      // size(shingles) > 0 guard would tokenize each document twice
+      val sh = docs.select(explode_outer(Dedup.shingles(col("text"), 3)).as("sh"))
+        .filter(col("sh").isNotNull)
       val hashed = sh.select(Dedup.md5Hash64(col("sh")).as("h"))
       val regs = hashed
         .select((col("h") % 64).as("bucket"),
@@ -290,7 +293,8 @@ object CorpusStats {
     (s, dir) => {
       val docs = t(s, dir)("documents")
       val sh = docs.select(col("doc_id"),
-        explode(Dedup.shingles(col("text"), 8)).as("sh"))
+        explode_outer(Dedup.shingles(col("text"), 8)).as("sh"))
+        .filter(col("sh").isNotNull) // as in q186
       val nsh = sh.groupBy("doc_id").agg(count(lit(1)).as("n_shingles"))
       val nov = sh.groupBy("sh").agg(min("doc_id").as("doc_id"))
         .groupBy("doc_id").agg(count(lit(1)).as("novel_count"))

@@ -149,18 +149,23 @@ object DedupQueries {
       val corpus = docs.filter(col("doc_id") % 5 =!= 0)
       val delta = docs.filter(col("doc_id") % 5 === 0)
 
+      // no empty-shingle Filter here: pushed below the projection it
+      // would evaluate the tokenizer a second time per document. Docs
+      // with fewer than 3 tokens get no band rows (below), and every
+      // other use of these shingles joins on ids that came from band rows
       def sh(d: org.apache.spark.sql.DataFrame) = d
         .select(col("doc_id").as("id"),
           Dedup.shingles(col("text"), 3).as("sh"))
-        .filter(size(col("sh")) > 0)
       // explode_OUTER + isNotNull (the Dedup.wordGramKeys lesson): plain
       // explode's inferred size()>0 guard re-inlines the whole k=64
       // MinhashSignature + banding into a per-row Filter evaluation —
-      // the signature was being computed twice per document
+      // the signature was being computed twice per document. An empty
+      // shingle set bands to null, so it explodes to the one null row
+      // the isNotNull drops.
       def bandRows(d: org.apache.spark.sql.DataFrame) = sh(d)
-        .withColumn("shh", transform(col("sh"), t => xxhash64(t)))
-        .select(col("id"), Dedup.bandedSignature(
-          Dedup.minhashSignatureFromHashes(col("shh"), 64), 64, 16)
+        .withColumn("shh", Dedup.shingleHashes(col("sh")))
+        .select(col("id"), when(size(col("shh")) > 0, Dedup.bandedSignature(
+          Dedup.minhashSignatureFromHashes(col("shh"), 64), 64, 16))
           .as("bands"))
         .select(col("id"), explode_outer(col("bands")).as("b"))
         .filter(col("b").isNotNull)

@@ -148,8 +148,7 @@ object StreamCuration {
         exists(gramKeys(col(textCol)), gk =>
           bitSet(pos(gk, 0)) && bitSet(pos(gk, 1)) && bitSet(pos(gk, 2)))
           .as("candidate"))
-      .filter(size(col("sh")) > 0)
-      .withColumn("shx", transform(col("sh"), t => xxhash64(t)))
+      .withColumn("shx", Dedup.shingleHashes(col("sh")))
       .select(col("docId"),
         array_distinct(transform(col("sh"), t => Dedup.md5Hash64(t)))
           .as("shh"),
@@ -158,6 +157,7 @@ object StreamCuration {
       .as[(Long, Array[Long], Array[Long], Boolean)]
       .map(identity) // ser/deser barrier: signature materialized once
       .toDF("docId", "shh", "sig", "candidate")
+      .filter(size(col("shh")) > 0) // as in StreamDedup.bandRows
       .select(col("docId"), col("shh"), col("candidate"),
         explode(Dedup.bandedSignature(col("sig"), k, bands)).as("b"))
       .select(col("b.band_hash").as("bandHash"), col("docId"), col("shh"),

@@ -140,8 +140,7 @@ object StreamDedup {
     docs
       .select(col(idCol).cast("long").as("docId"),
         Dedup.shingles(col(textCol), n).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .withColumn("shx", transform(col("sh"), t => xxhash64(t)))
+      .withColumn("shx", Dedup.shingleHashes(col("sh")))
       .select(col("docId"),
         array_distinct(transform(col("sh"), t => Dedup.md5Hash64(t)))
           .as("shh"),
@@ -149,6 +148,9 @@ object StreamDedup {
       .as[(Long, Array[Long], Array[Long])]
       .map(identity)          // ser/deser barrier: sig materialized once
       .toDF("docId", "shh", "sig")
+      // docs with fewer than n tokens; above the barrier, where it cannot
+      // be pushed down to re-evaluate the tokenizer in its condition
+      .filter(size(col("shh")) > 0)
       .select(col("docId"), col("shh"),
         explode(Dedup.bandedSignature(col("sig"), k, bands)).as("b"))
       .select(col("b.band_hash").as("bandHash"), col("docId"), col("shh"))
