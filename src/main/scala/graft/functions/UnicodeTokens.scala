@@ -151,8 +151,15 @@ object UnicodeTokens {
 
   /** Tokens of `lower(s)`: bit-identical to `compute(lower(s))`. */
   def computeLower(s: UTF8String): ArrayData =
-    if (s.isFullAscii) compute(s.toLowerCaseAscii)
-    else tokenize(UCharacter.toLowerCase(s.toValidString))
+    if (s.isFullAscii) compute(s.toLowerCaseAscii) else tokenize(lowerNonAscii(s))
+
+  /** `lower(s)` with the semantics of Spark's default `lower()` (see
+    * `lowercase`), without `CollationAwareUTF8String`.
+    */
+  def lower(s: UTF8String): UTF8String =
+    if (s.isFullAscii) s.toLowerCaseAscii else UTF8String.fromString(lowerNonAscii(s))
+
+  private def lowerNonAscii(s: UTF8String): String = UCharacter.toLowerCase(s.toValidString)
 
   private def tokenize(str: String): ArrayData = {
     // one java String per row: codepoint classification needs chars,
@@ -207,4 +214,41 @@ object UnicodeTokens {
   /** RE2 form of the singleton class (full-match in DuckDB). */
   val Re2SingletonPattern: String =
     "[\\p{Han}\\p{Hiragana}\\p{Katakana}\\p{Thai}]"
+}
+
+/** Spark's default `lower()` as one kernel, the lowercasing of
+  * [[UnicodeTokens.computeLower]]: for the queries that lowercase
+  * document text but do not tokenize it in the same expression, so no
+  * query pays the ~2 s `CollationAwareUTF8String` class init.
+  */
+case class LowerText(child: Expression) extends UnaryExpression {
+
+  override def dataType: DataType = StringType
+  override def nullIntolerant: Boolean = true
+
+  override def checkInputDataTypes()
+      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    child.dataType match {
+      case StringType =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case other =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+          s"lower_text needs string, got $other")
+    }
+
+  override protected def nullSafeEval(input: Any): Any =
+    UnicodeTokens.lower(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cls = UnicodeTokens.getClass.getName.stripSuffix("$")
+    defineCodeGen(ctx, ev, c => s"$cls.lower($c)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): LowerText =
+    copy(child = newChild)
+}
+
+object LowerText {
+  def apply(col: Column): Column =
+    GraftColumnBridge.toColumn(LowerText(GraftColumnBridge.toExpression(col)))
 }

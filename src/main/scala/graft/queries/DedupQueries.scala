@@ -936,7 +936,7 @@ object DedupQueries {
   def winnowFps(docsIn: DataFrame): DataFrame = {
     val k = 8
     val w = 4
-    val txt = lower(col("text"))
+    val txt = graft.functions.LowerText(col("text"))
     val docs = docsIn
       .select(col("doc_id"), txt.as("t"))
       .filter(length(col("t")) >= k + w - 1)
@@ -1034,7 +1034,7 @@ object DedupQueries {
       .union(pairs.select(col("bi").as("doc_id")))
       .distinct()
     val grams = docsIn
-      .select(col("doc_id"), lower(col("text")).as("t"))
+      .select(col("doc_id"), graft.functions.LowerText(col("text")).as("t"))
       .join(candDocs.hint("shuffle_hash"), "doc_id")
       .select(col("doc_id"), explode_outer(expr(
         s"array_distinct(transform(" +

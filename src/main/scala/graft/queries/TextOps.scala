@@ -1777,9 +1777,9 @@ object TextOps {
     "q210_unicode_tokens",
     (s, dir) => {
       val sn = array(unicodeSnippets.map(lit): _*)
-      val toks = graft.functions.UnicodeTokens(
-        lower(concat(col("text"), lit(" "),
-          element_at(sn, (col("doc_id") % 5).cast("int") + 1))))
+      val toks = graft.functions.UnicodeTokens.lowered(
+        concat(col("text"), lit(" "),
+          element_at(sn, (col("doc_id") % 5).cast("int") + 1)))
       t(s, dir)("documents")
         .select(col("doc_id"), toks.as("tk"))
         .select(col("doc_id"),
@@ -1949,7 +1949,7 @@ object TextOps {
       val vs = array(nfcVariants.map(lit): _*)
       val raw = concat(col("text"), lit(" "),
         element_at(vs, (col("doc_id") % nfcVariants.size).cast("int") + 1))
-      val norm = graft.functions.NfcNormalize(lower(raw))
+      val norm = graft.functions.NfcNormalize(graft.functions.LowerText(raw))
       val toks = graft.functions.UnicodeTokens(norm)
       t(s, dir)("documents").select(
         col("doc_id"),

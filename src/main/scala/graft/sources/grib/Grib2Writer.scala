@@ -44,7 +44,7 @@ object Grib2Writer {
     val di = if (ni > 1) (lons.last - lons.head) / (ni - 1) else 1.0
     // one chunk per (step, member) message, its id (step << 8) | member
     val cells = ChunkStager.Doubles(ni * nj, Double.NaN)
-    val keyed = ChunkStager.onGrid(df, "latitude", "longitude", "value",
+    val frags = ChunkStager.onGrid(df, "latitude", "longitude", "value",
         lats, lons, cells, stepCol.map(col(_).cast("int")).getOrElse(lit(24)),
         col("number").cast("int")) { (r, i, j) =>
       val (s, m) = (r.getInt(3), r.getInt(4))
@@ -59,7 +59,7 @@ object Grib2Writer {
     }
     def name(key: Int) = f"s${key >> 8}%05d_m${key & 0xFF}%05d.part"
     ChunkStager.singleFile(df.sparkSession, path) { st =>
-      st.stage(keyed, cells, 64, slot)((key, buf) =>
+      st.stage(frags, cells, 64, slot)((key, buf) =>
         encodeMessage(key & 0xFF, key >> 8, buf, ni, nj, la1, lo1, di, dj), name)
       // a GRIB file IS its messages concatenated, in (step, member) order
       val names = st.staged.keys.toSeq.sorted
@@ -86,10 +86,12 @@ object Grib2Writer {
       b.putInt(5 + body.length).put(num.toByte).put(body)
       b.array()
     }
-    val present = grid.filterNot(_.isNaN)
-    val hasHoles = present.length != grid.length
-    present.foreach { v =>
-      require(v >= 0 && v < (1 << 16) && v == math.rint(v),
+    // the present (non-NaN) cells are read from `grid` in place: a copy
+    // of a message's grid is a humongous allocation
+    val nPresent = grid.count(v => !v.isNaN)
+    val hasHoles = nPresent != grid.length
+    grid.foreach { v =>
+      require(v.isNaN || v >= 0 && v < (1 << 16) && v == math.rint(v),
         s"value $v not an integer in [0, 65536) — simple packing R=0/E=0/D=0")
     }
 
@@ -130,7 +132,7 @@ object Grib2Writer {
     })
     val s5 = sec(5, {
       val b = ByteBuffer.allocate(16).order(ByteOrder.BIG_ENDIAN)
-      b.putInt(present.length).putShort(0) // template 5.0
+      b.putInt(nPresent).putShort(0) // template 5.0
       b.putFloat(0.0f).putShort(0).putShort(0)
       b.put(16.toByte).put(0.toByte)
       b.array()
@@ -147,15 +149,16 @@ object Grib2Writer {
         bits
       })
     val s7 = sec(7, {
-      val b = ByteBuffer.allocate(present.length * 2).order(ByteOrder.BIG_ENDIAN)
-      present.foreach(v => b.putShort(v.toInt.toShort))
+      val b = ByteBuffer.allocate(nPresent * 2).order(ByteOrder.BIG_ENDIAN)
+      grid.foreach(v => if (!v.isNaN) b.putShort(v.toInt.toShort))
       b.array()
     })
-    val body = s1 ++ s3 ++ s4 ++ s5 ++ s6 ++ s7 ++ "7777".getBytes
-    val total = 16 + body.length
-    val s0 = ByteBuffer.allocate(16).order(ByteOrder.BIG_ENDIAN)
-    s0.put("GRIB".getBytes).putShort(0).put(0.toByte).put(2.toByte)
+    val body = Seq(s1, s3, s4, s5, s6, s7, "7777".getBytes)
+    val total = 16 + body.map(_.length).sum
+    val msg = ByteBuffer.allocate(total).order(ByteOrder.BIG_ENDIAN)
+    msg.put("GRIB".getBytes).putShort(0).put(0.toByte).put(2.toByte)
       .putLong(total.toLong)
-    s0.array() ++ body
+    body.foreach(msg.put)
+    msg.array()
   }
 }

@@ -161,7 +161,7 @@ object Hdf5Writer {
 
   private def encodeDoubles(vals: Array[Double]): Array[Byte] = {
     val bb = ByteBuffer.allocate(vals.length * 8).order(ByteOrder.LITTLE_ENDIAN)
-    vals.foreach(bb.putDouble)
+    bb.asDoubleBuffer().put(vals)
     bb.array()
   }
 
@@ -173,7 +173,7 @@ object Hdf5Writer {
   private[nc] def encodeChunk(buf: Array[Float], level: Int,
       shuffle: Boolean = false): Array[Byte] = {
     val bb = ByteBuffer.allocate(buf.length * 4).order(ByteOrder.LITTLE_ENDIAN)
-    buf.foreach(bb.putFloat)
+    bb.asFloatBuffer().put(buf)
     var raw = bb.array()
     if (shuffle) {
       val n = buf.length
@@ -211,11 +211,11 @@ object Hdf5Writer {
       val (nLat, nLon) = (lats.length, lons.length)
       val nChunks = (nLat + chunkRows - 1) / chunkRows
       val cells = ChunkStager.Floats(chunkRows * nLon, fill)
-      val keyed = ChunkStager.onGrid(df, latCol, lonCol, valCol, lats, lons, cells) {
+      val frags = ChunkStager.onGrid(df, latCol, lonCol, valCol, lats, lons, cells) {
         (_, i, j) => (i / chunkRows, (i % chunkRows) * nLon + j)
       }
       def name(ci: Int) = "chunk-%05d".format(ci)
-      st.stage(keyed, cells, nChunks)(
+      st.stage(frags, cells, nChunks)(
         (_, buf) => encodeChunk(buf, deflateLevel, shuffle), name)
       // staged sizes → B-tree keys; a band with no rows has no staged file
       // and gets a driver-encoded all-fill chunk (tiny: deflate of a

@@ -177,7 +177,8 @@ object TiffWriter {
           (pmod(col("pr"), lit(th)) * tw + pmod(col("pc"), lit(tw)))
             .cast("int").as("local"),
           col("v").cast("int"))
-        st.stage(keyed, cells, lv.nTiles)((_, buf) => encode(buf), name(lvl))
+        st.stage(ChunkStager.fragments(keyed, cells), cells, lv.nTiles)(
+          (_, buf) => encode(buf), name(lvl))
       }
       stage(0, levels.head, pixels)
       if (resampling == "cubic") {

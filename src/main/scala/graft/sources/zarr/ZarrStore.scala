@@ -58,9 +58,11 @@ object ZarrStore {
     } finally in.close()
   }
 
+  /** Through [[ChunkStager.create]], as the staged chunks are: no
+    * `.crc` side file lands in the store.
+    */
   private def writeFile(conf: Configuration, path: String, bytes: Array[Byte]): Unit = {
-    val f = fs(conf, path)
-    val out = f.create(new Path(path), true)
+    val out = ChunkStager.create(fs(conf, path), new Path(path))
     try out.write(bytes) finally out.close()
   }
 
@@ -222,6 +224,10 @@ object ZarrStore {
           s"$path: truncated zlib chunk ($total of ${o.length} bytes)")
         total += n
       }
+      // the stream must end here, past its adler32: a chunk cut inside
+      // that 4-byte trailer still inflates every data byte
+      require(inf.finished() || (inf.inflate(new Array[Byte](1)) == 0 && inf.finished()),
+        s"$path: zlib chunk does not end after $total bytes (truncated or too long)")
     } finally inf.end() // free native zlib memory on the throw paths too
     require(total == o.length, s"inflated $total of ${o.length} bytes")
     o
@@ -241,6 +247,8 @@ object ZarrStore {
       }
       require(total == o.length,
         s"$path: gunzipped $total of ${o.length} bytes")
+      // reading past the data checks the crc32 trailer (as above)
+      require(in.read() == -1, s"$path: gzip chunk longer than ${o.length} bytes")
       o
     } finally in.close()
   }
@@ -475,14 +483,19 @@ object ZarrStore {
   private def encode(vals: Array[Double], dtype: String, zlib: Boolean): Array[Byte] = {
     val es = elemSize(dtype)
     val bb = ByteBuffer.allocate(vals.length * es).order(ByteOrder.LITTLE_ENDIAN)
-    vals.foreach { v =>
-      dtype.drop(1) match {
-        case "f8" => bb.putDouble(v)
-        case "f4" => bb.putFloat(v.toFloat)
-        case "i8" => bb.putLong(v.toLong)
-        case "i4" => bb.putInt(v.toInt)
-        case d => sys.error(s"write dtype $d unsupported")
-      }
+    var k = 0
+    dtype.substring(1) match {
+      case "f8" => bb.asDoubleBuffer().put(vals)
+      case "f4" =>
+        val b = bb.asFloatBuffer()
+        while (k < vals.length) { b.put(k, vals(k).toFloat); k += 1 }
+      case "i8" =>
+        val b = bb.asLongBuffer()
+        while (k < vals.length) { b.put(k, vals(k).toLong); k += 1 }
+      case "i4" =>
+        val b = bb.asIntBuffer()
+        while (k < vals.length) { b.put(k, vals(k).toInt); k += 1 }
+      case d => sys.error(s"write dtype $d unsupported")
     }
     val raw = bb.array()
     if (!zlib) raw else {
@@ -548,11 +561,11 @@ object ZarrStore {
     val nChunkCols = (lons.length + chunkCols - 1) / chunkCols
     val nChunks = ((lats.length + chunkRows - 1) / chunkRows) * nChunkCols
     val cells = ChunkStager.Doubles(chunkRows * chunkCols, fill)
-    val keyed = ChunkStager.onGrid(df, latCol, lonCol, valCol, lats, lons, cells) {
+    val frags = ChunkStager.onGrid(df, latCol, lonCol, valCol, lats, lons, cells) {
       (_, i, j) => ((i / chunkRows) * nChunkCols + j / chunkCols,
         (i % chunkRows) * chunkCols + j % chunkCols)
     }
-    ChunkStager.stage(keyed, cells, nChunks)((_, buf) => encodeChunk(buf),
+    ChunkStager.stage(frags, cells, nChunks)((_, buf) => encodeChunk(buf),
       c => s"$storeDir/$varName/${key(c / nChunkCols, c % nChunkCols)}")
   }
 }

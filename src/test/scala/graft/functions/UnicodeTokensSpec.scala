@@ -154,36 +154,54 @@ class UnicodeTokensSpec extends SparkSpec {
     assert(viaCol == viaLocal)
   }
 
+  /** Mixed-case texts in many scripts, special case mappings (final
+    * sigma, dotted I, sharp s, titlecase digraphs) and invalid UTF-8.
+    */
+  private val lowerCorpus: Seq[Array[Byte]] = Seq(
+    "The Quick BROWN fox\tJumps\nOVER  the LAZY dog", "MiXeD-CaSe_123!",
+    "ÀÉÎÕÜ Ça Va ÑANDÚ Ÿ", "ΟΔΟΣ ΣΟΦΟΣ ΣΑΣ", "İSTANBUL İi", "STRAẞE ß Straße",
+    "深層学習モデルの訓練データ処理", "数据管道在大规模集群上运行　测试",
+    "ข้อมูลภาษาไทยสำหรับทดสอบ", "GPU加速で高速化した分散処理",
+    "ＡＢＣ全角 Ǆ ǅ ǆ", "", "   ").map(_.getBytes("UTF-8")) ++ Seq(
+    // invalid UTF-8: stray continuation bytes, a truncated sequence,
+    // an encoded surrogate, an overlong form
+    Array[Byte]('A', 0x80.toByte, 'B', ' ', 0xFF.toByte, 0xFE.toByte, 'C'),
+    Array[Byte]('D', 'e', 0xC3.toByte),
+    Array[Byte](0xED.toByte, 0xA0.toByte, 0x80.toByte, ' ', 'X'),
+    Array[Byte](0xC0.toByte, 0xAF.toByte, 'Y', 'Z'))
+
+  private def lowerCorpusDf = lowerCorpus.map(Option(_)).:+(None).toDF("b")
+    .select(col("b").cast("string").as("t"))
+
   test("Tok.words (one lowercasing kernel) equals the tokenizer over Spark's lower()") {
-    val texts: Seq[Array[Byte]] = Seq(
-      "The Quick BROWN fox\tJumps\nOVER  the LAZY dog", "MiXeD-CaSe_123!",
-      "ÀÉÎÕÜ Ça Va ÑANDÚ Ÿ", "ΟΔΟΣ ΣΟΦΟΣ ΣΑΣ", "İSTANBUL İi", "STRAẞE ß Straße",
-      "深層学習モデルの訓練データ処理", "数据管道在大规模集群上运行　测试",
-      "ข้อมูลภาษาไทยสำหรับทดสอบ", "GPU加速で高速化した分散処理",
-      "ＡＢＣ全角 Ǆ ǅ ǆ", "", "   ").map(_.getBytes("UTF-8")) ++ Seq(
-      // invalid UTF-8: stray continuation bytes, a truncated sequence,
-      // an encoded surrogate, an overlong form
-      Array[Byte]('A', 0x80.toByte, 'B', ' ', 0xFF.toByte, 0xFE.toByte, 'C'),
-      Array[Byte]('D', 'e', 0xC3.toByte),
-      Array[Byte](0xED.toByte, 0xA0.toByte, 0x80.toByte, ' ', 'X'),
-      Array[Byte](0xC0.toByte, 0xAF.toByte, 'Y', 'Z'))
-    val df = texts.map(Option(_)).:+(None).toDF("b")
-      .select(col("b").cast("string").as("t"))
-    val rows = df.select(
+    val rows = lowerCorpusDf.select(
         UnicodeTokens(lower(col("t"))).as("legacy"),
         graft.core.Tok.words(col("t")).as("fused"))
       .collect()
-    assert(rows.length == texts.length + 1)
+    assert(rows.length == lowerCorpus.length + 1)
     rows.foreach(r => assert(r.get(0) == r.get(1), r))
     assert(rows.last.isNullAt(1)) // null text stays null
     // the interpreted path (eval) agrees with the codegen'd one
-    texts.zip(rows).foreach { case (b, r) =>
+    lowerCorpus.zip(rows).foreach { case (b, r) =>
       val e = UnicodeTokens(
         org.apache.spark.sql.catalyst.expressions.Literal(UTF8String.fromBytes(b),
           org.apache.spark.sql.types.StringType), lowercase = true)
       val arr = e.eval().asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
       assert((0 until arr.numElements()).map(arr.getUTF8String(_).toString) ==
         r.getSeq[String](1))
+    }
+  }
+
+  test("LowerText equals Spark's lower() on the same corpus") {
+    val rows = lowerCorpusDf.select(lower(col("t")), LowerText(col("t"))).collect()
+    assert(rows.length == lowerCorpus.length + 1)
+    rows.foreach(r => assert(r.get(0) == r.get(1), r))
+    assert(rows.last.isNullAt(1))
+    // the interpreted path (eval) agrees with the codegen'd one
+    lowerCorpus.zip(rows).foreach { case (b, r) =>
+      val e = LowerText(org.apache.spark.sql.catalyst.expressions.Literal(
+        UTF8String.fromBytes(b), org.apache.spark.sql.types.StringType))
+      assert(e.eval().toString == r.getString(1))
     }
   }
 

@@ -17,10 +17,12 @@ import graft.sources.tiff.TiffWriter
 import graft.sources.zarr.ZarrStore
 
 /** The shared chunk-staging path of the four raster sinks: pinned output
-  * bytes (one small seeded grid per writer configuration), no state
-  * leaking between writes (stale staging files, stale Zarr chunks), one
-  * clear error for a coordinate that is not on the grid, the axis
-  * lookup's equality rules, and an even spread of chunks over the tasks.
+  * bytes (one small seeded grid per writer configuration, and one chunk
+  * larger than a fragment staged from several map tasks), bounded
+  * fragments, no state leaking between writes (stale staging files,
+  * stale Zarr chunks), no Hadoop `.crc` files, one clear error for a
+  * coordinate that is not on the grid, the axis lookup's equality rules,
+  * and an even spread of chunks over the tasks.
   */
 class ChunkStagerSpec extends SparkSpec {
   import spark.implicits._
@@ -30,17 +32,14 @@ class ChunkStagerSpec extends SparkSpec {
   private def md5(bytes: Array[Byte]): String =
     MessageDigest.getInstance("MD5").digest(bytes).map("%02x".format(_)).mkString
 
-  /** md5 of a file, or of a directory's (relative path, file md5) list;
-    * Hadoop's `.name.crc` side files are skipped.
-    */
+  private def files(p: JPath): Seq[JPath] =
+    Files.walk(p).iterator().asScala.filter(Files.isRegularFile(_)).toSeq
+
+  /** md5 of a file, or of a directory's (relative path, file md5) list. */
   private def digest(p: JPath): String =
     if (!Files.isDirectory(p)) md5(Files.readAllBytes(p))
     else {
-      val files = Files.walk(p).iterator().asScala.filter(Files.isRegularFile(_))
-        .filterNot { f =>
-          val n = f.getFileName.toString
-          n.startsWith(".") && n.endsWith(".crc")
-        }
+      val files = this.files(p)
         .map(f => s"${p.relativize(f)} ${md5(Files.readAllBytes(f))}")
         .toSeq.sorted
       md5(files.mkString("\n").getBytes("UTF-8"))
@@ -118,9 +117,89 @@ class ChunkStagerSpec extends SparkSpec {
       val out = all.filterNot(_.getFileName.toString.startsWith("."))
       assert(out.size == 1, out)
       assert(digest(out.head) == want, s"$name")
-      // no Hadoop checksum side file beside the output
-      assert(!all.exists(_.getFileName.toString.endsWith(".crc")), all)
+      // no Hadoop checksum side file beside the output, nor in a store
+      assert(!files(d).exists(_.getFileName.toString.endsWith(".crc")), files(d))
     }
+
+  // ---- one chunk of more cells than a fragment holds, from 3 map tasks ----
+  private val bigN = 400
+  private val bigLats = Array.tabulate(bigN)(i => 60.0 - i * 0.125)
+  private val bigLons = Array.tabulate(bigN)(j => 5.0 + j * 0.125)
+  /** (i, j, v) over one 400×400 chunk with ~10% holes, in 3 map
+    * partitions of contiguous row bands (~48k cells each, so every task
+    * fills whole fragments)
+    */
+  private def bigCells(seed: Long): DataFrame = {
+    val rnd = new Random(seed)
+    val cells = for {
+      i <- 0 until bigN; j <- 0 until bigN
+      v = rnd.nextInt(4000) + 1; if rnd.nextInt(10) != 0
+    } yield (i, j, v)
+    spark.createDataFrame(spark.sparkContext.parallelize(cells, 3)).toDF("i", "j", "v")
+  }
+  private def bigLatLon(seed: Long, scale: Double): DataFrame = {
+    val (la, lo) = (typedLit(bigLats), typedLit(bigLons))
+    bigCells(seed).select(element_at(la, col("i") + 1).as("latitude"),
+      element_at(lo, col("j") + 1).as("longitude"), (col("v") * scale).as("value"))
+  }
+
+  private val bigPinned: Seq[(String, JPath => Unit, String)] = Seq(
+    ("nc", d => Hdf5Writer.writeGrid(bigLatLon(41, 0.25), d.resolve("a.nc").toString,
+      "v", "latitude", "longitude", "value", bigLats, bigLons, chunkRows = bigN),
+      "76ce19fe2c9f922bacdbf06b3e0a9969"),
+    ("zarr v3", d => ZarrStore.writeGridV3(bigLatLon(42, 0.25), d.resolve("a.zarr").toString,
+      "v", "latitude", "longitude", "value", bigLats, bigLons,
+      chunkRows = bigN, chunkCols = bigN, innerRows = 200, innerCols = 200),
+      "ae9dbc9730301e2f84921de18a3b85a4"),
+    ("cog", d => TiffWriter.writeGrid(
+      bigCells(43).select((lit(ox) + (col("j") + 0.5) * sx).as("x"),
+        (lit(oy) - (col("i") + 0.5) * sy).as("y"), col("v").as("value")),
+      d.resolve("a.tif").toString, "x", "y", "value", ox, oy, sx, sy, bigN, bigN,
+      tileW = 512, tileH = 512, bits = 16),
+      "b400d83457cfb1ce61f79d7e76ee032f"),
+    ("grib", d => Grib2Writer.writeEnsemble(
+      bigLatLon(44, 1.0).withColumn("number", lit(0)), d.resolve("a.grib2").toString,
+      bigLats, bigLons),
+      "705af8ad8fce6daa568deb3d3d40e28b"))
+
+  for ((name, write, want) <- bigPinned)
+    test(s"byte identity, one chunk staged from 3 map tasks: $name") {
+      val d = tmp()
+      write(d)
+      val out = Files.list(d).iterator().asScala.toSeq
+      assert(out.size == 1, out)
+      assert(digest(out.head) == want, s"$name: ${digest(out.head)}")
+      assert(!files(d).exists(_.getFileName.toString.endsWith(".crc")), files(d))
+    }
+
+  test("no shuffled fragment holds more than FragmentCells cells") {
+    val df = bigCells(45).select(lit(0).as("chunk"), (col("i") * bigN + col("j")).as("local"),
+      col("v"))
+    val frags = ChunkStager.fragments(df, ChunkStager.Ints(bigN * bigN, 0))
+      .select(col("chunk"), (length(col("cells")) / 8).cast("int")).as[(Int, Int)].collect()
+    val cap = ChunkStager.FragmentCells
+    assert(frags.forall(_._2 <= cap), frags.toSeq)
+    // each of the 3 tasks fills whole fragments, then emits its rest
+    assert(frags.count(_._2 == cap) >= 3 && frags.count(_._2 < cap) == 3, frags.toSeq)
+    assert(frags.map(_._2.toLong).sum == df.count())
+  }
+
+  test("a task emits its open fragments once they reach the open-cell bound") {
+    // 40 chunks of 25 cells each, interleaved in one task: a bound of
+    // 640 cells (ten 64-cell fragments) flushes every tenth new chunk
+    val df = (0 until 1000).map(k => (k % 40, k / 40, k)).toDF("chunk", "local", "v")
+      .coalesce(1)
+    val frags = ChunkStager.fragments(df, ChunkStager.Ints(25, -1), open = 640)
+      .select(col("chunk"), col("cells")).as[(Int, Array[Byte])].collect()
+    assert(frags.length > 40, frags.length)
+    // every cell is shipped once, with its own offset and value
+    val cells = frags.flatMap { case (c, b) =>
+      val n = b.length / 8
+      val bb = java.nio.ByteBuffer.wrap(b)
+      (0 until n).map(i => (c, bb.getInt(4 * i), bb.getInt(4 * n + 4 * i)))
+    }
+    assert(cells.sorted.toSeq == (0 until 1000).map(k => (k % 40, k / 40, k)).sorted)
+  }
 
   test("a stale .crc beside a single-file output is removed, so reads pass") {
     val d = tmp()
@@ -296,12 +375,15 @@ class ChunkStagerSpec extends SparkSpec {
   }
 
   test("off-grid coordinates fail clearly: a NaN latitude") {
-    val out = tmp().resolve("a.zarr")
-    val df = Seq((lats(0), lons(0), 1.0), (Double.NaN, lons(0), 2.0))
-      .toDF("latitude", "longitude", "value")
-    offGrid(out, "latitude", "NaN", lats.length) {
-      ZarrStore.writeGrid(df, out.toString, "v", "latitude", "longitude", "value",
-        lats, lons, chunkRows = 5, chunkCols = 4)
+    // a null latitude is looked up as NaN
+    for (bad <- Seq(Some(Double.NaN), None)) {
+      val out = tmp().resolve("a.zarr")
+      val df = Seq((Some(lats(0)), lons(0), 1.0), (bad, lons(0), 2.0))
+        .toDF("latitude", "longitude", "value")
+      offGrid(out, "latitude", "NaN", lats.length) {
+        ZarrStore.writeGrid(df, out.toString, "v", "latitude", "longitude", "value",
+          lats, lons, chunkRows = 5, chunkCols = 4)
+      }
     }
   }
 
@@ -316,7 +398,8 @@ class ChunkStagerSpec extends SparkSpec {
     val d = tmp()
     val dir = d.toString
     val keyed = chunks.map(c => (c, 0, 1)).toDF("chunk", "local", "v").repartition(3)
-    ChunkStager.stage(keyed, ChunkStager.Ints(1, 0), maxParts, slot)(
+    val cells = ChunkStager.Ints(1, 0)
+    ChunkStager.stage(ChunkStager.fragments(keyed, cells), cells, maxParts, slot)(
       (_, _) => TaskContext.getPartitionId().toString.getBytes("UTF-8"),
       c => s"$dir/$c")
     val task = chunks.map(c =>
