@@ -387,60 +387,64 @@ object Grib2File {
 
   /** Simple packing (template 7.0): `nVals` big-endian unsigned
     * integers of `bpv` bits, packed from octet 6 of the data section.
-    * Whole 16-bit values, the common width, are read byte-aligned; any
-    * other width goes through the generic [[BitReader]].
+    * Fails unless the section holds them all.
     */
-  private def unpackSimple(s: ByteBuffer, p: Packing): Array[Long] = {
+  private def checkSimple(s: ByteBuffer, p: Packing): Unit = {
     require(p.bpv > 0 && p.bpv <= 32, s"bits-per-value ${p.bpv} unsupported")
     val need = (p.nVals.toLong * p.bpv + 7) / 8
     if (s.limit() - 5L < need)
       failed(s"data section holds ${s.limit() - 5} of $need packed bytes " +
         s"(${p.nVals} values at ${p.bpv} bits)")
-    val xs = new Array[Long](p.nVals)
-    var k = 0
-    if (p.bpv == 16) {
-      while (k < xs.length) { xs(k) = s.getShort(5 + 2 * k) & 0xFFFFL; k += 1 }
-    } else {
-      val br = new BitReader(s, 5)
-      while (k < xs.length) { xs(k) = br.take(p.bpv); k += 1 }
-    }
-    xs
   }
 
-  /** value = (R + X * 2^E) * 10^-D for every packed X. */
-  private def scaled(xs: Array[Long], p: Packing): Array[Double] = {
-    val scale = math.pow(2.0, p.binScale) * math.pow(10.0, -p.decScale)
-    val r = p.refVal * math.pow(10.0, -p.decScale)
-    val out = new Array[Double](xs.length)
-    var k = 0
-    while (k < xs.length) { out(k) = r + xs(k) * scale; k += 1 }
-    out
-  }
-
-  /** Section 6 (indicator 0) expanded over the `n` grid points: a set
-    * bit takes the next present value, a clear bit is NaN. The bitmap
-    * must set exactly one bit per present value.
+  /** Section 6 (indicator 0) over the `n` grid points: an MSB-first bit
+    * per point, set where a value is present. It must set exactly one
+    * bit per packed value.
     */
-  private def expandBitmap(bitmap: ByteBuffer, present: Array[Double],
-      n: Int): Array[Double] = {
+  private def checkBitmap(bitmap: ByteBuffer, nVals: Int, n: Int): Unit = {
     require(bitmap.limit() - 6 >= (n + 7) / 8,
       s"bitmap too short: ${bitmap.limit() - 6} bytes for $n points")
-    val full = new Array[Double](n)
-    var src = 0
-    var i = 0
-    while (i < n) {
-      val bit = (bitmap.get(6 + (i >> 3)) >> (7 - (i & 7))) & 1
-      if (bit == 1) {
-        if (src >= present.length)
-          failed(s"bitmap sets more bits than $src >= ${present.length} packed values")
-        full(i) = present(src)
-        src += 1
-      } else full(i) = Double.NaN
-      i += 1
+    var set = 0
+    var b = 0
+    while (b < n / 8) { set += Integer.bitCount(bitmap.get(6 + b) & 0xFF); b += 1 }
+    if (n % 8 != 0) set += Integer.bitCount(bitmap.get(6 + b) & (0xFF << (8 - n % 8)) & 0xFF)
+    if (set > nVals) failed(s"bitmap sets more bits than $nVals >= $nVals packed values")
+    require(set == nVals, s"bitmap covers $set of $nVals packed values")
+  }
+
+  /** The message's values in one array: each packed X (from `xs`, or
+    * straight from a simple-packed section when `xs` is null) scaled to
+    * (R + X * 2^E) * 10^-D, then, under a bitmap, spread over the `n`
+    * grid points with NaN where a bit is clear. The present values fill
+    * the front of the array and spread in place from the back; a value
+    * never moves to a lower index, so none is overwritten before it moves.
+    */
+  private def decodeValues(s: ByteBuffer, p: Packing, xs: Array[Long],
+      bitmap: ByteBuffer, n: Int): Array[Double] = {
+    val scale = math.pow(2.0, p.binScale) * math.pow(10.0, -p.decScale)
+    val r = p.refVal * math.pow(10.0, -p.decScale)
+    val out = new Array[Double](if (bitmap == null) p.nVals else n)
+    var k = 0
+    if (xs != null) while (k < p.nVals) { out(k) = r + xs(k) * scale; k += 1 }
+    else if (p.bpv == 16) {
+      // whole 16-bit values, the common width, read byte-aligned
+      while (k < p.nVals) { out(k) = r + (s.getShort(5 + 2 * k) & 0xFFFFL) * scale; k += 1 }
+    } else {
+      val br = new BitReader(s, 5)
+      while (k < p.nVals) { out(k) = r + br.take(p.bpv) * scale; k += 1 }
     }
-    require(src == present.length,
-      s"bitmap covers $src of ${present.length} packed values")
-    full
+    if (bitmap != null) {
+      var src = p.nVals - 1
+      var i = n - 1
+      while (i >= 0) {
+        if (((bitmap.get(6 + (i >> 3)) >> (7 - (i & 7))) & 1) == 1) {
+          out(i) = out(src)
+          src -= 1
+        } else out(i) = Double.NaN
+        i -= 1
+      }
+    }
+    out
   }
 
   /** Decode the packed payload of one message:
@@ -492,13 +496,11 @@ object Grib2File {
               val p = packing
               require(p != null, "data section before representation section")
               val xs: Array[Long] =
-                if (p.template == 0) unpackSimple(s, p)
+                if (p.template == 0) { checkSimple(s, p); null }
                 else if (p.template == 41) decodePng(s, p)
                 else decodeComplex(s, p)
-              val present = scaled(xs, p)
-              values =
-                if (bitmap == null) present
-                else expandBitmap(bitmap, present, info.ni * info.nj)
+              if (bitmap != null) checkBitmap(bitmap, p.nVals, info.ni * info.nj)
+              values = decodeValues(s, p, xs, bitmap, info.ni * info.nj)
             case _ => ()
           }
           cur += secLen

@@ -303,25 +303,22 @@ final class Hdf5File(val path: String) extends AutoCloseable {
 
   /** Decode one chunk's bytes: deflate then un-shuffle, honoring the
     * per-chunk filter mask (bit i set = filter i skipped for this chunk).
+    * A chunk decodes to exactly its raw size (the chunk dims times the
+    * element size, edge chunks included), so deflate inflates into one
+    * array of that size; a chunk that decodes short or long fails.
     */
   private def decodeChunk(ds: Dataset, e: ChunkEntry): Array[Byte] = {
+    val raw = ds.layout match {
+      case Chunked(_, chunkDims) => chunkDims.init.map(_.toLong).product * ds.elemSize
+      case _ => throw new IllegalStateException(s"${ds.name} is not chunked")
+    }
+    require(raw <= Int.MaxValue, s"${ds.name}: $raw-byte chunks unsupported")
     var buf = new Array[Byte](e.stored)
     readAt(e.addr, e.stored).get(buf)
     // filters apply in pipeline order on write; reverse on read
     val applied = ds.filters.zipWithIndex.filter { case (_, i) => (e.mask & (1 << i)) == 0 }
     applied.map(_._1).reverse.foreach {
-      case 1 => // deflate
-        val inf = new Inflater()
-        inf.setInput(buf)
-        val out = new java.io.ByteArrayOutputStream(buf.length * 4)
-        val tmp = new Array[Byte](8192)
-        while (!inf.finished()) {
-          val n = inf.inflate(tmp)
-          require(n > 0 || inf.finished(), "truncated deflate chunk")
-          out.write(tmp, 0, n)
-        }
-        inf.end()
-        buf = out.toByteArray
+      case 1 => buf = inflate(buf, raw.toInt)
       case 2 => // shuffle: stored as dsize byte-planes; re-interleave
         val sz = ds.elemSize
         val n = buf.length / sz
@@ -338,7 +335,33 @@ final class Hdf5File(val path: String) extends AutoCloseable {
         buf = out
       case other => throw new IllegalStateException(s"filter $other unsupported")
     }
+    require(buf.length == raw,
+      s"${ds.name}: chunk at ${e.addr} decodes to ${buf.length} of $raw bytes")
     buf
+  }
+
+  /** A zlib stream that must inflate to exactly `raw` bytes. */
+  private def inflate(stored: Array[Byte], raw: Int): Array[Byte] = {
+    val inf = new Inflater()
+    try {
+      inf.setInput(stored)
+      val out = new Array[Byte](raw)
+      var n = 0
+      while (n < raw) {
+        val k = inf.inflate(out, n, raw - n)
+        require(k > 0,
+          if (inf.finished()) s"deflate chunk inflates to $n of $raw bytes"
+          else "truncated deflate chunk")
+        n += k
+      }
+      // the stream must end here: one more byte makes a long chunk
+      if (!inf.finished()) {
+        require(inf.inflate(new Array[Byte](1)) == 0,
+          s"deflate chunk inflates past $raw bytes")
+        require(inf.finished(), "truncated deflate chunk")
+      }
+      out
+    } finally inf.end()
   }
 
   /** Read a whole (small) numeric dataset as doubles, row-major. Used for

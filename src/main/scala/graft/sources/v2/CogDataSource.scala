@@ -1,8 +1,8 @@
 package graft.sources.v2
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.vectorized.ColumnarBatch
 
 import graft.sources.tiff.TiffFile
 
@@ -42,9 +42,7 @@ class CogDataSource extends GraftSource("cog") {
 
 class CogScan(path: String, required: StructType, nodata: Option[Int],
     level: Int, xLo: Double, xHi: Double, yLo: Double, yHi: Double)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
+    extends RasterScan(required) {
 
   /** `level` 0 = full resolution; 1.. = the COG's reduced-resolution
     * overview IFDs (planning still touches only IFD bytes).
@@ -82,42 +80,38 @@ case class CogInputPartition(path: String, info: TiffFile.TiffInfo,
     block: TiffFile.BlockInfo) extends InputPartition
 
 class CogReaderFactory(required: StructType, nodata: Option[Int])
-    extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+    extends CellBatchReaderFactory {
+  override def createColumnarReader(p: InputPartition): PartitionReader[ColumnarBatch] = {
     val part = p.asInstanceOf[CogInputPartition]
     val info = part.info
     val b = part.block
-    new PartitionReader[InternalRow] {
+    new CellBatchReader(required) {
       private val samples: Array[Int] =
         TiffFile.readBlock(part.path, info, b)
       // clip right/bottom padding of edge tiles
       private val wClip = math.min(b.width, info.width - b.colLo)
       private val hClip = math.min(b.height, info.height - b.rowLo)
       private val bad = nodata.getOrElse(Int.MinValue)
-      private val cells = new CellRow(required)
-      private val (xO, yO, vO) =
-        (cells.ordinal("x"), cells.ordinal("y"), cells.ordinal("value"))
-      // the current cell (row, col) of the clipped tile
+      private val (xV, yV, vV) = (column("x"), column("y"), column("value"))
+      // the next cell (row, col) of the clipped tile
       private var row = if (wClip > 0) 0 else hClip
-      private var col = -1
+      private var col = 0
 
-      override def next(): Boolean = {
-        do {
+      override protected def fill(): Int = {
+        var k = 0
+        while (k < CellBatch.Capacity && row < hClip) {
+          val s = samples(row * b.width + col)
+          if (s != bad) {
+            if (xV != null) xV.putDouble(k, info.originX + (b.colLo + col + 0.5) * info.scaleX)
+            if (yV != null) yV.putDouble(k, info.originY - (b.rowLo + row + 0.5) * info.scaleY)
+            if (vV != null) vV.putInt(k, s)
+            k += 1
+          }
           col += 1
           if (col == wClip) { col = 0; row += 1 }
-        } while (row < hClip && samples(row * b.width + col) == bad)
-        row < hClip
+        }
+        k
       }
-
-      override def get(): InternalRow = {
-        val out = cells.row
-        if (xO >= 0) out.setDouble(xO, info.originX + (b.colLo + col + 0.5) * info.scaleX)
-        if (yO >= 0) out.setDouble(yO, info.originY - (b.rowLo + row + 0.5) * info.scaleY)
-        if (vO >= 0) out.setInt(vO, samples(row * b.width + col))
-        out
-      }
-
-      override def close(): Unit = ()
     }
   }
 }

@@ -16,7 +16,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * on: the provider/table pair, the pushed-filter rule, the pushed-bounds
   * parser, the coordinate-to-index window and the band planner. What stays
   * in each source is its own schema, its own mapping from bounds to rows,
-  * tiles, chunks or messages, and its per-cell reader.
+  * tiles, chunks or messages, and its reader. The five raster sources
+  * (grid, netcdf, grib, cog, zarr) read through `CellBatch`: every scan is
+  * columnar, and each partition refills one reused batch of column
+  * vectors.
   *
   * The residual-filter rule: every pushed filter is returned to Spark as
   * residual, so Spark re-applies the exact predicate above the scan.

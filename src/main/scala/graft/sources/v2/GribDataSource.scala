@@ -1,10 +1,11 @@
 package graft.sources.v2
 
-import org.apache.spark.sql.catalyst.InternalRow
+import java.nio.charset.StandardCharsets
+
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.vectorized.ColumnarBatch
 
 import graft.sources.grib.Grib2File
 
@@ -89,9 +90,7 @@ class GribScanBuilder(paths: Seq[String], full: StructType)
 
 class GribScan(paths: Seq[String], required: StructType,
     wantType: Option[String], wantNumbers: Option[Set[Int]])
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
+    extends RasterScan(required) {
 
   @transient private lazy val planned: Seq[(String, Grib2File.MessageInfo)] =
     for {
@@ -114,40 +113,45 @@ class GribScan(paths: Seq[String], required: StructType,
 case class GribInputPartition(path: String, info: Grib2File.MessageInfo)
     extends InputPartition
 
-class GribReaderFactory(required: StructType) extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+class GribReaderFactory(required: StructType) extends CellBatchReaderFactory {
+  override def createColumnarReader(p: InputPartition): PartitionReader[ColumnarBatch] = {
     val part = p.asInstanceOf[GribInputPartition]
-    new PartitionReader[InternalRow] {
+    new CellBatchReader(required) {
       private val info = part.info
-      private val cells = new CellRow(required)
-      private val (latO, lonO, vO) = (cells.ordinal("latitude"),
-        cells.ordinal("longitude"), cells.ordinal("value"))
+      private val (latV, lonV, vV) =
+        (column("latitude"), column("longitude"), column("value"))
       private val values: Array[Double] =
-        if (vO >= 0) Grib2File.read(part.path, info).values else null
-      // the message's keys are the same for every cell: set them once
+        if (vV != null) Grib2File.read(part.path, info).values else null
+      private val nCells = info.ni * info.nj
+      // the message's keys are the same for every cell, and no batch
+      // writes their vectors: set every row once
       locally {
-        val (dtO, nO, sO) = (cells.ordinal("data_type"),
-          cells.ordinal("number"), cells.ordinal("step_hours"))
-        if (dtO >= 0) cells.row.update(dtO, UTF8String.fromString(info.dataType))
-        if (nO >= 0) cells.row.setInt(nO, info.number)
-        if (sO >= 0) cells.row.setInt(sO, info.stepHours)
+        val (dtV, nV, sV) =
+          (column("data_type"), column("number"), column("step_hours"))
+        if (dtV != null) {
+          val key = info.dataType.getBytes(StandardCharsets.UTF_8)
+          val at = dtV.arrayData().appendBytes(key.length, key, 0)
+          var k = 0
+          while (k < CellBatch.Capacity) { dtV.putArray(k, at, key.length); k += 1 }
+        }
+        if (nV != null) nV.putInts(0, CellBatch.Capacity, info.number)
+        if (sV != null) sV.putInts(0, CellBatch.Capacity, info.stepHours)
       }
-      private var k = -1
+      private var cell = 0 // the next grid point, row-major
 
-      override def next(): Boolean = {
-        k += 1
-        k < info.ni * info.nj
+      override protected def fill(): Int = {
+        val n = math.min(CellBatch.Capacity, nCells - cell)
+        var k = 0
+        if (latV != null || lonV != null) while (k < n) {
+          val c = cell + k
+          if (latV != null) latV.putDouble(k, info.la1 - (c / info.ni) * info.dj)
+          if (lonV != null) lonV.putDouble(k, info.lo1 + (c % info.ni) * info.di)
+          k += 1
+        }
+        if (vV != null) vV.putDoubles(0, n, values, cell)
+        cell += n
+        n
       }
-
-      override def get(): InternalRow = {
-        val out = cells.row
-        if (latO >= 0) out.setDouble(latO, info.la1 - (k / info.ni) * info.dj)
-        if (lonO >= 0) out.setDouble(lonO, info.lo1 + (k % info.ni) * info.di)
-        if (vO >= 0) out.setDouble(vO, values(k))
-        out
-      }
-
-      override def close(): Unit = ()
     }
   }
 }

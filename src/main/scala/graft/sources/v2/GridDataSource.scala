@@ -1,8 +1,8 @@
 package graft.sources.v2
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.vectorized.ColumnarBatch
 
 /** DataSource V2 implementing the dense-grid raster surface virtually
   * (SURVEY §7.3 stretch goal: custom DSv2 for raster sources): a regular
@@ -79,9 +79,7 @@ class GridScanBuilder(spec: GridSpec, full: StructType)
 }
 
 class GridScan(spec: GridSpec, required: StructType, bounds: GridBounds)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
+    extends RasterScan(required) {
   override def description(): String =
     s"graft-grid pruned=[i ${bounds.iLo}..${bounds.iHi}, j ${bounds.jLo}..${bounds.jHi}]"
 
@@ -99,27 +97,31 @@ case class GridInputPartition(latLo: Int, latHi: Int) extends InputPartition
 
 class GridReaderFactory(
     spec: GridSpec, required: StructType, jLo: Int, jHi: Int)
-    extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+    extends CellBatchReaderFactory {
+  override def createColumnarReader(p: InputPartition): PartitionReader[ColumnarBatch] = {
     val gp = p.asInstanceOf[GridInputPartition]
-    new PartitionReader[InternalRow] {
-      private val cells = new CellRow(required)
-      private val (latO, lonO) =
-        (cells.ordinal("latitude"), cells.ordinal("longitude"))
-      private var i = gp.latLo
-      private var j = jLo - 1
-      override def next(): Boolean = {
-        j += 1
-        if (j >= jHi) { j = jLo; i += 1 }
-        i < gp.latHi
+    new CellBatchReader(required) {
+      private val (latV, lonV) = (column("latitude"), column("longitude"))
+      // the next cell (i, j)
+      private var i = if (jHi > jLo) gp.latLo else gp.latHi
+      private var j = jLo
+
+      override protected def fill(): Int = {
+        var k = 0
+        // one run per latitude row, as far as the batch holds it
+        while (k < CellBatch.Capacity && i < gp.latHi) {
+          val run = math.min(jHi - j, CellBatch.Capacity - k)
+          if (latV != null) latV.putDoubles(k, run, spec.latMax - i * spec.res)
+          if (lonV != null) {
+            var q = 0
+            while (q < run) { lonV.putDouble(k + q, spec.lonMin + (j + q) * spec.res); q += 1 }
+          }
+          k += run
+          j += run
+          if (j == jHi) { j = jLo; i += 1 }
+        }
+        k
       }
-      override def get(): InternalRow = {
-        val out = cells.row
-        if (latO >= 0) out.setDouble(latO, spec.latMax - i * spec.res)
-        if (lonO >= 0) out.setDouble(lonO, spec.lonMin + j * spec.res)
-        out
-      }
-      override def close(): Unit = ()
     }
   }
 }

@@ -2,9 +2,10 @@ package graft.sources.v2
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.vectorized.ColumnarBatch
 
 /** DataSource V2 over real NetCDF-4/HDF5 raster files (graft.sources.nc),
   * unpivoting a 2-D `var(lat, lon)` grid to long-form rows
@@ -114,9 +115,7 @@ class NetcdfScanBuilder(spec: NetcdfSpec, full: StructType)
 
 class NetcdfScan(spec: NetcdfSpec, required: StructType,
     latLo: Double, latHi: Double)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
+    extends RasterScan(required) {
 
   // Planning-time metadata read: dims + (when pruning) the tiny lat
   // coordinate array — from EVERY distinct input file, verifying the
@@ -174,66 +173,78 @@ class NetcdfScan(spec: NetcdfSpec, required: StructType,
 case class NetcdfInputPartition(rowLo: Int, rowHi: Int) extends InputPartition
 
 class NetcdfReaderFactory(spec: NetcdfSpec, required: StructType)
-    extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+    extends CellBatchReaderFactory {
+  override def createColumnarReader(p: InputPartition): PartitionReader[ColumnarBatch] = {
     val band = p.asInstanceOf[NetcdfInputPartition]
-    new PartitionReader[InternalRow] {
-      private val cells = new CellRow(required)
-      private val (latO, lonO) =
-        (cells.ordinal("latitude"), cells.ordinal("longitude"))
+    new CellBatchReader(required) {
+      private val (latV, lonV) = (column("latitude"), column("longitude"))
       // one open handle per DISTINCT file (multi-var single-file scans
       // share one); column pruning skips whole variables AND whole files
       private val neededIdx: Seq[Int] =
-        spec.outCols.indices.filter(k => cells.ordinal(spec.outCols(k)) >= 0)
+        spec.outCols.indices.filter(k => column(spec.outCols(k)) != null)
       private val files =
         scala.collection.mutable.LinkedHashMap.empty[String, graft.sources.nc.NcFormat.Reader]
       private def fileFor(p0: String) =
         files.getOrElseUpdate(p0, graft.sources.nc.NcFormat.open(p0))
       private def coordFile = fileFor(spec.paths.head)
       private val lats: Array[Double] =
-        if (latO >= 0) coordFile.readDoubles(spec.latVar) else null
+        if (latV != null) coordFile.readDoubles(spec.latVar) else null
       private val lons: Array[Double] =
-        if (lonO >= 0) coordFile.readDoubles(spec.lonVar) else null
+        if (lonV != null) coordFile.readDoubles(spec.lonVar) else null
       private val nLon = coordFile.varDims(spec.varNames.head)(1).toInt
+      private val nCells = (band.rowHi - band.rowLo) * nLon
       // the same row band from every needed input, read once, aligned:
-      // value column v goes to ordinal vOrd(v) from vBuf(v), whose
-      // elements are floats when vF4(v), doubles otherwise
-      private val vOrd = neededIdx.map(k => cells.ordinal(spec.outCols(k))).toArray
-      private val (vBuf, vF4) = neededIdx.map { k =>
+      // value column v goes to vVec(v) from the raw band vBand(v)
+      private val vVec = neededIdx.map(k => column(spec.outCols(k))).toArray
+      private val vBand = neededIdx.map { k =>
         val f = fileFor(spec.paths(k))
-        val buf = ByteBuffer.wrap(
-          f.readRowBand(spec.varNames(k), band.rowLo, band.rowHi))
-          .order(if (f.littleEndian) ByteOrder.LITTLE_ENDIAN
-            else ByteOrder.BIG_ENDIAN)
-        (buf, f.varElemSize(spec.varNames(k)) == 4)
-      }.toArray.unzip
+        new NetcdfBand(f.readRowBand(spec.varNames(k), band.rowLo, band.rowHi),
+          f.littleEndian, f.varElemSize(spec.varNames(k)) == 4)
+      }.toArray
+      private var cell = 0 // (i - rowLo) * nLon + j of the next cell
 
-      private var i = band.rowLo
-      private var j = -1
-      private var cell = -1 // (i - rowLo) * nLon + j
-
-      override def next(): Boolean = {
-        j += 1
-        if (j >= nLon) { j = 0; i += 1 }
-        cell += 1
-        i < band.rowHi
-      }
-
-      override def get(): InternalRow = {
-        val out = cells.row
-        if (latO >= 0) out.setDouble(latO, lats(i))
-        if (lonO >= 0) out.setDouble(lonO, lons(j))
-        var v = 0
-        while (v < vOrd.length) {
-          out.setFloat(vOrd(v),
-            if (vF4(v)) vBuf(v).getFloat(cell * 4)
-            else vBuf(v).getDouble(cell * 8).toFloat)
-          v += 1
+      override protected def fill(): Int = {
+        val n = math.min(CellBatch.Capacity, nCells - cell)
+        var k = 0
+        // coordinates in runs of one latitude row
+        while (k < n) {
+          val c = cell + k
+          val j = c % nLon
+          val run = math.min(nLon - j, n - k)
+          if (latV != null) latV.putDoubles(k, run, lats(band.rowLo + c / nLon))
+          if (lonV != null) lonV.putDoubles(k, run, lons, j)
+          k += run
         }
-        out
+        var v = 0
+        while (v < vVec.length) { vBand(v).copy(vVec(v), cell, n); v += 1 }
+        cell += n
+        n
       }
 
-      override def close(): Unit = files.values.foreach(_.close())
+      override def close(): Unit = {
+        files.values.foreach(_.close())
+        super.close()
+      }
     }
   }
+}
+
+/** One variable's raw row band: elements are floats when `f4`, doubles
+  * otherwise, in the file's byte order; read out as float cells.
+  */
+private final class NetcdfBand(bytes: Array[Byte], littleEndian: Boolean, f4: Boolean) {
+  private val buf = ByteBuffer.wrap(bytes)
+    .order(if (littleEndian) ByteOrder.LITTLE_ENDIAN else ByteOrder.BIG_ENDIAN)
+
+  /** Cells `[cell, cell + n)` into rows `[0, n)` of `out`. */
+  def copy(out: OnHeapColumnVector, cell: Int, n: Int): Unit =
+    if (f4 && littleEndian) out.putFloatsLittleEndian(0, n, bytes, cell * 4)
+    else {
+      var k = 0
+      while (k < n) {
+        out.putFloat(k,
+          if (f4) buf.getFloat((cell + k) * 4) else buf.getDouble((cell + k) * 8).toFloat)
+        k += 1
+      }
+    }
 }

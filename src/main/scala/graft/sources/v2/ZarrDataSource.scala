@@ -1,11 +1,11 @@
 package graft.sources.v2
 
-import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
 import org.apache.spark.sql.types._
-import org.apache.spark.util.SerializableConfiguration
+import org.apache.spark.sql.vectorized.ColumnarBatch
 
+import graft.sources.SeekableInput
 import graft.sources.zarr.ZarrStore
 
 /** DataSource V2 over Zarr stores (graft.sources.zarr, v2 and v3),
@@ -24,9 +24,20 @@ import graft.sources.zarr.ZarrStore
   * dropped at the scan (the converter contract's NaN→absent rule).
   */
 class ZarrDataSource extends GraftSource("zarr") {
+  // Spark makes one provider per load() and calls `schema`, then `table`,
+  // with equal options: both get one spec, so the array metadata is read
+  // once per load
+  private var lastSpec: ZarrSpec = _
+
+  private def specOf(o: GraftOptions): ZarrSpec = {
+    val s = ZarrSpec(o)
+    if (s != lastSpec) lastSpec = s
+    lastSpec
+  }
+
   /** 3-D variables carry the leading coordinate as `t`. */
   override protected def schema(o: GraftOptions): StructType = {
-    val spec = ZarrSpec(o)
+    val spec = specOf(o)
     val latLon = Seq(
       StructField("latitude", DoubleType, nullable = false),
       StructField("longitude", DoubleType, nullable = false),
@@ -38,7 +49,7 @@ class ZarrDataSource extends GraftSource("zarr") {
     }
   }
   override protected def table(o: GraftOptions, schema: StructType): GraftTable = {
-    val spec = ZarrSpec(o)
+    val spec = specOf(o)
     new GraftTable(s"graft_zarr(${spec.store}#${spec.varName})", schema)(
       new BoundsScanBuilder(schema, "latitude", "t") {
         override def build(): Scan = {
@@ -71,9 +82,7 @@ object ZarrSpec {
 
 class ZarrScan(spec: ZarrSpec, required: StructType,
     latLo: Double, latHi: Double, tLo: Double, tHi: Double)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
+    extends RasterScan(required) {
 
   override def description(): String = s"graft-zarr ${spec.store}#${spec.varName}"
 
@@ -110,33 +119,33 @@ class ZarrScan(spec: ZarrSpec, required: StructType,
       : InputPartition).toArray
   }
 
-  /** The Hadoop conf goes to the executors once, as a broadcast, not
-    * inside every task.
-    */
   override def createReaderFactory(): PartitionReaderFactory =
-    new ZarrReaderFactory(spec, required,
-      sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration)))
+    new ZarrReaderFactory(spec, required)
 }
 
 case class ZarrInputPartition(chunkIdx: Seq[Int], meta: ZarrStore.ArrayMeta)
     extends InputPartition
 
-class ZarrReaderFactory(spec: ZarrSpec, required: StructType,
-    conf: Broadcast[SerializableConfiguration]) extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+/** Opens the store through the executor's own Hadoop conf
+  * (`SeekableInput.defaultConf()`, built once per executor from its
+  * SparkConf), as the other raster readers do: a conf shipped with the
+  * scan costs a broadcast per scan, or a deserialization per task.
+  */
+class ZarrReaderFactory(spec: ZarrSpec, required: StructType)
+    extends CellBatchReaderFactory {
+  override def createColumnarReader(p: InputPartition): PartitionReader[ColumnarBatch] = {
     val part = p.asInstanceOf[ZarrInputPartition]
     val meta = part.meta
-    new PartitionReader[InternalRow] {
-      private val hconf = conf.value.value
-      private val cells = new CellRow(required)
-      private val (tO, latO, lonO, vO) = (cells.ordinal("t"),
-        cells.ordinal("latitude"), cells.ordinal("longitude"), cells.ordinal("value"))
+    new CellBatchReader(required) {
+      private val hconf = SeekableInput.defaultConf()
+      private val (tV, latV, lonV, vV) = (column("t"),
+        column("latitude"), column("longitude"), column("value"))
       // a coordinate vector is read only when its column is required
-      private def coord(o: Int, name: String): Array[Double] =
-        if (o >= 0) ZarrStore.readVector(hconf, s"${spec.store}/$name") else null
-      private val ts = coord(tO, spec.tVar)
-      private val lats = coord(latO, spec.latVar)
-      private val lons = coord(lonO, spec.lonVar)
+      private def coord(v: OnHeapColumnVector, name: String): Array[Double] =
+        if (v != null) ZarrStore.readVector(hconf, s"${spec.store}/$name") else null
+      private val ts = coord(tV, spec.tVar)
+      private val lats = coord(latV, spec.latVar)
+      private val lons = coord(lonV, spec.lonVar)
       private val is3 = meta.shape.length == 3
       private val latDim = if (is3) 1 else 0
       private val chunk = ZarrStore.readChunk(hconf,
@@ -152,35 +161,32 @@ class ZarrReaderFactory(spec: ZarrSpec, required: StructType,
         meta.shape(latDim + 1) - colLo)
       private val (chunkRows, chunkCols) =
         (meta.chunks(latDim), meta.chunks(latDim + 1))
-      // the current cell (t, r, c) of the clipped chunk, and its flat
-      // offset in the chunk's own (possibly larger-than-clip) extents
+      private val keepNaN = spec.keepNaN
+      // the next cell (t, r, c) of the clipped chunk; its flat offset is
+      // taken in the chunk's own (possibly larger-than-clip) extents
       private var t = if (hClip > 0 && wClip > 0) 0 else tClip
       private var r = 0
-      private var c = -1
-      private var off = -1
+      private var c = 0
 
-      override def next(): Boolean = {
-        do {
+      override protected def fill(): Int = {
+        var k = 0
+        while (k < CellBatch.Capacity && t < tClip) {
+          val v = chunk((t * chunkRows + r) * chunkCols + c)
+          if (keepNaN || !v.isNaN) {
+            if (tV != null) tV.putDouble(k, ts(tLo + t))
+            if (latV != null) latV.putDouble(k, lats(rowLo + r))
+            if (lonV != null) lonV.putDouble(k, lons(colLo + c))
+            if (vV != null) vV.putDouble(k, v)
+            k += 1
+          }
           c += 1
           if (c == wClip) {
             c = 0; r += 1
             if (r == hClip) { r = 0; t += 1 }
           }
-          off = (t * chunkRows + r) * chunkCols + c
-        } while (t < tClip && !spec.keepNaN && chunk(off).isNaN)
-        t < tClip
+        }
+        k
       }
-
-      override def get(): InternalRow = {
-        val out = cells.row
-        if (tO >= 0) out.setDouble(tO, ts(tLo + t))
-        if (latO >= 0) out.setDouble(latO, lats(rowLo + r))
-        if (lonO >= 0) out.setDouble(lonO, lons(colLo + c))
-        if (vO >= 0) out.setDouble(vO, chunk(off))
-        out
-      }
-
-      override def close(): Unit = ()
     }
   }
 }

@@ -10,11 +10,14 @@ import graft.sources.nc.Hdf5Writer
 import graft.sources.tiff.TiffWriter
 import graft.sources.zarr.ZarrStore
 
-/** The raster readers hand out one reused row per cell. These specs
-  * read every column of a small written grid along three paths that
-  * hold on to rows differently — whole-stage codegen off, `cache()`,
-  * and `df.rdd` — and check that no row aliases another: the rows are
-  * exactly the expected (coordinates, value) set, and all distinct.
+/** The raster readers refill one reused columnar batch per partition.
+  * These specs read every column of a written grid along three paths
+  * that hold on to rows differently — whole-stage codegen off,
+  * `cache()`, and `df.rdd` — and check that no row aliases another: the
+  * rows are exactly the expected (coordinates, value) set, and all
+  * distinct. The small grids fit one batch; the large ones put more
+  * than one 4096-cell batch in every partition, split rows across
+  * batches, and put holes on both sides of a batch boundary.
   */
 class RasterRowReuseSpec extends SparkSpec {
   import spark.implicits._
@@ -37,7 +40,11 @@ class RasterRowReuseSpec extends SparkSpec {
       },
       "rdd" -> { () => load().rdd.collect() })
     for ((way, read) <- ways) {
-      val rows = read().map(_.toSeq).toSeq
+      // NaN is no value equal to itself: compare its cells by name
+      val rows = read().map(_.toSeq.map {
+        case d: Double if d.isNaN => "NaN"
+        case x => x
+      }).toSeq
       assert(rows.distinct.size == rows.size,
         s"$way: ${rows.size - rows.distinct.size} duplicated rows")
       assert(rows.size == expected.size, s"$way: ${rows.size} of ${expected.size} rows")
@@ -129,6 +136,97 @@ class RasterRowReuseSpec extends SparkSpec {
         .option("withStep", "true").load(),
       cells.map { case (s, m, la, lo, v) =>
         Seq(if (m == 0) "cf" else "pf", m, s, la, lo, v)
+      }.toSet)
+  }
+
+  private val bigLats = Array.tabulate(90)(i => 60.0 - i * 0.25)
+  private val bigLons = Array.tabulate(130)(j => 5.0 + j * 0.25)
+
+  /** Holes of a tile or chunk of `cols` columns, by its local cell
+    * index: 4090 cells, six holes, six cells (the first batch ends
+    * there), eight holes, and past 4200 a scattered seventh.
+    */
+  private def hole(cols: Int)(r: Int, c: Int): Boolean = {
+    val l = r * cols + c
+    (l >= 4090 && l < 4096) || (l >= 4102 && l < 4110) || (l > 4200 && (r + c) % 7 == 0)
+  }
+
+  test("graft-netcdf: bands of several batches, split mid-row") {
+    def f(k: Int)(i: Int, j: Int): Float = ((i * 13 + j * 5 + k * 7) % 41) * 0.25f
+    val paths = (0 until 2).map { k =>
+      val cells = for (i <- bigLats.indices; j <- bigLons.indices)
+        yield (bigLats(i), bigLons(j), f(k)(i, j))
+      val out = tmp(s"big$k.nc")
+      Hdf5Writer.writeGrid(cells.toDF("latitude", "longitude", "value"), out, "v",
+        "latitude", "longitude", "value", bigLats, bigLons, chunkRows = 16)
+      out
+    }
+    // two bands of 45 rows: 5850 cells each
+    val grid = for (i <- bigLats.indices; j <- bigLons.indices) yield (i, j)
+    assertReadsBack(
+      () => spark.read.format("graft-netcdf").option("path", paths(0))
+        .option("var", "v").option("partitions", "2").load(),
+      grid.map { case (i, j) => Seq(bigLats(i), bigLons(j), f(0)(i, j)) }.toSet)
+    assertReadsBack(
+      () => spark.read.format("graft-netcdf").option("paths", paths.mkString(","))
+        .option("vars", "v").option("cols", "a,b").option("partitions", "2").load(),
+      grid.map { case (i, j) => Seq(bigLats(i), bigLons(j), f(0)(i, j), f(1)(i, j)) }.toSet)
+  }
+
+  test("graft-cog: 128x128 tiles with nodata holes across batch boundaries") {
+    val (w, h, ox, oy, sx, sy) = (150, 140, 500000.0, 7000000.0, 30.0, 30.0)
+    val holeAt = hole(128) _
+    val px = for {
+      r <- 0 until h; c <- 0 until w if !holeAt(r % 128, c % 128)
+    } yield (ox + (c + 0.5) * sx, oy - (r + 0.5) * sy, (c * 13 + r * 7) % 997 + 1)
+    val out = tmp("big.tif")
+    TiffWriter.writeGrid(px.toDF("x", "y", "value"), out, "x", "y", "value",
+      ox, oy, sx, sy, w, h, tileW = 128, tileH = 128, bits = 16)
+    assertReadsBack(
+      () => spark.read.format("graft-cog").option("path", out)
+        .option("nodata", "0").load(),
+      px.map { case (x, y, v) => Seq(x, y, v) }.toSet)
+  }
+
+  test("graft-zarr: 64x96 chunks with NaN holes across batch boundaries") {
+    val holeAt = hole(96) _
+    val cells = for {
+      i <- bigLats.indices; j <- bigLons.indices if !holeAt(i % 64, j % 96)
+    } yield (bigLats(i), bigLons(j), ((i * 11 + j * 3) % 89).toDouble)
+    val store = tmp("bigz")
+    ZarrStore.writeGrid(cells.toDF("latitude", "longitude", "value"), store, "v",
+      "latitude", "longitude", "value", bigLats, bigLons, chunkRows = 64, chunkCols = 96)
+    assertReadsBack(
+      () => spark.read.format("graft-zarr").option("path", store)
+        .option("var", "v").load(),
+      cells.map { case (la, lo, v) => Seq(la, lo, v) }.toSet)
+  }
+
+  test("graft-grid: bands of several batches, split mid-row") {
+    assertReadsBack(
+      () => spark.read.format("graft-grid").option("latMax", 60.0).option("lonMin", 5.0)
+        .option("res", 0.25).option("nLat", bigLats.length).option("nLon", bigLons.length)
+        .option("partitions", "2").load(),
+      (for (i <- bigLats.indices; j <- bigLons.indices)
+        yield Seq(60.0 - i * 0.25, 5.0 + j * 0.25)).toSet)
+  }
+
+  test("graft-grib: messages of several batches with bitmap holes at the boundary") {
+    val lats = bigLats.take(40) // 40 x 130 = 5200 points per message
+    val holeAt = hole(bigLons.length) _
+    val cells = for {
+      s <- Seq(24, 48); m <- 0 until 2; i <- lats.indices; j <- bigLons.indices
+    } yield (s, m, lats(i), bigLons(j),
+      if (holeAt(i, j)) Double.NaN else ((s * 5 + m * 31 + i * 7 + j * 3) % 997).toDouble)
+    val out = tmp("big.grib2")
+    Grib2Writer.writeEnsemble(
+      cells.filterNot(_._5.isNaN).toDF("step", "number", "latitude", "longitude", "value"),
+      out, lats, bigLons, stepCol = Some("step"))
+    assertReadsBack(
+      () => spark.read.format("graft-grib").option("path", out)
+        .option("withStep", "true").load(),
+      cells.map { case (s, m, la, lo, v) =>
+        Seq(if (m == 0) "cf" else "pf", m, s, la, lo, if (v.isNaN) "NaN" else v)
       }.toSet)
   }
 }
