@@ -93,75 +93,13 @@ object PlanHash {
       .replaceAll("size=[0-9.]+ *[KMGT]?i?B", "size=x")
       .replaceAll(", *\\d+ bytes", ", x bytes")
 
-  /** Pre-checkpoint lineage digests, keyed by the checkpointed RDD's
-    * id (r19 verdict item 3: a checkpoint-eager query's sparkPlan is
-    * only its budget tail — q214's hash was indistinguishable from
-    * q147's because the corpus-construction difference lives entirely
-    * above the localCheckpoint). [[localCheckpointTracked]] records
-    * the canonical digest of the plan it truncates; [[of]] folds those
-    * digests back in wherever the hashed plan scans a tracked RDD.
-    */
-  /** Keyed by (applicationId, rdd id): RDD ids restart from 0 with a
-    * new SparkContext in the same JVM, so a bare-id key could fold a
-    * STALE digest from a previous context into an unrelated plan's
-    * hash after a session restart (r20 review find).
-    */
-  private val ckDigests =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def ckKey(rdd: org.apache.spark.rdd.RDD[_]): String =
-    rdd.sparkContext.applicationId + ":" + rdd.id
-
-  /** `localCheckpoint(eager=true)` that keeps the truncated lineage
-    * visible to the plan fingerprint. The recorded digest hashes the
-    * ANALYZED plan, not the physical one: the eager checkpoint
-    * EXECUTES upstream stages whose operators register internal caches
-    * (minhashDedup's shingle tables), so a REBUILD of the same query
-    * in the same JVM physical-plans with InMemoryRelation
-    * substitutions — the analyzed plan is pre-cache-substitution and
-    * rebuild-stable (PlanHashSpec pins it). Nested tracked checkpoints
-    * resolve recursively through the analyzed plan's LogicalRDD
-    * leaves.
-    */
-  def localCheckpointTracked(df: DataFrame): DataFrame = {
-    val analyzed = df.queryExecution.analyzed
-    val canon = canonicalize(analyzed.toString)
-    val nested = analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        Option(ckDigests.get(ckKey(lr.rdd)))
-    }.flatten
-    val payload =
-      if (nested.isEmpty) canon
-      else canon + nested.mkString("\nck:[", ",", "]")
-    val md = MessageDigest.getInstance("MD5")
-    val digest = md.digest(payload.getBytes("UTF-8"))
-      .map(b => f"$b%02x").mkString.take(16)
-    val out = df.localCheckpoint(eager = true)
-    out.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        ckDigests.put(ckKey(lr.rdd), digest)
-      case _ =>
-    }
-    out
-  }
-
-  /** Hex md5 (first 16 chars) of the canonicalized sparkPlan, plus —
-    * ONLY when the plan scans tracked checkpoint RDDs — the recorded
-    * pre-checkpoint digests in plan traversal order (hashes of plans
-    * with no tracked scans are unchanged from their historical values).
+  /** Hex md5 (first 16 chars) of the canonicalized sparkPlan. A cached
+    * intermediate prints its whole lineage inside its InMemoryRelation,
+    * so two plans that differ only above a `.cache()` hash apart.
     */
   def of(df: DataFrame): String = {
-    val plan = df.queryExecution.sparkPlan
-    val canon = canonicalize(plan.toString)
-    val nested = plan.collect {
-      case r: org.apache.spark.sql.execution.RDDScanExec =>
-        Option(ckDigests.get(ckKey(r.rdd)))
-    }.flatten
-    val payload =
-      if (nested.isEmpty) canon
-      else canon + nested.mkString("\nck:[", ",", "]")
-    val md = MessageDigest.getInstance("MD5")
-    md.digest(payload.getBytes("UTF-8"))
+    val canon = canonicalize(df.queryExecution.sparkPlan.toString)
+    MessageDigest.getInstance("MD5").digest(canon.getBytes("UTF-8"))
       .map(b => f"$b%02x").mkString.take(16)
   }
 }

@@ -458,7 +458,7 @@ object CorpusStats {
       // explode_OUTER + isNotNull: plain explode lets
       // InferFiltersFromGenerate push a size(shingles-expr)>0 guard
       // below the projection, re-tokenizing per lambda element (the
-      // Dedup.wordGramKeys lesson). Checkpointed: the bucket stream is
+      // Dedup.wordGramKeys lesson). Cached: the bucket stream is
       // consumed THREE times (raw, target, scoring join).
       val sh = docs.select(col("doc_id"), col("source"),
         Dedup.shingles(col("text"), 2).as("shs"))
@@ -467,7 +467,7 @@ object CorpusStats {
         .filter(col("g").isNotNull)
         .select(col("doc_id"), col("source"),
           (Dedup.md5Hash64(col("g")) % 4096).as("bkt"))
-        .localCheckpoint(true)
+        .cache()
       val raw = sh.groupBy("bkt").agg(count(lit(1)).as("rc"))
       val tgt = sh.filter(col("source") === "src0")
         .groupBy("bkt").agg(count(lit(1)).as("tc"))
@@ -510,7 +510,7 @@ object CorpusStats {
     "q191_source_containment",
     (s, dir) => {
       val docs = t(s, dir)("documents")
-      // explode_OUTER + isNotNull + checkpoint: same InferFilters
+      // explode_OUTER + isNotNull + cache: same InferFilters
       // re-inlining fix as q190; the distinct (source, shingle) stream
       // is consumed three times (sizes + both self-join sides)
       val sh = docs.select(col("source"),
@@ -518,7 +518,7 @@ object CorpusStats {
         .select(col("source"), explode_outer(col("shs")).as("sh"))
         .filter(col("sh").isNotNull)
         .distinct()
-        .localCheckpoint(true)
+        .cache()
       val sizes = sh.groupBy("source").agg(count(lit(1)).as("sz"))
       val inter = sh.as("x").join(sh.as("y"), Seq("sh"))
         .filter(col("x.source") =!= col("y.source"))

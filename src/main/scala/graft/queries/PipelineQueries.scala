@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Sql, Tables}
@@ -385,7 +385,7 @@ object PipelineQueries {
     * equivalently non-degenerate predicate.
     */
   def curationPipeline(docs: DataFrame,
-      evalPred: org.apache.spark.sql.Column): DataFrame = {
+      evalPred: Column): DataFrame = {
       import org.apache.spark.sql.expressions.Window
       // 1: quality gate (q39's exact semantics; one tokenizer pass via
       // the shared [[qualityGate]] barrier shape)
@@ -401,17 +401,12 @@ object PipelineQueries {
           Window.partitionBy(md5(col("text"))).orderBy(col("doc_id"))))
         .filter(col("rn") === 1).drop("rn")
         .cache()
-      // 3: near-dup dedup (banded MinHash LSH). Materialized once:
-      // the survivor set feeds BOTH the decontamination gram scan and
-      // the final left-anti join — without the checkpoint the whole
-      // quality→exact→LSH prefix re-executes per consumer (measured
-      // 26.4 → 12.1 s at sf0.1; localCheckpoint storage is freed with
-      // the frame, the q162 cache-leak lesson)
-      // tracked checkpoint: keeps the truncated lineage visible to the
-      // bench plan fingerprint (r19 verdict item 3 — q214's hash was
-      // q147's because checkpoint-eager queries hashed only their tail)
-      val near = graft.core.PlanHash.localCheckpointTracked(
-        Dedup.minhashDedup(exact, "doc_id", "text", threshold = 0.8))
+      // 3: near-dup dedup (banded MinHash LSH). Cached: the survivor
+      // set feeds BOTH the decontamination gram scan and the final
+      // left-anti join — without it the whole quality→exact→LSH prefix
+      // re-executes per consumer (measured 26.4 → 12.1 s at sf0.1)
+      val near = Dedup.minhashDedup(exact, "doc_id", "text", threshold = 0.8)
+        .cache()
       // 4: decontamination — eval split = doc_id % 199 == 0 of the RAW
       // corpus (an eval set is external; it never went through the gate)
       def grams(df: org.apache.spark.sql.DataFrame) =
@@ -422,10 +417,10 @@ object PipelineQueries {
       val contaminated = grams(trainSide).join(evalGrams, "gk")
         .select("doc_id").distinct()
       // consumed by PrefixSum staging AND the total-tokens aggregate
-      val clean = graft.core.PlanHash.localCheckpointTracked(
-        trainSide.join(contaminated, Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), col("lang"), col("quality"),
-            col("n_tokens").cast("long").as("n_tokens")))
+      val clean = trainSide.join(contaminated, Seq("doc_id"), "left_anti")
+        .select(col("doc_id"), col("lang"), col("quality"),
+          col("n_tokens").cast("long").as("n_tokens"))
+        .cache()
       // 5: token budget — best-quality docs until 50% of surviving tokens
       val withCum = graft.operators.PrefixSum.runningSum(
         clean, Seq(col("quality").desc, col("doc_id").asc),
@@ -543,29 +538,20 @@ object PipelineQueries {
     * 30% of the gram space ⇒ every train doc contaminated ⇒ a ~1-row
     * manifest — a vacuous gate). This split targets a CONSTANT ~10
     * eval docs at any corpus size: doc joins the eval set iff
-    * md5Hash64(doc_id·'_ev') % 2^20 < ceil(10·2^20 / n) — exact
-    * integers, one driver count (the q162 single-action pattern), the
-    * threshold replayed in SQL as a scalar-subquery expression.
+    * md5Hash64(doc_id·'_ev') % 2^20 < ceil(10·2^20 / n). For an
+    * integer x, x < ceil(A / n) holds exactly when x·n < A, so the plan
+    * tests x·n < 10·2^20 with n a scalar subquery over the documents
+    * table (the q162 `bloom.scalar()` pattern): no build-time job, no
+    * division, and x < 2^20 keeps the product a long for n < 2^43.
     */
-  /** documents row count per sf dir, memoized per JVM — the count
-    * feeds only the eval-split threshold and the table is immutable
-    * within a run, so the split-family queries pay the driver action
-    * once instead of once per invocation (bench passes 2-3 hit the
-    * memo).
-    */
-  private val nDocsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  def nDocuments(s: SparkSession, dir: String): Long =
-    nDocsMemo.computeIfAbsent(dir,
-      _ => java.lang.Long.valueOf(
-        Tables.load(s, dir, "documents").count())).longValue()
-
-  def hashEvalPred(n: Long): org.apache.spark.sql.Column = {
-    val thr = (10L * 1048576L + n - 1L) / n
+  def hashEvalPred(n: Column): Column =
     pmod(graft.operators.Dedup.md5Hash64(
       concat(col("doc_id").cast("string"), lit("_ev"))),
-      lit(1048576L)) < thr
-  }
+      lit(1048576L)) * n < 10L * 1048576L
+
+  /** Row count of the documents table as a scalar-subquery column. */
+  def nDocuments(s: SparkSession, dir: String): Column =
+    Tables.load(s, dir, "documents").select(count(lit(1))).scalar()
 
   /** SQL twin of [[hashEvalPred]] with n as a scalar subquery over the
     * raw documents table (the docs relation every curation corpus here
@@ -836,11 +822,10 @@ object PipelineQueries {
         .filter(col("rn") === 1).drop("rn")
         .cache()
       // survivor set feeds the cut scan, the gram scan AND the final
-      // joins — materialize once (the q147 checkpoint lesson); tracked
-      // so the plan fingerprint keeps the truncated lineage
-      val near = graft.core.PlanHash.localCheckpointTracked(
-        Dedup.minhashDedup(exact, "doc_id", "text", threshold = 0.8)
-          .select(col("doc_id"), col("lang"), col("text")))
+      // joins — cache it (the q147 lesson)
+      val near = Dedup.minhashDedup(exact, "doc_id", "text", threshold = 0.8)
+        .select(col("doc_id"), col("lang"), col("text"))
+        .cache()
       val cutStats = graft.operators.SubstrDedup.cutStats(near, "doc_id", "text")
         .select(col("doc_id"), col("n_chars_cut"))
       val evalGrams = Dedup.wordGramKeys(

@@ -555,62 +555,63 @@ object VectorOps {
     * both Lloyd iterations and the in-cluster pair scan in SQL over the
     * same parquet with the same integer arithmetic.
     */
+  def semDedup(base: DataFrame): DataFrame = {
+    val dim = 64
+    val planted = base.filter(col("vec_id") % 10 === 0).select(
+      (col("vec_id") + 1000000L).as("vec_id"),
+      // ×2 is exponent-exact in float: a planted copy at cosine 1
+      transform(col("embedding"), x => x * lit(2.0f)).as("embedding"),
+      col("label"))
+    // fused unboxed integer dot (functions/DotLong) — identical exact
+    // sums to the aggregate(zip_with) form, minus the boxing (the
+    // MinhashSignature lesson; DotLongSpec pins the equality)
+    val longDot = (a: Column, b: Column) => graft.functions.DotLong(a, b)
+    val e = base.select("vec_id", "embedding", "label")
+      .unionByName(planted)
+      .select(col("vec_id"), col("label"),
+        transform(col("embedding"), x =>
+          (round((x.cast("double") + lit(2.0)) * lit(10000.0), 0)
+            - lit(20000.0)).cast("long")).as("vq"))
+      .withColumn("vv", longDot(col("vq"), col("vq")))
+      .cache()
+    def centroids(assigned: DataFrame, clCol: String): DataFrame = {
+      val sums = (0 until dim).map(i =>
+        sum(element_at(col("vq"), i + 1)).as(s"_c$i"))
+      assigned.groupBy(col(clCol).as("cl"))
+        .agg(sums.head, sums.tail: _*)
+        .select(col("cl"),
+          array((0 until dim).map(i => col(s"_c$i")): _*).as("centroid"))
+        .withColumn("cc", longDot(col("centroid"), col("centroid")))
+    }
+    def assign(cent: DataFrame): DataFrame = {
+      val w = Window.partitionBy("vec_id")
+        .orderBy(col("cos_sim").desc, col("cl").asc)
+      e.crossJoin(broadcast(cent))
+        .select(col("vec_id"), col("vq"), col("vv"), col("cl"),
+          (longDot(col("vq"), col("centroid")).cast("double")
+            / (sqrt(col("vv").cast("double")) * sqrt(col("cc").cast("double"))))
+            .as("cos_sim"))
+        .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+        .select("vec_id", "vq", "vv", "cl")
+    }
+    val a1 = assign(centroids(e, "label"))
+    // consumed three times (both pair-join sides + the final join);
+    // without the cache both Lloyd rounds re-execute per consumer
+    val a2 = assign(centroids(a1, "cl")).cache()
+    val dups = a2.as("a").join(a2.as("b"),
+        col("a.cl") === col("b.cl") && col("a.vec_id") < col("b.vec_id"))
+      .filter(longDot(col("a.vq"), col("b.vq")).cast("double")
+        / (sqrt(col("a.vv").cast("double")) * sqrt(col("b.vv").cast("double")))
+        >= 0.95)
+      .select(col("b.vec_id").as("vec_id")).distinct()
+    a2.join(dups.withColumn("is_dup", lit(1L)), Seq("vec_id"), "left")
+      .select(col("vec_id"), col("cl"),
+        coalesce(col("is_dup"), lit(0L)).as("is_dup"))
+  }
+
   lazy val q144SemDedup = Q(
     "q144_semdedup",
-    (s, dir) => {
-      val dim = 64
-      val base = t(s, dir)("embeddings")
-      val planted = base.filter(col("vec_id") % 10 === 0).select(
-        (col("vec_id") + 1000000L).as("vec_id"),
-        // ×2 is exponent-exact in float: a planted copy at cosine 1
-        transform(col("embedding"), x => x * lit(2.0f)).as("embedding"),
-        col("label"))
-      // fused unboxed integer dot (functions/DotLong) — identical exact
-      // sums to the aggregate(zip_with) form, minus the boxing (the
-      // MinhashSignature lesson; DotLongSpec pins the equality)
-      val longDot = (a: Column, b: Column) => graft.functions.DotLong(a, b)
-      val e = base.select("vec_id", "embedding", "label")
-        .unionByName(planted)
-        .select(col("vec_id"), col("label"),
-          transform(col("embedding"), x =>
-            (round((x.cast("double") + lit(2.0)) * lit(10000.0), 0)
-              - lit(20000.0)).cast("long")).as("vq"))
-        .withColumn("vv", longDot(col("vq"), col("vq")))
-        .cache()
-      def centroids(assigned: DataFrame, clCol: String): DataFrame = {
-        val sums = (0 until dim).map(i =>
-          sum(element_at(col("vq"), i + 1)).as(s"_c$i"))
-        assigned.groupBy(col(clCol).as("cl"))
-          .agg(sums.head, sums.tail: _*)
-          .select(col("cl"),
-            array((0 until dim).map(i => col(s"_c$i")): _*).as("centroid"))
-          .withColumn("cc", longDot(col("centroid"), col("centroid")))
-      }
-      def assign(cent: DataFrame): DataFrame = {
-        val w = Window.partitionBy("vec_id")
-          .orderBy(col("cos_sim").desc, col("cl").asc)
-        e.crossJoin(broadcast(cent))
-          .select(col("vec_id"), col("vq"), col("vv"), col("cl"),
-            (longDot(col("vq"), col("centroid")).cast("double")
-              / (sqrt(col("vv").cast("double")) * sqrt(col("cc").cast("double"))))
-              .as("cos_sim"))
-          .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-          .select("vec_id", "vq", "vv", "cl")
-      }
-      val a1 = assign(centroids(e, "label"))
-      // consumed three times (both pair-join sides + the final join);
-      // without the checkpoint both Lloyd rounds re-execute per consumer
-      val a2 = assign(centroids(a1, "cl")).localCheckpoint(true)
-      val dups = a2.as("a").join(a2.as("b"),
-          col("a.cl") === col("b.cl") && col("a.vec_id") < col("b.vec_id"))
-        .filter(longDot(col("a.vq"), col("b.vq")).cast("double")
-          / (sqrt(col("a.vv").cast("double")) * sqrt(col("b.vv").cast("double")))
-          >= 0.95)
-        .select(col("b.vec_id").as("vec_id")).distinct()
-      a2.join(dups.withColumn("is_dup", lit(1L)), Seq("vec_id"), "left")
-        .select(col("vec_id"), col("cl"),
-          coalesce(col("is_dup"), lit(0L)).as("is_dup"))
-    },
+    (s, dir) => semDedup(t(s, dir)("embeddings")),
     Some("""
       WITH aug AS (
         SELECT vec_id, embedding, label FROM embeddings

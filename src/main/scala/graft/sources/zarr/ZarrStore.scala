@@ -49,13 +49,7 @@ object ZarrStore {
   private def readFile(conf: Configuration, path: String): Array[Byte] = {
     val f = fs(conf, path)
     val in = f.open(new Path(path))
-    try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](64 * 1024)
-      var n = in.read(buf)
-      while (n > 0) { out.write(buf, 0, n); n = in.read(buf) }
-      out.toByteArray
-    } finally in.close()
+    try in.readAllBytes() finally in.close()
   }
 
   /** Through [[ChunkStager.create]], as the staged chunks are: no

@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.PlanHash
+import graft.core.{Checkpoints, PlanHash}
 import graft.queries.Registry
 
 /** Pins the plan-fingerprint contract Bench relies on: the canonicalized
@@ -49,15 +49,14 @@ class PlanHashSpec extends SparkSpec {
     assert(PlanHash.of(a) != PlanHash.of(b))
   }
 
-  test("tracked checkpoints fold the truncated lineage into the hash") {
-    import spark.implicits._
+  test("a cached intermediate folds its lineage into the hash") {
     import org.apache.spark.sql.functions._
-    // two UPSTREAM plans that differ only above the checkpoint; the
-    // post-checkpoint tail (schema + tail ops) is identical — exactly
-    // the q147-vs-q214 shape the r19 verdict flagged. The base must
-    // not be a LocalRelation (ConvertToLocalRelation folds projections
-    // into the literal rows and both upstreams would plan as one bare
-    // LocalTableScan) — range() survives optimization.
+    // two UPSTREAM plans that differ only above the cache; the tail
+    // over the cached relation (schema + tail ops) is identical — the
+    // q147-vs-q214 shape. The base must not be a LocalRelation
+    // (ConvertToLocalRelation folds projections into the literal rows
+    // and both upstreams would plan as one bare LocalTableScan) —
+    // range() survives optimization.
     val base = spark.range(100).select(col("id").as("k"),
       concat(lit("v"), col("id")).as("v"))
     def tail(df: org.apache.spark.sql.DataFrame) =
@@ -66,18 +65,43 @@ class PlanHashSpec extends SparkSpec {
     val up2 = base.filter(col("k") > 0)
       .withColumn("v", concat(col("v"), lit("x")))
       .select("k", "v")
-    // raw localCheckpoint: both tails hash IDENTICALLY (the defect)
-    val raw1 = PlanHash.of(tail(up1.localCheckpoint(true)))
-    val raw2 = PlanHash.of(tail(up2.localCheckpoint(true)))
-    assert(raw1 == raw2, "raw checkpoint tails should be hash-blind")
-    // tracked checkpoint: the upstream difference distinguishes them,
-    // and an identical upstream reproduces the same hash
-    val t1 = PlanHash.of(tail(PlanHash.localCheckpointTracked(up1)))
-    val t2 = PlanHash.of(tail(PlanHash.localCheckpointTracked(up2)))
-    val t1b = PlanHash.of(tail(PlanHash.localCheckpointTracked(
-      base.filter(col("k") > 0))))
-    assert(t1 != t2, "tracked hash must see the upstream difference")
-    assert(t1 == t1b, "tracked hash must be stable across rebuilds")
-    assert(t1 != raw1, "tracked hash folds lineage the raw hash lacks")
+    try {
+      val h1 = PlanHash.of(tail(up1.cache()))
+      val h2 = PlanHash.of(tail(up2.cache()))
+      assert(h1 != h2, "the hash must see the difference above the cache")
+      // a rebuild of the same plan, while its cache is live and after
+      // the cache was released, hashes the same
+      val rebuild = () => PlanHash.of(tail(base.filter(col("k") > 0).cache()))
+      assert(rebuild() == h1, "cached plan hash must be stable across rebuilds")
+      Checkpoints.releaseAll(spark)
+      assert(rebuild() == h1, "hash must not depend on an earlier cache")
+    } finally Checkpoints.releaseAll(spark)
+  }
+
+  test("q144: changing the k-means input changes its hash") {
+    import org.apache.spark.sql.functions.col
+    import graft.queries.VectorOps.semDedup
+    val emb = graft.core.Tables.load(spark, dir, "embeddings")
+    try {
+      val h = PlanHash.of(semDedup(emb))
+      assert(PlanHash.of(semDedup(emb)) == h, "q144 rebuild moved its hash")
+      assert(PlanHash.of(semDedup(emb.filter(col("label") =!= 0))) != h,
+        "q144's hash is blind to its k-means input")
+    } finally Checkpoints.releaseAll(spark)
+  }
+
+  test("the multiply form of the eval split selects the ceil-division form's ids") {
+    // hashEvalPred tests x·n < 10·2^20 where the split was defined as
+    // x < ceil(10·2^20 / n), x = md5 hash mod 2^20
+    val a = 10L * 1048576L
+    val rng = new scala.util.Random(17)
+    val bad = (1L to 200000L).iterator.flatMap { n =>
+      val thr = (a + n - 1L) / n
+      (Seq(0L, 1L, 1048575L, thr - 1L, thr, thr + 1L) ++
+        Seq.fill(4)(rng.nextInt(1048576).toLong))
+        .filter(x => x >= 0L && x < 1048576L)
+        .filter(x => (x * n < a) != (x < thr)).map(n -> _)
+    }.take(5).toList
+    assert(bad.isEmpty, s"(n, x) where the forms disagree: $bad")
   }
 }

@@ -348,11 +348,10 @@ class PlanSpec extends SparkSpec with BeforeAndAfterEach {
     assert(!p.contains("CartesianProduct"),
       s"semdedup pair scan degenerated to a cartesian:\n$p")
     // the two Lloyd rounds (which broadcast the k-row centroid table)
-    // run inside the a2 localCheckpoint at build time, so the returned
-    // plan reads the assignment from the checkpoint boundary and the
-    // pair scan + final join sit above it
-    assert(p.contains("ExistingRDD"),
-      s"a2 checkpoint boundary missing (Lloyd rounds re-execute per consumer):\n$p")
+    // sit under the a2 cache, so the pair scan + final join read the
+    // assignment from one cached relation
+    assert(p.contains("InMemoryTableScan"),
+      s"a2 cache boundary missing (Lloyd rounds re-execute per consumer):\n$p")
   }
 
   test("q145: reprojection aggregates with map-side partials on the pixel key") {
