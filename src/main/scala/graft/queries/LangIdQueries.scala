@@ -119,7 +119,8 @@ object LangIdQueries {
       // fixed %199 form was vacuous at sf1)
       val sn = array(TextOps.unicodeSnippets.map(lit): _*)
       val raw = t(s, dir)("documents")
-      val ev = PipelineQueries.hashEvalPred(PipelineQueries.nDocuments(s, dir))
+      val ev = PipelineQueries.hashEvalPred(
+        PipelineQueries.nDocuments(s, dir))
       val suffixed = raw
         .select(col("doc_id"),
           when(ev, col("text"))

@@ -425,6 +425,9 @@ object PipelineQueries {
       val withCum = graft.operators.PrefixSum.runningSum(
         clean, Seq(col("quality").desc, col("doc_id").asc),
         col("n_tokens"), "cum_tokens")
+      // summed from `clean`, not from the running sum (same value): the
+      // running sum is a checkpoint, and this scan is what keeps the
+      // curation lineage in the final plan and so in its fingerprint
       val total = clean.agg(sum("n_tokens").as("total_tokens"))
       withCum.crossJoin(broadcast(total))
         .filter(col("cum_tokens") * 2 <= col("total_tokens"))
@@ -541,8 +544,12 @@ object PipelineQueries {
     * md5Hash64(doc_id·'_ev') % 2^20 < ceil(10·2^20 / n). For an
     * integer x, x < ceil(A / n) holds exactly when x·n < A, so the plan
     * tests x·n < 10·2^20 with n a scalar subquery over the documents
-    * table (the q162 `bloom.scalar()` pattern): no build-time job, no
-    * division, and x < 2^20 keeps the product a long for n < 2^43.
+    * table (the q162 `bloom.scalar()` pattern), and x < 2^20 keeps the
+    * product a long for n < 2^43. No driver-side count is kept: every
+    * physical plan that evaluates the predicate runs the count as its
+    * own subquery (ReuseSubquery shares it within one plan), so a
+    * curation build runs the count once in each cached plan that
+    * evaluates it.
     */
   def hashEvalPred(n: Column): Column =
     pmod(graft.operators.Dedup.md5Hash64(

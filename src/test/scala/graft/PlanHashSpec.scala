@@ -90,6 +90,20 @@ class PlanHashSpec extends SparkSpec {
     } finally Checkpoints.releaseAll(spark)
   }
 
+  test("the curation queries hash apart: their lineage reaches the final plan") {
+    // these differ only in how the corpus and the eval split are built,
+    // above the curation caches. PrefixSum's checkpoint cuts that lineage
+    // out of the running sum, so only the final plan's scan of the cached
+    // `clean` frame carries it into the fingerprint
+    val names = Seq("q147_corpus_curation", "q214_unicode_curation",
+      "q217_curation_predlang", "q224_curation_lmbucket")
+    val hs = names.map { n =>
+      try PlanHash.of(Registry.queries(n)(spark, dir))
+      finally Checkpoints.releaseAll(spark)
+    }
+    assert(hs.distinct.size == names.size, names.zip(hs).mkString(", "))
+  }
+
   test("the multiply form of the eval split selects the ceil-division form's ids") {
     // hashEvalPred tests x·n < 10·2^20 where the split was defined as
     // x < ceil(10·2^20 / n), x = md5 hash mod 2^20

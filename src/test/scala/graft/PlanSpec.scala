@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.execution.{FilterExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterEach
 
@@ -344,14 +345,24 @@ class PlanSpec extends SparkSpec with BeforeAndAfterEach {
   }
 
   test("q144: in-cluster dedup joins on the cluster key, never a cartesian") {
-    val p = plan("q144_semdedup")
+    object Plans extends AdaptiveSparkPlanHelper
+    val ep = Registry.queries("q144_semdedup")(spark, dir)
+      .queryExecution.executedPlan
+    val p = ep.toString
     assert(!p.contains("CartesianProduct"),
       s"semdedup pair scan degenerated to a cartesian:\n$p")
-    // the two Lloyd rounds (which broadcast the k-row centroid table)
-    // sit under the a2 cache, so the pair scan + final join read the
-    // assignment from one cached relation
-    assert(p.contains("InMemoryTableScan"),
+    // the two Lloyd rounds (each a cross join against the broadcast
+    // centroid table) run inside the a2 cache: the pair scan and the final
+    // join read a2 as a cached relation, and no centroid join is left in
+    // the query's own operators (the embedding cache `e` is scanned by
+    // the Lloyd rounds too, so a bare InMemoryTableScan proves nothing)
+    val cached = Plans.collect(ep) {
+      case m: InMemoryTableScanExec => m.relation.output.map(_.name)
+    }
+    assert(cached.contains(Seq("vec_id", "vq", "vv", "cl")),
       s"a2 cache boundary missing (Lloyd rounds re-execute per consumer):\n$p")
+    val lloyd = Plans.collect(ep) { case j: BroadcastNestedLoopJoinExec => j }
+    assert(lloyd.isEmpty, s"a Lloyd round runs outside the a2 cache:\n$p")
   }
 
   test("q145: reprojection aggregates with map-side partials on the pixel key") {
